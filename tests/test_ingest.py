@@ -233,20 +233,31 @@ def test_chunked_store_template_consistency(spark, tmp_path):
     assert clean.count() == original.count()  # stray row not in the store
 
 
-def test_default_decoder_detection(monkeypatch):
-    # container has no xarray → fake is the runtime default
-    assert H.default_decoder() == "fake"
-
-    # inject a stub xarray module: find_spec must see it and flip the
-    # default to the real branch (reference dispatch sinks.py:437-519)
+def test_default_decoder_detection(monkeypatch, tmp_path):
+    """A real file no magic-byte probe recognises: decode_auto raises
+    detect's ValueError without xarray, never invents fake rows; once
+    xarray is importable it goes to the xarray branch (reference
+    dispatch sinks.py:437-519)."""
     import importlib.machinery
     import sys
     import types
 
+    import pandas as pd
+    import pytest
+
+    stray = str(tmp_path / "notes.txt")
+    with open(stray, "w") as f:
+        f.write("not a weather file")
+    with pytest.raises(ValueError, match="unable to open dataset"):
+        H.decode_auto(stray, H.IngestOptions())
+
+    # inject a stub xarray module: find_spec must see it and route the
+    # unrecognised file to the real branch
     stub = types.ModuleType("xarray")
     stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
     monkeypatch.setitem(sys.modules, "xarray", stub)
-    assert H.default_decoder() == "xarray"
+    monkeypatch.setattr(H, "_xarray_decode", lambda path, opts: pd.DataFrame({"path": [path]}))
+    assert H.decode_auto(stray, H.IngestOptions())["path"].tolist() == [stray]
 
 
 def test_xarray_decode_real_branch(monkeypatch):
@@ -329,13 +340,14 @@ def test_auto_decoder_uses_fake_for_mem_uris_even_with_xarray(spark, monkeypatch
     route synthetic mem:// URIs to the real branch (they have no bytes
     to open) — the deterministic fake output must be preserved."""
     import importlib.machinery
+    import importlib.util
     import sys
     import types
 
     stub = types.ModuleType("xarray")
     stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
     monkeypatch.setitem(sys.modules, "xarray", stub)
-    assert H.default_decoder() == "xarray"
+    assert importlib.util.find_spec("xarray") is not None
 
     got = H.ingest(spark, ["mem://a.nc"]).collect()  # decoder defaults to 'auto'
     want = H.ingest(spark, ["mem://a.nc"], decoder="fake").collect()

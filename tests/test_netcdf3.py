@@ -86,7 +86,7 @@ def test_ingest_auto_detects_classic_netcdf(spark, tmp_path):
         {"time": times, "latitude": lats, "longitude": lons},
         {"d2m": d2m, "u10": u10, "v10": v10},
     )
-    assert H._is_classic_netcdf(path)
+    assert N3.is_netcdf3(path)
     out = H.ingest(spark, [path]).collect()
     assert len(out) == 18
     got = {(pd.Timestamp(r.time), r.latitude, r.longitude): r.d2m for r in out}
@@ -129,7 +129,7 @@ def test_partitioned_sink_one_file_per_day(spark, tmp_path):
 def test_rejects_non_netcdf(tmp_path):
     p = tmp_path / "junk.nc"
     p.write_bytes(b"\x89HDF\r\n\x1a\n" + b"\x00" * 64)  # HDF5 magic
-    assert not H._is_classic_netcdf(str(p))
+    assert not N3.is_netcdf3(str(p))
     with pytest.raises(ValueError):
         N3.read_netcdf3(str(p))
 
@@ -157,7 +157,7 @@ def test_cdf5_roundtrip_with_int64(tmp_path):
 
     # decode handles year-2100 timestamps; auto-detect routes CDF-5
     assert N3.list_variables(path) == ["d2m"]
-    assert H._is_classic_netcdf(path)
+    assert N3.is_netcdf3(path)
     pdf = N3.nc3_decode(path, None)
     assert str(pdf.time.min()) == "2100-01-01 00:00:00"
     assert len(pdf) == 4

@@ -188,7 +188,7 @@ def test_file_native_netcdf_split_and_distributed(spark, tmp_path):
     import numpy as np
 
     from weather_tools_spark.pipeline.splitter import (
-        split_grib_files_partitioned,
+        split_files_partitioned,
         split_netcdf_by_variable,
     )
     from weather_tools_spark.sources import grib2 as G2
@@ -212,5 +212,5 @@ def test_file_native_netcdf_split_and_distributed(spark, tmp_path):
     src2 = str(tmp_path / "m.grib2")
     G2.write_grib2(src2, [{"param": p, "ref_time": "2024-06-01", "lats": lats,
                            "lons": lons, "values": base} for p in ("d2m", "v10")])
-    n = split_grib_files_partitioned(spark, [src2], str(tmp_path / "split"))
+    n = split_files_partitioned(spark, [src2], str(tmp_path / "split"))
     assert n == 2

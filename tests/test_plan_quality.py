@@ -909,3 +909,73 @@ def test_explode_free_rewrites_stay_explode_free(spark, sf_dir):
     for j in ("SortMergeJoin", "BroadcastHashJoin"):
         assert j not in plan, j
     assert "Window" in plan
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_per_file_plans_one_roundrobin_exchange_one_mapinpandas(spark, tmp_path, monkeypatch):
+    """A GRIB glob read through open_dataset, ingest() and the GRIB
+    split all run the shared one-task-per-file plan (opener.map_files):
+    one round-robin Exchange feeding one MapInPandas."""
+    import numpy as np
+
+    from weather_tools_spark.pipeline import splitter
+    from weather_tools_spark.sources import grib2 as G2
+    from weather_tools_spark.sources import hypercube as H
+    from weather_tools_spark.sources import opener as OP
+
+    lats, lons = np.array([49.0, 48.75]), np.array([2.0, 2.25])
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"era5-{i}.grib2")
+        G2.write_grib2(p, [{"param": "d2m", "ref_time": f"2024-06-0{i + 1}", "lats": lats,
+                            "lons": lons, "values": np.full((2, 2), float(i))}])
+        paths.append(p)
+    frames = {
+        "open_dataset": OP.open_dataset(spark, str(tmp_path / "era5-*.grib2")),
+        "ingest": H.ingest(spark, paths),
+    }
+    real = OP.map_files
+    built = []
+    monkeypatch.setattr(OP, "map_files", lambda *a: built.append(real(*a)) or built[-1])
+    assert splitter.split_files_partitioned(spark, paths, str(tmp_path / "split")) == 3
+    frames["split"] = built[0]
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert plan.count("Exchange RoundRobinPartitioning") == 1, (name, plan)
+        assert plan.count("MapInPandas") == 1, (name, plan)
+
+
+def test_file_sinks_one_group_write(spark, tmp_path, monkeypatch):
+    """The NetCDF-3 and GRIB2 sinks run the shared bucket-write plan
+    (opener.write_buckets): one FlatMapGroupsInPandas, one file per
+    day / hourly slice."""
+    import os
+
+    from pyspark.sql.group import GroupedData
+
+    from weather_tools_spark.sources import grib2 as G2
+    from weather_tools_spark.sources import netcdf3 as N3
+
+    grid = spark.range(16).selectExpr(
+        "timestamp(concat('2024-03-0', cast(1 + id div 8 as string), ' ',"
+        " lpad(cast((id div 4) % 2 * 6 as string), 2, '0'), ':00:00')) AS time",
+        "50.0 - cast((id div 2) % 2 as double) AS latitude",
+        "8.0 + cast(id % 2 as double) AS longitude",
+        "cast(id as double) AS d2m",
+    )
+    real = GroupedData.applyInPandas
+    built = []
+    monkeypatch.setattr(
+        GroupedData, "applyInPandas",
+        lambda self, *a, **k: built.append(real(self, *a, **k)) or built[-1],
+    )
+    nc_dir, grib_dir = str(tmp_path / "nc"), str(tmp_path / "grib")
+    assert N3.write_netcdf3_partitioned(grid, nc_dir, ["d2m"]) == 2
+    assert G2.write_grib2_partitioned(grid, grib_dir, ["d2m"]) == 4
+    assert len(os.listdir(nc_dir)) == 2 and len(os.listdir(grib_dir)) == 4
+    assert len(built) == 2
+    for df in built:
+        assert _executed(df).count("FlatMapGroupsInPandas") == 1

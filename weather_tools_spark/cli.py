@@ -207,10 +207,7 @@ def cmd_mv(args: argparse.Namespace) -> int:
 
 
 def cmd_sp(args: argparse.Namespace) -> int:
-    from weather_tools_spark.pipeline.splitter import (
-        split_grib_files_partitioned,
-        split_netcdf_by_variable,
-    )
+    from weather_tools_spark.pipeline.splitter import SPLITTERS, split_files_partitioned
     from weather_tools_spark.sources.opener import detect
 
     spark = _spark("weather-sp")
@@ -218,19 +215,12 @@ def cmd_sp(args: argparse.Namespace) -> int:
     if not paths:
         print(f"no files match {args.input_pattern!r}", file=sys.stderr)
         return 2
-    kinds = {detect(p) for p in paths}
-    if kinds <= {"grib2", "grib1"}:
-        n = split_grib_files_partitioned(spark, paths, args.output_dir)
-        print(f"split {len(paths)} GRIB file(s) -> {n} output file(s) in {args.output_dir}")
-    elif kinds == {"netcdf3"}:
-        total = 0
-        for p in paths:
-            out = split_netcdf_by_variable(p, args.output_dir)
-            total += len(out)
-        print(f"split {len(paths)} NetCDF file(s) -> {total} output file(s) in {args.output_dir}")
-    else:
-        print(f"unsupported/mixed formats: {sorted(kinds)}", file=sys.stderr)
+    unsupported = {detect(p) for p in paths} - SPLITTERS.keys()
+    if unsupported:
+        print(f"unsupported formats: {sorted(unsupported)}", file=sys.stderr)
         return 2
+    n = split_files_partitioned(spark, paths, args.output_dir)
+    print(f"split {len(paths)} file(s) -> {n} output file(s) in {args.output_dir}")
     return 0
 
 

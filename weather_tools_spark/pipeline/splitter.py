@@ -66,7 +66,7 @@ def split_grib_by_param(path: str, out_dir: str, template: str = "{stem}_{param}
     touches only section headers (total length + PDS/param octets).
 
     Returns {param name: output path}. Designed to run one whole file
-    per executor task (see :func:`split_grib_files_partitioned`).
+    per executor task (see :func:`split_files_partitioned`).
     """
     import os
     import struct
@@ -137,21 +137,25 @@ def split_netcdf_by_variable(path: str, out_dir: str, template: str = "{stem}_{v
     return out
 
 
-def split_grib_files_partitioned(spark, paths: list[str], out_dir: str) -> int:
+# file-native splitter per detected format (sources/opener.detect)
+SPLITTERS = {
+    "grib2": split_grib_by_param,
+    "grib1": split_grib_by_param,
+    "netcdf3": split_netcdf_by_variable,
+}
+
+
+def split_files_partitioned(spark, paths: list[str], out_dir: str) -> int:
     """Distributed file-native splitter: whole input files are the unit
     of parallelism (the reference's one-file-per-worker shape); each
-    executor task splits its file byte-identically. Returns the number
-    of output files written."""
+    executor task splits its file with the :data:`SPLITTERS` entry of
+    its format. Returns the number of output files written."""
     import pandas as pd
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    )
+    from weather_tools_spark.sources.opener import detect, map_files
 
-    def run(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                outs = split_grib_by_param(p, out_dir)
-                yield pd.DataFrame({"src": [p] * len(outs), "out": list(outs.values())})
+    def run(p: str) -> pd.DataFrame:
+        outs = SPLITTERS[detect(p)](p, out_dir)
+        return pd.DataFrame({"src": [p] * len(outs), "out": list(outs.values())})
 
-    return files.mapInPandas(run, "src string, out string").count()
+    return map_files(spark, paths, run, "src string, out string").count()

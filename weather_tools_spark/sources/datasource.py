@@ -41,7 +41,6 @@ Spark-4 surface over the same byte-level codecs.
 
 from __future__ import annotations
 
-import glob as _glob
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -58,18 +57,11 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
+from pyspark.sql.types import StructType
+
+from .opener import FORMATS, detect, expand, long_schema
 
 _PUSHABLE_COLS = ("latitude", "longitude", "time")
-
-
-def _expand(path: str) -> list[str]:
-    uris = sorted(_glob.glob(path)) if any(ch in path for ch in "*?[") else [path]
-    if not uris:
-        raise ValueError(f"no files match {path!r}")
-    return uris
-
-
 _COORD_COLS = ("time", "latitude", "longitude")
 
 
@@ -89,30 +81,10 @@ def _decoder_for(
     (the reindex backfills NaN, same as an unprojected read)."""
     from types import SimpleNamespace
 
-    if kind == "netcdf3":
-        from .netcdf3 import list_variables, nc3_decode
-
-        decode, available = nc3_decode, sorted(list_variables(first))
-    elif kind == "netcdf4":
-        from .hdf5 import list_variables_h5, nc4_decode
-
-        decode, available = nc4_decode, list_variables_h5(first)
-    elif kind == "grib2":
-        from .grib2 import grib2_decode, list_params
-
-        decode, available = grib2_decode, sorted(set(list_params(first)))
-    elif kind == "grib1":
-        from .grib1 import grib1_decode, list_params1
-
-        decode, available = grib1_decode, sorted(set(list_params1(first)))
-    elif kind == "geotiff":
-        from .geotiff import gtiff_decode
-
-        # single-band value column — nothing variable-level to prune
-        return (lambda p: gtiff_decode(p)), ["latitude", "longitude", "value"]
-    else:
+    fmt = FORMATS.get(kind)
+    if fmt is None:
         raise ValueError(f"format {kind!r} has no single-file decoder (zarr: use open_dataset)")
-
+    available = sorted(set(fmt.variables(first)))
     if variables is not None:
         unknown = sorted(set(variables) - set(available))
         if unknown and strict:
@@ -121,7 +93,7 @@ def _decoder_for(
         opts = SimpleNamespace(variables=list(available))
     else:
         opts = None
-    return (lambda p: decode(p, opts)), list(_COORD_COLS) + available
+    return (lambda p: fmt.decode(p, opts)), list(fmt.coords) + available
 
 
 class _FilePartition(InputPartition):
@@ -168,17 +140,8 @@ class WeatherReader(DataSourceReader):
         # projection pushdown: decode exactly the data variables in this
         # reader's schema — a schema narrowed by .option("columns", ...)
         # means the pruned variables never decode in-task
-        # decode every non-coordinate column in the (possibly narrowed)
-        # schema — including a data variable literally named "value";
-        # only the geotiff branch (which has no named variables) passes
-        # None below
         variables = [c for c in self._columns if c not in _COORD_COLS]
-        decode_one, cols = _decoder_for(
-            self._kind,
-            partition.path,
-            variables if self._kind != "geotiff" else None,
-            strict=False,
-        )
+        decode_one, _ = _decoder_for(self._kind, partition.path, variables, strict=False)
         pdf = decode_one(partition.path).reindex(columns=self._columns)
         for col, op, val in self._ranges:
             if col == "time":
@@ -215,13 +178,11 @@ class WeatherDataSource(DataSource):
     def name(cls) -> str:
         return "weather"
 
-    def schema(self) -> StructType:
-        from .opener import detect
-
+    def schema(self) -> str:
         path = self.options.get("path")
         if not path:
             raise ValueError('format("weather") needs .load(path)')
-        uris = _expand(path)
+        uris = expand(path)
         kind = detect(uris[0])
         requested = self.options.get("columns")
         variables = (
@@ -230,17 +191,10 @@ class WeatherDataSource(DataSource):
             else None
         )
         _, cols = _decoder_for(kind, uris[0], variables)
-        return StructType(
-            [
-                StructField(c, TimestampType() if c == "time" else DoubleType())
-                for c in cols
-            ]
-        )
+        return long_schema(cols)
 
     def reader(self, schema: StructType) -> WeatherReader:
-        from .opener import detect
-
-        uris = _expand(self.options["path"])
+        uris = expand(self.options["path"])
         kinds = {detect(u) for u in uris}
         if len(kinds) > 1:
             raise ValueError(f"mixed formats: {sorted(kinds)}")
@@ -274,11 +228,14 @@ class _WroteFiles(WriterCommitMessage):
 class WeatherWriter(DataSourceWriter):
     """Each Spark write task serializes its rows as whole GRIB2 files —
     one multi-message file per time slice seen in the partition (the
-    ``write_grib2_partitioned`` layout, WMO sections + simple packing).
-    Repartition by a time bucket upstream for exactly one file per
-    slice; unrepartitioned input still round-trips (multiple files per
-    slice, unique task-tagged names). ``commit`` writes a _MANIFEST
-    json listing every committed file — the all-or-nothing marker."""
+    ``write_grib2_partitioned`` layout, WMO sections + simple packing),
+    gridded on the lat/lon values the task holds for that slice; a cell
+    absent there is written as missing (bitmap). Input must be
+    repartitioned by time slice to get one file per slice: otherwise
+    every task holding rows of a slice writes its own task-tagged file,
+    and each file carries missing cells where other tasks hold the
+    values. ``commit`` writes a _MANIFEST json listing every committed
+    file — the all-or-nothing marker."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         self._dir = options.get("path")
@@ -300,10 +257,9 @@ class WeatherWriter(DataSourceWriter):
         import os
         import uuid
 
-        import numpy as np
         import pandas as pd
 
-        from .grib2 import write_grib2
+        from .grib2 import grib_messages, write_grib2
 
         rows = list(iterator)
         if not rows:
@@ -312,21 +268,10 @@ class WeatherWriter(DataSourceWriter):
         tag = uuid.uuid4().hex[:8]
         out: list[str] = []
         for ts, g in pdf.groupby(pdf["time"].astype("datetime64[us]")):
-            lats = np.sort(g["latitude"].unique())[::-1]
-            lons = np.sort(g["longitude"].unique())
-            ila = g["latitude"].map({v: i for i, v in enumerate(lats)}).to_numpy()
-            ilo = g["longitude"].map({v: i for i, v in enumerate(lons)}).to_numpy()
-            messages = []
-            for v in self._vars:
-                grid = np.zeros((len(lats), len(lons)))
-                grid[ila, ilo] = g[v].to_numpy(dtype="f8")
-                messages.append(
-                    {"param": v, "ref_time": ts, "lats": lats, "lons": lons, "values": grid}
-                )
             path = os.path.join(
                 self._dir, f"{pd.Timestamp(ts).strftime('%Y-%m-%dT%H%M')}-{tag}.grib2"
             )
-            write_grib2(path, messages)
+            write_grib2(path, grib_messages(g, self._vars))
             out.append(path)
         return _WroteFiles(out)
 
@@ -370,7 +315,7 @@ class WeatherStreamReader(SimpleDataSourceStreamReader):
 
     def _current(self) -> list[str]:
         try:
-            return _expand(self._path)
+            return expand(self._path)
         except ValueError:  # nothing yet — an empty directory is a valid stream start
             return []
 
@@ -380,19 +325,10 @@ class WeatherStreamReader(SimpleDataSourceStreamReader):
     def _decode_files(self, files: list[str]) -> list[tuple]:
         # a concrete list, not a generator: Spark's prefetching offset
         # cache copies (and may pickle) the returned iterator
-        from .opener import detect
-
-        # decode every non-coordinate column in the (possibly narrowed)
-        # schema — including a data variable literally named "value";
-        # only the geotiff branch (which has no named variables) passes
-        # None below
         variables = [c for c in self._columns if c not in _COORD_COLS]
         rows: list[tuple] = []
         for p in files:
-            kind = detect(p)
-            decode_one, _ = _decoder_for(
-                kind, p, variables if kind != "geotiff" else None, strict=False
-            )
+            decode_one, _ = _decoder_for(detect(p), p, variables, strict=False)
             pdf = decode_one(p).reindex(columns=self._columns)
             if "time" in pdf.columns:
                 # Spark's tuple converter localizes timestamps — hand it

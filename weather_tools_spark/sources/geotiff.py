@@ -369,30 +369,16 @@ def write_geotiff_partitioned(
     its slice and serializes one whole GeoTIFF (the COG-style whole-file
     unit of parallel output). Cells absent from the input stay NaN.
     Returns the number of rasters written."""
-    from pyspark.sql import functions as F
+    from .opener import grid_cubes, write_buckets
 
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_slice(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (ts,) = key
-        lats = np.sort(pdf["latitude"].unique())[::-1]  # north-up
-        lons = np.sort(pdf["longitude"].unique())
-        lai = {v: i for i, v in enumerate(lats)}
-        loi = {v: i for i, v in enumerate(lons)}
-        grid = np.full((len(lats), len(lons)), np.nan)
-        grid[pdf["latitude"].map(lai), pdf["longitude"].map(loi)] = pdf[
-            value_col
-        ].to_numpy(dtype="f8")
+    def write_slice(ts: str, pdf: pd.DataFrame) -> None:
+        # one single-band raster per slice: every row lands on one layer
+        _, lats, lons, cubes = grid_cubes(pdf.assign(time=pdf["time"].iloc[0]), [value_col])
         sx = float(lons[1] - lons[0]) if len(lons) > 1 else 1.0
         sy = float(lats[0] - lats[1]) if len(lats) > 1 else 1.0
-        path = os.path.join(out_dir, f"{ts}.tif")
-        write_geotiff(path, grid, (float(lons[0]), float(lats[0])), (sx, sy), compression)
-        return pd.DataFrame({"slice": [str(ts)], "path": [path], "n_rows": [len(pdf)]})
+        write_geotiff(
+            os.path.join(out_dir, f"{ts}.tif"), cubes[value_col][0],
+            (float(lons[0]), float(lats[0])), (sx, sy), compression,
+        )
 
-    done = (
-        rows.withColumn("_slice", F.date_format("time", "yyyy-MM-dd'T'HH"))
-        .groupBy("_slice")
-        .applyInPandas(write_slice, "slice string, path string, n_rows long")
-        .count()
-    )
-    return int(done)
+    return write_buckets(rows, out_dir, "yyyy-MM-dd'T'HH", write_slice)

@@ -458,35 +458,14 @@ def write_grib1_partitioned(
     rows, out_dir: str, variables: list[str], decimal_scale: int = 3
 ) -> int:
     """Distributed GRIB1 sink: one whole multi-message file per time
-    slice per executor task (one message per variable)."""
-    from pyspark.sql import functions as F
+    slice per executor task (one message per variable and time); cells
+    absent from the input are written as missing through the BMS."""
+    from .grib2 import grib_messages
+    from .opener import write_buckets
 
-    os.makedirs(out_dir, exist_ok=True)
+    def write_slice(ts: str, pdf: pd.DataFrame) -> None:
+        write_grib1(
+            os.path.join(out_dir, f"{ts}.grib"), grib_messages(pdf, variables), decimal_scale
+        )
 
-    def write_slice(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (ts,) = key
-        lats = np.sort(pdf["latitude"].unique())[::-1]
-        lons = np.sort(pdf["longitude"].unique())
-        lai = {v: i for i, v in enumerate(lats)}
-        loi = {v: i for i, v in enumerate(lons)}
-        ila = pdf["latitude"].map(lai).to_numpy()
-        ilo = pdf["longitude"].map(loi).to_numpy()
-        t0 = pdf["time"].iloc[0]
-        messages = []
-        for v in variables:
-            grid = np.zeros((len(lats), len(lons)))
-            grid[ila, ilo] = pdf[v].to_numpy(dtype="f8")
-            messages.append(
-                {"param": v, "ref_time": t0, "lats": lats, "lons": lons, "values": grid}
-            )
-        path = os.path.join(out_dir, f"{ts}.grib")
-        write_grib1(path, messages, decimal_scale)
-        return pd.DataFrame({"slice": [str(ts)], "path": [path], "n_rows": [len(pdf)]})
-
-    done = (
-        rows.withColumn("_slice", F.date_format("time", "yyyy-MM-dd'T'HH"))
-        .groupBy("_slice")
-        .applyInPandas(write_slice, "slice string, path string, n_rows long")
-        .count()
-    )
-    return int(done)
+    return write_buckets(rows, out_dir, "yyyy-MM-dd'T'HH", write_slice)

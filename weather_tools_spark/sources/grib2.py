@@ -36,11 +36,12 @@ implements that profile directly:
   non-matching messages are skipped by section length without
   unpacking section 7;
 - :func:`grib2_decode` — file → long-format rows for the hypercube
-  ingest (``DECODERS["grib2"]``), with the standard WMO parameter
-  table for the engine's variables: 2-metre dewpoint d2m=(0,0,6),
-  10-metre winds u10=(0,2,2) / v10=(0,2,3);
+  ingest (``FORMATS["grib2"]`` in sources/opener.py), with the
+  standard WMO parameter table for the engine's variables: 2-metre
+  dewpoint d2m=(0,0,6), 10-metre winds u10=(0,2,2) / v10=(0,2,3);
 - :func:`write_grib2_partitioned` — distributed sink: one whole
-  multi-message GRIB file per time slice per executor task.
+  multi-message GRIB file per time slice per executor task; cells
+  absent from the input are written as missing (bitmap), never 0.
 
 GRIB1 (edition byte 1) decodes via the sibling stdlib codec
 sources/grib1.py (the reference's edition fallback); non-simple
@@ -1144,39 +1145,31 @@ def grib2_decode(path: str, opts=None) -> pd.DataFrame:
     return out.reset_index(drop=True)
 
 
+def grib_messages(pdf: pd.DataFrame, variables: list[str]) -> list[dict]:
+    """Long-format rows → :func:`write_grib2` / ``write_grib1`` message
+    dicts: one message per (time, variable) on the rows' lat/lon grid.
+    A cell absent from the rows is NaN, which the writers encode as
+    missing through the bitmap."""
+    from .opener import grid_cubes
+
+    times, lats, lons, cubes = grid_cubes(pdf, variables)
+    return [
+        {"param": v, "ref_time": t, "lats": lats, "lons": lons, "values": cubes[v][i]}
+        for i, t in enumerate(times)
+        for v in variables
+    ]
+
+
 def write_grib2_partitioned(
     rows, out_dir: str, variables: list[str], decimal_scale: int = 3
 ) -> int:
     """Distributed GRIB2 sink: one whole multi-message file per time
-    slice per executor task (one message per variable)."""
-    from pyspark.sql import functions as F
+    slice per executor task (one message per variable and time)."""
+    from .opener import write_buckets
 
-    os.makedirs(out_dir, exist_ok=True)
+    def write_slice(ts: str, pdf: pd.DataFrame) -> None:
+        write_grib2(
+            os.path.join(out_dir, f"{ts}.grib2"), grib_messages(pdf, variables), decimal_scale
+        )
 
-    def write_slice(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (ts,) = key
-        lats = np.sort(pdf["latitude"].unique())[::-1]
-        lons = np.sort(pdf["longitude"].unique())
-        lai = {v: i for i, v in enumerate(lats)}
-        loi = {v: i for i, v in enumerate(lons)}
-        ila = pdf["latitude"].map(lai).to_numpy()
-        ilo = pdf["longitude"].map(loi).to_numpy()
-        t0 = pdf["time"].iloc[0]
-        messages = []
-        for v in variables:
-            grid = np.zeros((len(lats), len(lons)))
-            grid[ila, ilo] = pdf[v].to_numpy(dtype="f8")
-            messages.append(
-                {"param": v, "ref_time": t0, "lats": lats, "lons": lons, "values": grid}
-            )
-        path = os.path.join(out_dir, f"{ts}.grib2")
-        write_grib2(path, messages, decimal_scale)
-        return pd.DataFrame({"slice": [str(ts)], "path": [path], "n_rows": [len(pdf)]})
-
-    done = (
-        rows.withColumn("_slice", F.date_format("time", "yyyy-MM-dd'T'HH"))
-        .groupBy("_slice")
-        .applyInPandas(write_slice, "slice string, path string, n_rows long")
-        .count()
-    )
-    return int(done)
+    return write_buckets(rows, out_dir, "yyyy-MM-dd'T'HH", write_slice)

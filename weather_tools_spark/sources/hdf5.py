@@ -29,8 +29,8 @@ as the classic codec (sources/netcdf3.py): coordinate variables are
 1-D datasets named ``time``/``latitude``/``longitude`` (time carries
 the epoch ``units`` attribute), data variables are float hypercubes
 over those axes. :func:`nc4_decode` is the hypercube-ingest decoder
-(``DECODERS["netcdf4"]``); :func:`write_netcdf4_partitioned` is the
-distributed file-per-day sink.
+behind ``FORMATS["netcdf4"]`` in sources/opener.py;
+:func:`write_netcdf4_partitioned` is the distributed file-per-day sink.
 """
 
 from __future__ import annotations
@@ -1070,29 +1070,12 @@ def write_netcdf4_partitioned(
     """Distributed NetCDF-4 sink: file-per-day, one whole ``.nc4``
     (HDF5) file serialized per executor task — same parallel shape as
     the classic sink (netcdf3.write_netcdf3_partitioned)."""
-    from pyspark.sql import functions as F
+    from .opener import grid_cubes, write_buckets
 
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_day(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (day,) = key
-        times = np.sort(pdf["time"].unique())
-        lats = np.sort(pdf["latitude"].unique())[::-1]
-        lons = np.sort(pdf["longitude"].unique())
-        ti = {v: i for i, v in enumerate(times)}
-        lai = {v: i for i, v in enumerate(lats)}
-        loi = {v: i for i, v in enumerate(lons)}
-        it = pdf["time"].map(ti).to_numpy()
-        ila = pdf["latitude"].map(lai).to_numpy()
-        ilo = pdf["longitude"].map(loi).to_numpy()
-        cubes = {}
-        for v in variables:
-            cube = np.full((len(times), len(lats), len(lons)), np.nan)
-            cube[it, ila, ilo] = pdf[v].to_numpy(dtype="f8")
-            cubes[v] = cube
-        path = os.path.join(out_dir, f"{day}.nc4")
+    def write_day(day: str, pdf: pd.DataFrame) -> None:
+        times, lats, lons, cubes = grid_cubes(pdf, variables)
         write_netcdf4(
-            path,
+            os.path.join(out_dir, f"{day}.nc4"),
             {
                 "time": times.astype("datetime64[s]").astype("int64"),
                 "latitude": lats.astype("f8"),
@@ -1101,12 +1084,5 @@ def write_netcdf4_partitioned(
             cubes,
             compression=compression,
         )
-        return pd.DataFrame({"day": [str(day)], "path": [path], "n_rows": [len(pdf)]})
 
-    done = (
-        rows.withColumn("_day", F.date_format("time", "yyyy-MM-dd"))
-        .groupBy("_day")
-        .applyInPandas(write_day, "day string, path string, n_rows long")
-        .count()
-    )
-    return int(done)
+    return write_buckets(rows, out_dir, "yyyy-MM-dd", write_day)

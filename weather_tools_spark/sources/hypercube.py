@@ -2,7 +2,8 @@
 
 Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
 - engine-dispatch file open (zarr/tif/netcdf/grib with edition fallback,
-  sinks.py:437-519) → ``DECODERS`` registry keyed by extension;
+  sinks.py:437-519) → ``decode_auto``: ``opener.detect`` by magic
+  bytes, then the codec of the ``opener.FORMATS`` entry;
 - variable projection incl. normalized-name prefix/suffix matching
   (util.py:159-191) → ``select_variables``;
 - GRIB schema normalization to ``<level>_<height>_<stepType>_<var>``
@@ -19,15 +20,16 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
   (bq.py:49-54, 377-379) → ``with_system_columns``.
 
 Spark plan shape: paths-DF → repartition(paths) → mapInPandas(decode)
-→ [filters] → join(broadcast(geo)) → sink. One file (or one zarr
-chunk) per task; no shuffle until an explicit sink/agg asks for one.
+(``opener.map_files``) → [filters] → join(broadcast(geo)) → sink. One
+file (or one zarr chunk) per task; no shuffle until an explicit
+sink/agg asks for one.
 """
 
 from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -36,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from weather_tools_spark.functions.geo import build_geo_lookup
+
+from .opener import FORMATS, detect, map_files
 
 # Canonical coordinate column set (mirrors the reference's
 # frozenset(('latitude','time','step','valid_time','longitude','number')),
@@ -154,7 +158,7 @@ def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
     """Library-backed decoder: xarray engine-dispatch (zarr → rasterio
     → netcdf → cfgrib-with-edition-fallback; the reference's
     weather_mv/loader_pipeline/sinks.py:437-519). Engine selection is
-    by magic bytes / store layout, mirroring ``decode_auto``; GRIB
+    by store layout / extension and ``opener.detect``; GRIB
     retries edition 1 the way the reference retries cfgrib with
     ``{'edition': 1}``. Gates with NotImplementedError when xarray is
     absent (this container); when the libraries ARE present,
@@ -169,14 +173,15 @@ def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
         ) from e
     import os as _os
 
-    from .grib1 import is_grib1
-    from .grib2 import is_grib2
-
+    try:
+        kind = detect(path)
+    except ValueError:
+        kind = None  # no stdlib format: xarray picks the engine
     if _os.path.isdir(path) or path.rstrip("/").endswith(".zarr"):
         ds = xr.open_zarr(path)
-    elif path.endswith((".tif", ".tiff")):
+    elif kind == "geotiff" or path.endswith((".tif", ".tiff")):
         ds = xr.open_dataset(path, engine="rasterio")
-    elif is_grib2(path) or is_grib1(path):
+    elif kind in ("grib2", "grib1"):
         try:
             ds = xr.open_dataset(path, engine="cfgrib")
         except Exception:
@@ -204,104 +209,33 @@ def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
     return pdf[order + sorted(rest)]
 
 
-def _nc3_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """Classic NetCDF (CDF-1/2) decode, stdlib-only — no xarray needed
-    for the classic format (sources/netcdf3.py). NetCDF-4/HDF5 files
-    still require the xarray branch."""
-    from .netcdf3 import nc3_decode
+def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
+    """Per-URI dispatch (the reference's engine-dispatch open,
+    sinks.py:437-519): synthetic mem:// URIs always decode with the
+    deterministic fake (they have no on-disk bytes for a real library
+    to open); anything ``opener.detect`` recognises decodes with its
+    stdlib codec; the rest (a zarr store, a file no probe recognises)
+    goes to the xarray branch when xarray is importable, else raises
+    ``detect``'s ValueError."""
+    import importlib.util
 
-    return nc3_decode(path, opts)
-
-
-def _grib2_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """GRIB2 decode, stdlib-only — simple-packing profile with message
-    filter pushdown (sources/grib2.py)."""
-    from .grib2 import grib2_decode
-
-    return grib2_decode(path, opts)
-
-
-def _grib1_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """GRIB edition-1 decode, stdlib-only (sources/grib1.py) — the
-    reference's edition fallback (sinks.py:370-389, cfgrib retry with
-    ``{'edition': 1}``) realized as a second stdlib codec instead of a
-    gate."""
-    from .grib1 import grib1_decode
-
-    return grib1_decode(path, opts)
-
-
-def _nc4_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """NetCDF-4/HDF5 decode, stdlib-only subset (sources/hdf5.py):
-    superblock v0-v3, v1/v2 object headers, contiguous + chunked
-    B-tree layouts, shuffle+deflate filters. Unsupported HDF5
-    structures raise toward the xarray branch."""
-    from .hdf5 import nc4_decode
-
-    return nc4_decode(path, opts)
+    if uri.startswith("mem://"):
+        return _fake_grid_decode(uri, opts)
+    try:
+        fmt = FORMATS.get(detect(uri))
+    except ValueError:
+        if importlib.util.find_spec("xarray") is None:
+            raise
+        fmt = None
+    return (fmt.decode if fmt is not None else _xarray_decode)(uri, opts)
 
 
 DECODERS: dict[str, DecoderFn] = {
     "fake": _fake_grid_decode,
     "xarray": _xarray_decode,
-    "netcdf3": _nc3_decode,
-    "netcdf4": _nc4_decode,
-    "grib2": _grib2_decode,
-    "grib1": _grib1_decode,
+    **{kind: fmt.decode for kind, fmt in FORMATS.items()},
 }
 
-
-def _is_classic_netcdf(path: str) -> bool:
-    """Magic-byte probe: classic NetCDF starts 'CDF\\x01'/'CDF\\x02'/
-    'CDF\\x05' (CDF-5, 64-bit data). NetCDF-4/HDF5 starts '\\x89HDF'
-    and routes to the stdlib HDF5 subset codec (sources/hdf5.py)."""
-    import os
-
-    try:
-        if not os.path.isfile(path):
-            return False
-        with open(path, "rb") as f:
-            return f.read(4) in (b"CDF\x01", b"CDF\x02", b"CDF\x05")
-    except OSError:
-        return False
-
-
-def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
-    """Per-URI magic-byte dispatch (the reference's engine-dispatch
-    open, sinks.py:437-519): synthetic mem:// URIs always decode with
-    the deterministic fake (they have no on-disk bytes for a real
-    library to open); classic NetCDF ('CDF'), HDF5 ('\\x89HDF'), and
-    GRIB (edition byte) route to their stdlib codecs; everything else
-    gets the probed decoder — so the suite stays green on
-    xarray-equipped clusters while real files still decode."""
-    from .grib1 import is_grib1
-    from .grib2 import is_grib2
-    from .hdf5 import is_hdf5
-
-    if uri.startswith("mem://"):
-        name = "fake"
-    elif _is_classic_netcdf(uri):
-        name = "netcdf3"
-    elif is_hdf5(uri):
-        name = "netcdf4"
-    elif is_grib2(uri):
-        name = "grib2"
-    elif is_grib1(uri):
-        name = "grib1"  # the reference's edition fallback
-    else:
-        name = default_decoder()
-    return DECODERS[name](uri, opts)
-
-
-def default_decoder() -> str:
-    """Runtime decoder detection (reference dispatch: sinks.py:437-519):
-    the real xarray branch activates automatically on any cluster where
-    the decode stack is installed; this container lacks it, so the
-    deterministic fake stays the default. Probed per call (cheap — a
-    finder scan, no import) so tests can inject a stub module."""
-    import importlib.util
-
-    return "xarray" if importlib.util.find_spec("xarray") is not None else "fake"
 
 ROW_SCHEMA = T.StructType(
     [
@@ -332,39 +266,30 @@ def ingest(
     same plan applies with thousands of files per job.
     """
     opts = opts or IngestOptions()
-    if decoder == "auto":
-        decode = decode_auto
-    else:
-        decode = DECODERS[decoder]
-    paths = spark.createDataFrame([(u,) for u in uris], "data_uri string").repartition(
-        max(1, min(len(uris), spark.sparkContext.defaultParallelism))
-    )
-
+    decode = decode_auto if decoder == "auto" else DECODERS[decoder]
     data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for uri in pdf["data_uri"]:
-                rows = decode(uri, opts)
-                if opts.area is not None:
-                    n, w, s, e = opts.area
-                    rows = rows[
-                        (rows["latitude"] <= n)
-                        & (rows["latitude"] >= s)
-                        & (rows["longitude"] >= w)
-                        & (rows["longitude"] <= e)
-                    ]
-                if opts.start_time is not None:
-                    rows = rows[rows["time"] >= pd.Timestamp(opts.start_time)]
-                if opts.end_time is not None:
-                    rows = rows[rows["time"] < pd.Timestamp(opts.end_time)]
-                out = rows.reindex(columns=data_cols)
-                out["data_uri"] = uri
-                out["data_first_step"] = rows["time"].min() if len(rows) else pd.NaT
-                yield out
+    def run(uri: str) -> pd.DataFrame:
+        rows = decode(uri, opts)
+        if opts.area is not None:
+            n, w, s, e = opts.area
+            rows = rows[
+                (rows["latitude"] <= n)
+                & (rows["latitude"] >= s)
+                & (rows["longitude"] >= w)
+                & (rows["longitude"] <= e)
+            ]
+        has_time = "time" in rows.columns  # a GeoTIFF has no time axis
+        if has_time and opts.start_time is not None:
+            rows = rows[rows["time"] >= pd.Timestamp(opts.start_time)]
+        if has_time and opts.end_time is not None:
+            rows = rows[rows["time"] < pd.Timestamp(opts.end_time)]
+        out = rows.reindex(columns=data_cols)
+        out["data_uri"] = uri
+        out["data_first_step"] = rows["time"].min() if has_time and len(rows) else pd.NaT
+        return out
 
-    df = paths.mapInPandas(run, schema=schema)
-    return select_variables(df, opts.variables)
+    return select_variables(map_files(spark, uris, run, schema), opts.variables)
 
 
 def with_system_columns(df: DataFrame, import_time: str | None = None) -> DataFrame:

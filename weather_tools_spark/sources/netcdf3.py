@@ -17,9 +17,9 @@ file offsets. This module implements that layout directly:
   bytes readable by any NetCDF tool;
 - :func:`read_netcdf3` — parse the header and decode variables with
   ``np.frombuffer``;
-- :func:`nc3_decode` — the hypercube-ingest decoder
-  (``DECODERS["netcdf3"]`` in sources/hypercube.py): file → long-format
-  rows, same output contract as the xarray branch.
+- :func:`is_netcdf3` — the magic-byte probe and :func:`nc3_decode` —
+  the decoder behind ``FORMATS["netcdf3"]`` in sources/opener.py: file
+  → long-format rows, same output contract as the xarray branch.
 
 Scope: fixed-size AND record (unlimited-dimension) variables — the
 interleaved record layout growable-time exports use — over the six
@@ -229,6 +229,19 @@ def _read_atts(buf: bytes, p: int, version: int) -> tuple[dict, int]:
     return atts, p
 
 
+def is_netcdf3(path: str) -> bool:
+    """Magic-byte probe: classic NetCDF starts 'CDF\\x01'/'CDF\\x02'/
+    'CDF\\x05' (CDF-5, 64-bit data). NetCDF-4/HDF5 starts '\\x89HDF'
+    and is the stdlib HDF5 subset codec's (sources/hdf5.py)."""
+    try:
+        if not os.path.isfile(path):
+            return False
+        with open(path, "rb") as f:
+            return f.read(4) in _MAGICS
+    except OSError:
+        return False
+
+
 def list_variables(path: str) -> list[str]:
     """Data-variable names from the header alone — a metadata probe
     (footer-read analog): reads a bounded prefix, doubling on a
@@ -391,7 +404,7 @@ def _cf_unpack(arr: np.ndarray, atts: dict) -> np.ndarray:
 
 def nc3_decode(path: str, opts) -> pd.DataFrame:
     """Hypercube-ingest decoder over classic NetCDF bytes — the
-    ``DECODERS["netcdf3"]`` branch (same output contract as the xarray
+    ``FORMATS["netcdf3"]`` decoder (same output contract as the xarray
     branch: long-format time/latitude/longitude + variable columns).
     Time decoded from the CF ``units`` epoch attribute (any
     "<unit> since <epoch>" spelling); packed variables unpacked via
@@ -438,30 +451,14 @@ def write_netcdf3_partitioned(rows, out_dir: str, variables: list[str]) -> int:
     (time, latitude, longitude, <variables...>) by calendar day and
     have each task serialize one whole ``.nc`` file — whole files are
     the parallel unit, exactly like the reference's splitter sink.
-    Returns the number of files written."""
-    from pyspark.sql import functions as F
+    Cells absent from the input stay NaN. Returns the number of files
+    written."""
+    from .opener import grid_cubes, write_buckets
 
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_day(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (day,) = key
-        times = np.sort(pdf["time"].unique())
-        lats = np.sort(pdf["latitude"].unique())[::-1]  # descending (ERA5 convention)
-        lons = np.sort(pdf["longitude"].unique())
-        ti = {v: i for i, v in enumerate(times)}
-        lai = {v: i for i, v in enumerate(lats)}
-        loi = {v: i for i, v in enumerate(lons)}
-        it = pdf["time"].map(ti).to_numpy()
-        ila = pdf["latitude"].map(lai).to_numpy()
-        ilo = pdf["longitude"].map(loi).to_numpy()
-        cubes = {}
-        for v in variables:
-            cube = np.full((len(times), len(lats), len(lons)), np.nan)
-            cube[it, ila, ilo] = pdf[v].to_numpy(dtype="f8")
-            cubes[v] = cube
-        path = os.path.join(out_dir, f"{day}.nc")
+    def write_day(day: str, pdf: pd.DataFrame) -> None:
+        times, lats, lons, cubes = grid_cubes(pdf, variables)
         write_netcdf3(
-            path,
+            os.path.join(out_dir, f"{day}.nc"),
             {
                 "time": (times.astype("datetime64[s]").astype("int64")).astype(">i4"),
                 "latitude": lats.astype("f8"),
@@ -469,12 +466,5 @@ def write_netcdf3_partitioned(rows, out_dir: str, variables: list[str]) -> int:
             },
             cubes,
         )
-        return pd.DataFrame({"day": [str(day)], "path": [path], "n_rows": [len(pdf)]})
 
-    done = (
-        rows.withColumn("_day", F.date_format("time", "yyyy-MM-dd"))
-        .groupBy("_day")
-        .applyInPandas(write_day, "day string, path string, n_rows long")
-        .count()
-    )
-    return int(done)
+    return write_buckets(rows, out_dir, "yyyy-MM-dd", write_day)

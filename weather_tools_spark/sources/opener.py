@@ -3,49 +3,88 @@
 dispatches a URI to ``xr.open_zarr`` / engine-mapped ``open_dataset``
 and feeds the xql query layer).
 
-Dispatch is by store layout and magic bytes, all against the stdlib
-codecs (no xarray/cfgrib/rasterio):
+This module is the one place that knows which codec reads a weather
+format. :func:`detect` classifies a URI by store layout and magic bytes,
+all against the stdlib codecs (no xarray/cfgrib/rasterio):
 
-- Zarr v2 store (directory with ``.zmetadata``/array dirs, or
+- Zarr v2/v3 store (directory with ``.zmetadata``/``zarr.json``, or
   ``*.zarr``)  → chunk-manifest scan with range PRUNING + ``zarr2``
   decode (sources/zarr_scan.py + zarr_v2.py);
-- classic NetCDF (``CDF\\x01/\\x02``)   → sources/netcdf3.py;
-- NetCDF-4/HDF5 (``\\x89HDF\\r\\n\\x1a\\n``) → sources/hdf5.py (stdlib
-  HDF5 subset: symbol-table groups, contiguous/chunked B-tree
-  layouts, shuffle+deflate);
-- GRIB2 (``GRIB``+edition 2)           → sources/grib2.py;
-- GRIB1 (``GRIB``+edition 1)           → sources/grib1.py (the
-  reference's cfgrib edition fallback, sinks.py:370-389);
-- GeoTIFF (``II*\\0`` / ``MM\\0*``)      → sources/geotiff.py.
+- every single-file format → its :data:`FORMATS` entry, probed in table
+  order: classic NetCDF (``CDF\\x01/\\x02/\\x05``, netcdf3.py),
+  NetCDF-4/HDF5 (``\\x89HDF\\r\\n\\x1a\\n``, hdf5.py), GRIB2 and GRIB1
+  (``GRIB`` + edition byte, grib2.py / grib1.py — the reference's
+  cfgrib edition fallback, sinks.py:370-389), GeoTIFF (``II*\\0`` /
+  ``MM\\0*``, geotiff.py).
+
+``open_dataset``, ``hypercube.decode_auto`` and ``format("weather")``
+(sources/datasource.py) all read the same table.
 
 Single-file formats probe only the file HEADER on the driver (variable
 names → output schema; the reference's metadata open) and decode on
-executors via ``mapInPandas`` — one task per file, whole-file decode,
-the same plan shape as hypercube.ingest. The returned frame is plain
-long-format rows, so the xql SQL surface (plans/xql.py) runs on top by
-registering it as a view: ``open_dataset(spark, uri, view="era5")``
-then ``xql.run_query(spark, "SELECT ... FROM era5 ...")`` — the
-reference's flagship flow end-to-end.
+executors through :func:`map_files` — one task per file, whole-file
+decode, the plan ``hypercube.ingest`` and the file splitter share. The
+file sinks share the write side: :func:`grid_cubes` grids rows into
+NaN-filled cubes and :func:`write_buckets` serializes one whole file
+per time bucket on executors. The returned frame is plain long-format
+rows, so the xql SQL surface (plans/xql.py) runs on top by registering
+it as a view: ``open_dataset(spark, uri, view="era5")`` then
+``xql.run_query(spark, "SELECT ... FROM era5 ...")`` — the reference's
+flagship flow end-to-end.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+from typing import Callable, NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .geotiff import gtiff_decode, is_tiff
+from .grib1 import grib1_decode, is_grib1, list_params1
+from .grib2 import grib2_decode, is_grib2, list_params
+from .hdf5 import is_hdf5, list_variables_h5, nc4_decode
+from .netcdf3 import is_netcdf3, list_variables, nc3_decode
+from .zarr_scan import filter_cells
+from .zarr_v2 import ZMETADATA
+
+
+class Format(NamedTuple):
+    """How one single-file weather format is recognised and read."""
+
+    probe: Callable[[str], bool]  # magic bytes of a local path
+    decode: Callable  # (path, opts) → long-format pandas rows
+    variables: Callable[[str], list[str]]  # data variables, header only
+    coords: tuple[str, ...] = ("time", "latitude", "longitude")
+
+
+# dict order is the probe order of detect()
+FORMATS: dict[str, Format] = {
+    "netcdf3": Format(is_netcdf3, nc3_decode, list_variables),
+    "netcdf4": Format(is_hdf5, nc4_decode, list_variables_h5),
+    "grib2": Format(is_grib2, grib2_decode, list_params),
+    "grib1": Format(is_grib1, grib1_decode, list_params1),
+    # single value band and no time axis: nothing variable-level to prune
+    "geotiff": Format(is_tiff, gtiff_decode, lambda path: ["value"], ("latitude", "longitude")),
+}
+
+
+def expand(uri: str) -> list[str]:
+    """A glob URI → its sorted matches (at least one); any other URI →
+    itself."""
+    uris = sorted(glob.glob(uri)) if any(ch in uri for ch in "*?[") else [uri]
+    if not uris:
+        raise ValueError(f"no files match {uri!r}")
+    return uris
+
 
 def detect(uri: str) -> str:
-    """Classify a URI by store layout / magic bytes."""
-    from .geotiff import is_tiff
-    from .grib1 import is_grib1
-    from .grib2 import is_grib2
-    from .hdf5 import is_hdf5
-    from .hypercube import _is_classic_netcdf
-    from .zarr_v2 import ZMETADATA
-
+    """Classify a URI by store layout / magic bytes: ``"ee"``,
+    ``"zarr"`` or a :data:`FORMATS` key."""
     if uri.startswith("ee://"):
         # the reference's EarthEngine branch (xql/src/xql/open.py:85-89)
         # initializes the EE client; the connector (sources/earthengine.py)
@@ -68,43 +107,75 @@ def detect(uri: str) -> str:
         or uri.rstrip("/").endswith(".zarr")
     ):
         return "zarr"
-    if _is_classic_netcdf(uri):
-        return "netcdf3"
-    if is_hdf5(uri):
-        return "netcdf4"
-    if is_grib2(uri):
-        return "grib2"
-    if is_grib1(uri):
-        return "grib1"  # reference edition fallback (sinks.py:370-389)
-    if is_tiff(uri):
-        return "geotiff"
+    for kind, fmt in FORMATS.items():
+        if fmt.probe(uri):
+            return kind
     raise ValueError(
         f"unable to open dataset {uri!r}: not a zarr store, classic NetCDF, "
         "NetCDF-4/HDF5, GRIB1/GRIB2, or GeoTIFF"
     )
 
 
-def _file_frame(
-    spark: SparkSession, uris: list[str], decode_one, columns: list[str]
-) -> DataFrame:
-    """One-task-per-file decode plan for single-file formats: the file
-    list is the input frame (repartitioned so whole files are the unit
-    of parallelism), decoding runs in mapInPandas on executors (the
-    driver touched only one header for the schema)."""
-    schema = ", ".join(
-        f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns
-    )
-    files = spark.createDataFrame([(u,) for u in uris], "path string").repartition(
-        max(1, min(len(uris), spark.sparkContext.defaultParallelism))
+def long_schema(columns: list[str]) -> str:
+    """DDL of the long-format rows: ``time`` is a timestamp, every other
+    column a double."""
+    return ", ".join(f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns)
+
+
+def map_files(spark: SparkSession, paths: list[str], run_one, schema) -> DataFrame:
+    """The one-task-per-file plan: the path list is the input frame,
+    repartitioned so whole files are the unit of parallelism, and
+    ``run_one(path)`` → pandas frame runs in mapInPandas on executors
+    (the driver touches at most a header)."""
+    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+        max(1, min(len(paths), spark.sparkContext.defaultParallelism))
     )
 
     def gen(batches):
         for pdf in batches:
             for p in pdf["path"]:
-                out = decode_one(p)
-                yield out.reindex(columns=columns)
+                yield run_one(p)
 
     return files.mapInPandas(gen, schema)
+
+
+def grid_cubes(pdf: pd.DataFrame, variables: list[str]):
+    """Long-format rows → ``(times, lats, lons, {variable: cube})``:
+    axes are the rows' distinct values (latitude north → south, the
+    ERA5 convention) and each cube is ``(time, latitude, longitude)``.
+    A cell absent from the rows is NaN — missing, never 0."""
+    times = np.sort(pdf["time"].unique())
+    lats = np.sort(pdf["latitude"].unique())[::-1]
+    lons = np.sort(pdf["longitude"].unique())
+    at = tuple(
+        pd.Index(axis).get_indexer(pdf[c])
+        for axis, c in ((times, "time"), (lats, "latitude"), (lons, "longitude"))
+    )
+    cubes = {}
+    for v in variables:
+        cube = np.full((len(times), len(lats), len(lons)), np.nan)
+        cube[at] = pdf[v].to_numpy(dtype="f8")
+        cubes[v] = cube
+    return times, lats, lons, cubes
+
+
+def write_buckets(rows: DataFrame, out_dir: str, bucket: str, write_one) -> int:
+    """The bucket-write plan of the file sinks: rows are keyed by
+    ``date_format(time, bucket)``, shuffled so each bucket is one group,
+    and ``write_one(bucket_value, pdf)`` serializes each group as one
+    whole file on an executor. Returns the number of groups written."""
+    os.makedirs(out_dir, exist_ok=True)
+
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        write_one(key[0], pdf)
+        return pd.DataFrame({"bucket": [key[0]]})
+
+    return int(
+        rows.withColumn("_bucket", F.date_format("time", bucket))
+        .groupBy("_bucket")
+        .applyInPandas(run, "bucket string")
+        .count()
+    )
 
 
 def open_dataset(
@@ -138,15 +209,13 @@ def open_dataset(
     (sources/earthengine.py). ``client_factory`` (picklable EEClient
     factory) overrides the real client — tests inject FakeEEClient;
     without it, the real client import gates cleanly."""
-    import glob as _glob
-
     if uri.startswith("ee://"):
         from .earthengine import open_ee
 
         if client_factory is None:
             detect(uri)  # gate with the canonical message if no ee pkg
         # time_range prunes the chunk MANIFEST (no pixel RPC for
-        # out-of-range images); the residual filter below stays for
+        # out-of-range images); the residual filter stays for
         # uniformity with the file formats (cheap no-op after pruning)
         # `variables` maps to EE bands: the chunk manifest prunes by
         # band, so unrequested bands never issue a pixel RPC
@@ -154,22 +223,12 @@ def open_dataset(
             spark, uri, client_factory=client_factory, time_range=time_range,
             bands=variables,
         )
-        if time_range is not None:
-            df = df.filter(
-                (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
-                & (F.col("time") < F.lit(time_range[1]).cast("timestamp"))
-            )
-        if lat_range is not None:
-            df = df.filter(F.col("latitude").between(*lat_range))
-        if lon_range is not None:
-            df = df.filter(F.col("longitude").between(*lon_range))
+        df = filter_cells(df, time_range, lat_range, lon_range)
         if view is not None:
             df.createOrReplaceTempView(view)
         return df
 
-    uris = sorted(_glob.glob(uri)) if any(ch in uri for ch in "*?[") else [uri]
-    if not uris:
-        raise ValueError(f"no files match {uri!r}")
+    uris = expand(uri)
     kinds = {detect(u) for u in uris}
     if len(kinds) > 1:
         raise ValueError(f"mixed formats under {uri!r}: {sorted(kinds)}")
@@ -198,27 +257,15 @@ def open_dataset(
             decoder="zarr2", include_uri=False,
         )
     else:
-        if kind == "geotiff":  # no time axis, single value band
-            from .geotiff import gtiff_decode
+        # the decoder pairing — projection pushdown included — is the
+        # one format("weather") uses
+        from .datasource import _decoder_for
 
-            cols = ["latitude", "longitude", "value"]
-            df = _file_frame(spark, uris, lambda p: gtiff_decode(p), cols)
-        else:
-            # single-file hypercube formats share the decoder pairing —
-            # projection pushdown included — with format("weather")
-            from .datasource import _decoder_for
-
-            decode_one, cols = _decoder_for(kind, uris[0], variables)
-            df = _file_frame(spark, uris, decode_one, cols)
-        if time_range is not None and "time" in df.columns:
-            df = df.filter(
-                (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
-                & (F.col("time") < F.lit(time_range[1]).cast("timestamp"))
-            )
-        if lat_range is not None:
-            df = df.filter(F.col("latitude").between(*lat_range))
-        if lon_range is not None:
-            df = df.filter(F.col("longitude").between(*lon_range))
+        decode_one, cols = _decoder_for(kind, uris[0], variables)
+        df = map_files(
+            spark, uris, lambda p: decode_one(p).reindex(columns=cols), long_schema(cols)
+        )
+        df = filter_cells(df, time_range, lat_range, lon_range)
     if view is not None:
         df.createOrReplaceTempView(view)
     return df
@@ -284,13 +331,14 @@ def stream_ingest_files(
     New files landing in ``watch_dir`` are the event source (the
     file-source analog of object-finalize notifications);
     ``maxFilesPerTrigger`` bounds files per micro-batch. Each
-    micro-batch decodes WHOLE files on executors through the
-    magic-byte auto dispatch (hypercube.decode_auto — classic NetCDF /
-    HDF5 / GRIB1 / GRIB2, no libraries), then hands the long-format
-    rows to ``sink_fn(df, batch_id)`` via foreachBatch. Only the
-    ``path`` column is selected from the binaryFile source, so file
-    CONTENT is never shipped through the stream — decode re-reads
-    bytes executor-side, keeping the micro-batch plan metadata-sized.
+    micro-batch collects its file paths and decodes the WHOLE files on
+    executors through :func:`map_files` and the magic-byte dispatch
+    (hypercube.decode_auto — every :data:`FORMATS` entry, no
+    libraries), then hands the long-format rows to
+    ``sink_fn(df, batch_id)`` via foreachBatch. Only the ``path``
+    column is selected from the binaryFile source, so file CONTENT is
+    never shipped through the stream — decode re-reads bytes
+    executor-side, keeping the micro-batch plan metadata-sized.
     Pass ``checkpoint_dir`` for a durable offset log (exactly-once
     file accounting across restarts).
 
@@ -327,21 +375,15 @@ def stream_ingest_files(
         files = notification_uris(values)
     else:
         raise ValueError(f"unknown stream source {source!r} (files|notifications)")
-    schema = ", ".join(
-        f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns
-    )
+    schema = long_schema(columns)
     opts = IngestOptions()
 
-    def gen(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                local = p[5:] if p.startswith("file:") else p
-                yield decode_auto(local, opts).reindex(columns=columns)
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.repartition(
-            max(1, batch_df.sparkSession.sparkContext.defaultParallelism)
-        ).mapInPandas(gen, schema)
+        paths = [p[5:] if p.startswith("file:") else p for (p,) in batch_df.collect()]
+        rows = map_files(
+            batch_df.sparkSession, paths,
+            lambda p: decode_auto(p, opts).reindex(columns=columns), schema,
+        )
         sink_fn(rows, batch_id)
 
     writer = files.writeStream.foreachBatch(process)

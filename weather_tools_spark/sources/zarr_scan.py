@@ -114,6 +114,27 @@ def prune_chunks(
     return out
 
 
+def filter_cells(
+    rows: DataFrame,
+    time_range: tuple[str, str] | None = None,
+    lat_range: tuple[float, float] | None = None,
+    lon_range: tuple[float, float] | None = None,
+) -> DataFrame:
+    """The residual cell-level range filter applied after decode: time
+    in ``[start, end)``, latitude and longitude within their closed
+    ranges. Frames without a time axis (GeoTIFF) ignore ``time_range``."""
+    if time_range is not None and "time" in rows.columns:
+        rows = rows.filter(
+            (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
+            & (F.col("time") < F.lit(time_range[1]).cast("timestamp"))
+        )
+    if lat_range is not None:
+        rows = rows.filter(F.col("latitude").between(*lat_range))
+    if lon_range is not None:
+        rows = rows.filter(F.col("longitude").between(*lon_range))
+    return rows
+
+
 def row_schema(meta: ChunkedDatasetMeta, include_uri: bool = True):
     """Long-format scan schema for a store template: coordinate axes +
     one double column per data variable."""
@@ -396,13 +417,4 @@ def scan(
         _decode_specs(meta, decoder, include_uri=include_uri),
         schema=row_schema(meta, include_uri=include_uri),
     )
-    if time_range is not None:
-        rows = rows.filter(
-            (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
-            & (F.col("time") < F.lit(time_range[1]).cast("timestamp"))
-        )
-    if lat_range is not None:
-        rows = rows.filter(F.col("latitude").between(*lat_range))
-    if lon_range is not None:
-        rows = rows.filter(F.col("longitude").between(*lon_range))
-    return rows
+    return filter_cells(rows, time_range, lat_range, lon_range)
