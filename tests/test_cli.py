@@ -204,3 +204,120 @@ def test_dlv2_cli_drives_control_plane(capsys):
         assert json.loads(capsys.readouterr().out)[0]["license_id"] == "L1"
         assert main(base + ["download", "remove", "era5.cfg"]) == 0
         assert main(base + ["license", "remove", "L1"]) == 0
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--geo", "--zarr"],
+        ["--geo", "--netcdf"],
+        ["--zarr", "--chunks", "0,8,8"],
+        ["--zarr", "--chunks", "24,8"],
+        ["--zarr", "--chunks", "24,x,8"],
+    ],
+    ids=["geo-zarr", "geo-netcdf", "zero-chunk", "two-chunks", "non-int-chunk"],
+)
+def test_mv_rejects_unworkable_sink_flags(tmp_path, grib_file, capsys, monkeypatch, flags):
+    """Sink flags that cannot work exit 2 with one line, before a
+    session (let alone a job) exists."""
+    from weather_tools_spark import cli
+
+    monkeypatch.setattr(cli, "_spark", lambda app: pytest.fail("Spark started"))
+    rc = main(["mv", "--uris", grib_file, "--output", str(tmp_path / "out"), *flags])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert len(err.strip().splitlines()) == 1, err
+    assert not (tmp_path / "out").exists()
+
+
+def test_mv_variables_pushed_into_decode(spark, tmp_path, grib_file, monkeypatch):
+    """--variables reaches open_dataset (the decoder's projection), and
+    the output keeps the coordinates then the variables in the order
+    asked for."""
+    from weather_tools_spark.sources import opener
+
+    real, seen = opener.open_dataset, []
+
+    def spy(*a, **k):
+        seen.append(k.get("variables"))
+        return real(*a, **k)
+
+    monkeypatch.setattr(opener, "open_dataset", spy)
+    out = str(tmp_path / "rows.parquet")
+    assert main(["mv", "--uris", grib_file, "--output", out, "--variables", "u10,d2m"]) == 0
+    assert seen == [["u10", "d2m"]]
+    df = spark.read.parquet(out)
+    assert df.columns == ["time", "latitude", "longitude", "u10", "d2m"]
+    assert df.count() == 12
+
+
+def test_mv_unknown_variable_exits_2(spark, tmp_path, grib_file, capsys):
+    rc = main(["mv", "--uris", grib_file, "--output", str(tmp_path / "out"), "--variables", "nope"])
+    assert rc == 2
+    err = capsys.readouterr().err.strip()
+    assert err.startswith("unknown variables ['nope']") and len(err.splitlines()) == 1
+
+
+@pytest.fixture()
+def grib_days(tmp_path):
+    """Two GRIB2 files, three time steps each, written out of time order
+    (the second file holds the earlier day, each file's steps run
+    backwards), on a full 4 × 5 grid."""
+    from weather_tools_spark.sources.grib2 import write_grib2
+
+    lats = np.array([51.0, 50.0, 49.0, 48.0])
+    lons = np.array([9.0, 10.0, 11.0, 12.0, 13.0])
+    for i, day in enumerate(("2024-01-02", "2024-01-01")):
+        msgs = []
+        for h in (18, 6, 0):
+            vals = np.arange(20, dtype="f8").reshape(4, 5) / 8 + 100 * i + h
+            for param, off in (("d2m", 0.0), ("u10", 5.0)):
+                msgs.append({"param": param, "ref_time": f"{day}T{h:02d}:00", "lats": lats,
+                             "lons": lons, "values": vals + off})
+        write_grib2(str(tmp_path / f"era5-{i}.grib2"), msgs)
+    return str(tmp_path / "era5-*.grib2")
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_mv_zarr_sink_axes_cells_and_released_cache(spark, tmp_path, grib_days):
+    """mv --zarr over a multi-file, multi-time glob with --area: the
+    store's axes are the area-filtered rows' distinct values (time and
+    longitude ascending, latitude north → south), every cell round-trips,
+    and the held decode is released."""
+    from weather_tools_spark.sources.opener import open_dataset
+    from weather_tools_spark.sources.zarr_v2 import open_zarr_v2
+
+    cached = _persistent_rdds(spark)
+    store = str(tmp_path / "store.zarr")
+    rc = main(["mv", "--uris", grib_days, "--output", store, "--zarr", "--chunks", "4,2,2",
+               "--area", "50", "10", "48", "12"])
+    assert rc == 0
+    assert _persistent_rdds(spark) == cached
+
+    meta = open_zarr_v2(store)
+    src = open_dataset(spark, grib_days, lat_range=(48, 50), lon_range=(10, 12)).collect()
+    assert meta.times == [str(t) for t in sorted({r.time for r in src})] and len(meta.times) == 6
+    assert meta.lats == sorted({r.latitude for r in src}, reverse=True) == [50.0, 49.0, 48.0]
+    assert meta.lons == sorted({r.longitude for r in src}) == [10.0, 11.0, 12.0]
+
+    def cells(rows):
+        return {(r.time, r.latitude, r.longitude): (r.d2m, r.u10) for r in rows}
+
+    assert len(src) == 6 * 3 * 3
+    assert cells(open_dataset(spark, store).collect()) == cells(src)
+
+
+def test_mv_zarr_sink_releases_cache_on_failure(spark, tmp_path, grib_days, monkeypatch):
+    from weather_tools_spark.sources import zarr_v2
+
+    def boom(*a, **k):
+        raise RuntimeError("chunk write failed")
+
+    monkeypatch.setattr(zarr_v2, "write_zarr_v2", boom)
+    cached = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="chunk write failed"):
+        main(["mv", "--uris", grib_days, "--output", str(tmp_path / "s.zarr"), "--zarr"])
+    assert _persistent_rdds(spark) == cached

@@ -979,3 +979,32 @@ def test_file_sinks_one_group_write(spark, tmp_path, monkeypatch):
     assert len(built) == 2
     for df in built:
         assert _executed(df).count("FlatMapGroupsInPandas") == 1
+
+
+def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
+    """mv --zarr holds one decode for the sink's lifetime: one aggregate
+    job derives all three axes and the chunk writer reads the held rows.
+    7 jobs on this input; deriving each axis with its own
+    distinct/sort scan and decoding again for the write took 19."""
+    import numpy as np
+
+    from weather_tools_spark.cli import main
+    from weather_tools_spark.sources import grib2 as G2
+
+    lats, lons = np.array([50.0, 49.0, 48.0]), np.array([10.0, 11.0, 12.0, 13.0])
+    for i in range(2):
+        msgs = [
+            {"param": p, "ref_time": f"2024-01-0{i + 1}T{h:02d}:00", "lats": lats, "lons": lons,
+             "values": np.arange(12.0).reshape(3, 4) + 100 * i + h + k}
+            for h in (0, 6, 12) for k, p in enumerate(("d2m", "u10"))
+        ]
+        G2.write_grib2(str(tmp_path / f"era5-{i}.grib2"), msgs)
+    sc = spark.sparkContext
+    sc.setJobGroup("zarr-sink-jobs", "mv --zarr job count")
+    try:
+        rc = main(["mv", "--uris", str(tmp_path / "era5-*.grib2"),
+                   "--output", str(tmp_path / "store.zarr"), "--zarr", "--chunks", "2,2,2"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rc == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("zarr-sink-jobs")) == 7

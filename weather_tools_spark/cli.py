@@ -141,14 +141,37 @@ def cmd_mv(args: argparse.Namespace) -> int:
 
     from weather_tools_spark.sources.opener import open_dataset
 
+    # flag combinations that cannot work fail here, before any Spark job
+    if args.geo and (args.zarr or args.netcdf):
+        print("--geo adds a string column; --zarr and --netcdf store numeric variables only",
+              file=sys.stderr)
+        return 2
+    if args.zarr:
+        try:
+            chunks = tuple(int(x) for x in args.chunks.split(","))
+        except ValueError:
+            chunks = ()
+        if len(chunks) != 3 or min(chunks) < 1:
+            print(f"--chunks needs three positive integers time,lat,lon, got {args.chunks!r}",
+                  file=sys.stderr)
+            return 2
+
     spark = _spark("weather-mv")
     lat_range = lon_range = None
     if args.area:
         n, w, s, e = args.area
         lat_range, lon_range = (s, n), (w, e)
-    df = open_dataset(spark, args.uris, lat_range=lat_range, lon_range=lon_range)
-    if args.variables:
-        keep = [v for v in args.variables.split(",") if v]
+    keep = [v for v in args.variables.split(",") if v]
+    try:
+        # the projection reaches the decoder: pruned GRIB messages are
+        # skipped at the header, pruned NetCDF payloads never unpack
+        df = open_dataset(
+            spark, args.uris, lat_range=lat_range, lon_range=lon_range, variables=keep or None
+        )
+    except ValueError as exc:  # unknown variables, no matching or mixed files
+        print(exc, file=sys.stderr)
+        return 2
+    if keep:
         dims = [c for c in ("time", "latitude", "longitude") if c in df.columns]
         df = df.select(*dims, *keep)
     if args.geo:
@@ -168,29 +191,32 @@ def cmd_mv(args: argparse.Namespace) -> int:
         print(f"wrote {n} NetCDF file(s), vars={variables} -> {args.output}")
         return 0
     if args.zarr:
-        # Zarr sink (the reference's xbeam ChunksToZarr path): derive
-        # the coordinate axes driver-side (axes are dimension-sized —
-        # the same bounded contract as the geo lookup) and hand the
-        # long-format rows to the distributed chunk writer.
+        # Zarr sink (the reference's xbeam ChunksToZarr path): the input
+        # is decoded once and held for the sink's lifetime only (a local
+        # copy of the rows costs less than decoding GRIB again); one
+        # aggregate job derives the three coordinate axes in-plan (axes
+        # are dimension-sized, the same bounded contract as the geo
+        # lookup) and the distributed chunk writer reads the same rows.
         from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta
         from weather_tools_spark.sources.zarr_v2 import write_zarr_v2
 
         if "time" not in df.columns:
             print("--zarr needs a time axis (GRIB/NetCDF input)", file=sys.stderr)
             return 2
-        times = [
-            r[0].isoformat()
-            for r in df.select("time").distinct().orderBy("time").collect()
-        ]
-        lats = [r[0] for r in df.select("latitude").distinct().orderBy(F.col("latitude").desc()).collect()]
-        lons = [r[0] for r in df.select("longitude").distinct().orderBy("longitude").collect()]
-        variables = tuple(c for c in df.columns if c not in ("time", "latitude", "longitude"))
-        ct, cla, clo = (int(x) for x in args.chunks.split(","))
-        meta = ChunkedDatasetMeta(
-            uri=args.output, times=times, lats=lats, lons=lons,
-            chunk_time=ct, chunk_lat=cla, chunk_lon=clo, variables=variables,
-        )
-        n_chunks = write_zarr_v2(df, args.output, meta)
+        dims = ("time", "latitude", "longitude")
+        variables = tuple(c for c in df.columns if c not in dims)
+        df.persist()
+        try:
+            times, lats, lons = df.agg(*(F.array_sort(F.collect_set(c)) for c in dims)).first()
+            meta = ChunkedDatasetMeta(
+                uri=args.output, times=[t.isoformat() for t in times],
+                lats=lats[::-1], lons=lons,  # latitude north → south
+                chunk_time=chunks[0], chunk_lat=chunks[1], chunk_lon=chunks[2],
+                variables=variables,
+            )
+            n_chunks = write_zarr_v2(df, args.output, meta)
+        finally:
+            df.unpersist(blocking=True)
         print(f"wrote {n_chunks} chunk(s), vars={list(variables)} -> {args.output}")
         return 0
     # parquet sink: swaps to .format("bigquery") where the connector is
