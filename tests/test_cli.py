@@ -78,6 +78,16 @@ def test_mv_grib_to_parquet(spark, tmp_path, grib_file, capsys):
     assert df.filter("latitude < 49 or longitude > 12").count() == 0
 
 
+def test_mv_parquet_append_reports_rows_written(spark, tmp_path, grib_file, capsys):
+    """mv prints the rows this run wrote, not the output directory's
+    total: two appends of the 12-row file each report 12."""
+    out = str(tmp_path / "rows.parquet")
+    for _ in range(2):
+        assert main(["mv", "--uris", grib_file, "--output", out, "--mode", "append"]) == 0
+        assert f"wrote 12 row(s) -> {out}" in capsys.readouterr().out
+    assert spark.read.parquet(out).count() == 24
+
+
 def test_sp_splits_grib_by_param(spark, tmp_path, grib_file, capsys):
     outdir = str(tmp_path / "split")
     rc = main(["sp", "--input-pattern", grib_file, "--output-dir", outdir])

@@ -266,7 +266,7 @@ def test_zarr_chunk_codec_byte_identity(flat, codec):
 @settings(max_examples=120, deadline=None)
 @given(data=st.binary(min_size=0, max_size=4096), matchy=st.booleans())
 def test_lz4_block_roundtrip_any_bytes(data, matchy):
-    """The stdlib LZ4 block decoder inverts the test-side greedy
+    """The LZ4 block decoder (pyarrow's liblz4) inverts the test-side greedy
     encoder on arbitrary byte strings — including highly repetitive
     input (long overlap matches) and incompressible noise (literal-only
     final sequences)."""

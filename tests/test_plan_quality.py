@@ -981,11 +981,9 @@ def test_file_sinks_one_group_write(spark, tmp_path, monkeypatch):
         assert _executed(df).count("FlatMapGroupsInPandas") == 1
 
 
-def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
-    """mv --zarr holds one decode for the sink's lifetime: one aggregate
-    job derives all three axes and the chunk writer reads the held rows.
-    7 jobs on this input; deriving each axis with its own
-    distinct/sort scan and decoding again for the write took 19."""
+def _mv_job_count(spark, tmp_path, *flags) -> int:
+    """Jobs one ``mv`` run launches on a 2-file, 6-step, 2-variable
+    GRIB2 glob."""
     import numpy as np
 
     from weather_tools_spark.cli import main
@@ -1000,11 +998,27 @@ def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
         ]
         G2.write_grib2(str(tmp_path / f"era5-{i}.grib2"), msgs)
     sc = spark.sparkContext
-    sc.setJobGroup("zarr-sink-jobs", "mv --zarr job count")
+    group = f"mv-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "mv job count")
     try:
         rc = main(["mv", "--uris", str(tmp_path / "era5-*.grib2"),
-                   "--output", str(tmp_path / "store.zarr"), "--zarr", "--chunks", "2,2,2"])
+                   "--output", str(tmp_path / "out"), *flags])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rc == 0
-    assert len(sc.statusTracker().getJobIdsForGroup("zarr-sink-jobs")) == 7
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
+    """mv --zarr holds one decode for the sink's lifetime: one aggregate
+    job derives all three axes and the chunk writer reads the held rows.
+    7 jobs on this input; deriving each axis with its own
+    distinct/sort scan and decoding again for the write took 19."""
+    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 7
+
+
+def test_parquet_sink_counts_without_rescan_job_count(spark, tmp_path):
+    """mv's parquet sink reads its row count from an observation on the
+    write: 2 jobs on this input; reading the output back to count it
+    took 5."""
+    assert _mv_job_count(spark, tmp_path) == 2

@@ -136,11 +136,11 @@ def test_unsupported_compressor_raises(tmp_path):
     with pytest.raises(NotImplementedError):
         Z2._compress(b"", {"id": "lz4"})
     # blosc with a non-zlib inner codec: gated on WRITE by cname
-    # (lz4 is READ-supported via the stdlib block decoder, write-gated)
+    # (lz4 is READ-supported via pyarrow's liblz4, write-gated)
     with pytest.raises(NotImplementedError, match="lz4"):
         Z2._compress(b"\x00" * 32, {"id": "blosc", "cname": "lz4"})
     # READ gate: codec id bits in the container header (bits 5-7 = 0 →
-    # blosclz, stdlib-undecodable), independent of the .zarray metadata
+    # blosclz, undecodable without c-blosc), independent of the .zarray metadata
     import struct
 
     blz_hdr = struct.pack("<BBBBiii", 2, 1, 0 << 5, 8, 32, 32, 16 + 4 + 4 + 8)
@@ -226,13 +226,16 @@ def test_blosc_golden_container_decodes():
     assert Z2.blosc_decompress(hdr + values.tobytes()) == values.tobytes()
 
 
-# --- LZ4 block format + blosc-lz4 containers (stdlib read path) ---------
+# --- LZ4 block format + blosc-lz4 containers (native read path) ---------
 
 
 def _lz4_block_compress(data: bytes) -> bytes:
     """Minimal greedy LZ4 block encoder (test-side reference, written
     from lz4_Block_format.md, independent of the decoder under test):
-    hash-table match finder, min match 4, 2-byte LE offsets."""
+    hash-table match finder, min match 4, 2-byte LE offsets. Honours the
+    spec's end-of-block rules, as liblz4's encoder does: the last match
+    starts at least 12 bytes before the end and the last 5 bytes are
+    literals."""
     out = bytearray()
     i, n = 0, len(data)
     anchor = 0
@@ -258,13 +261,13 @@ def _lz4_block_compress(data: bytes) -> bytes:
                     rem -= 255
                 out.append(rem)
 
-    while i + 4 <= n:
+    while i + 12 <= n:
         key = data[i : i + 4]
         cand = table.get(key)
         table[key] = i
         if cand is not None and i - cand <= 0xFFFF and data[cand : cand + 4] == key:
             mlen = 4
-            while i + mlen < n and data[cand + mlen] == data[i + mlen]:
+            while i + mlen < n - 5 and data[cand + mlen] == data[i + mlen]:
                 mlen += 1
             emit(data[anchor:i], mlen, i - cand)
             i += mlen
@@ -277,23 +280,40 @@ def _lz4_block_compress(data: bytes) -> bytes:
 
 def test_lz4_block_golden_vectors():
     """Hand-assembled sequences from the public LZ4 block spec —
-    independent of both the test encoder and the decoder."""
+    independent of both the test encoder and the decoder. A block ends
+    with a literal-only sequence of at least 5 bytes (the spec's
+    end-of-block rules); ``tail`` is that sequence."""
+    tail = b"\x50tail!"
     # pure literals: token 0x50, 5 literal bytes
     assert Z2._lz4_block_decompress(b"\x50hello", 5) == b"hello"
     # 3 literals + match len 9 offset 3 → "abc" * 4
-    assert Z2._lz4_block_decompress(b"\x35abc\x03\x00", 12) == b"abcabcabcabc"
+    assert Z2._lz4_block_decompress(b"\x35abc\x03\x00" + tail, 17) == b"abcabcabcabctail!"
     # extended literal length: 15+5=20 literals
     assert Z2._lz4_block_decompress(b"\xf0\x05" + b"x" * 20, 20) == b"x" * 20
     # extended match length: 2 literals + overlap match (offset 2) of
     # 15+4+11=30 bytes → "ab" * 16
-    assert Z2._lz4_block_decompress(b"\x2fab\x02\x00\x0b", 32) == b"ab" * 16
+    assert Z2._lz4_block_decompress(b"\x2fab\x02\x00\x0b" + tail, 37) == b"ab" * 16 + b"tail!"
+    # a block that ends in a match breaks the end-of-block rules; the
+    # reference decoder (liblz4) rejects it
+    with pytest.raises(ValueError):
+        Z2._lz4_block_decompress(b"\x35abc\x03\x00", 12)
+    with pytest.raises(ValueError):
+        Z2._lz4_block_decompress(b"\x2fab\x02\x00\x0b", 32)
     # wrong declared size / corrupt offsets raise, never mis-decode
     with pytest.raises(ValueError):
         Z2._lz4_block_decompress(b"\x50hello", 6)
+    with pytest.raises(ValueError, match="cannot decode"):  # rejected before allocating
+        Z2._lz4_block_decompress(b"\x50hello", 1 << 31)
     with pytest.raises(ValueError):
         Z2._lz4_block_decompress(b"\x35abc\x00\x00", 12)  # offset 0
     with pytest.raises(ValueError):
         Z2._lz4_block_decompress(b"\x35abc\x09\x00", 12)  # offset > window
+    # the same two offsets in well-ended blocks: liblz4 accepts offset 0
+    # (it leaves the buffer's old bytes), so the wrapper must reject it
+    with pytest.raises(ValueError, match="offset 0"):
+        Z2._lz4_block_decompress(b"\x35abc\x00\x00" + tail, 17)
+    with pytest.raises(ValueError, match="offset 9"):
+        Z2._lz4_block_decompress(b"\x35abc\x09\x00" + tail, 17)
 
 
 def test_lz4_block_roundtrip():
@@ -352,7 +372,7 @@ def _blosc_lz4_container(data: bytes, typesize: int, blocksize: int, shuffle: bo
 
 def test_blosc_lz4_container_decodes():
     """blosc-lz4 (the numcodecs DEFAULT — the actual ERA5-mirror
-    layout) decodes stdlib-only: split + unsplit, shuffled + not,
+    layout) decodes: split + unsplit, shuffled + not,
     leftover blocks, raw splits."""
     rng = np.random.default_rng(3)
     arr = np.arange(1280, dtype="<i4")  # 5120B → 5 full blocks @1024
@@ -587,7 +607,9 @@ def test_snappy_block_roundtrip_and_goldens():
     assert Z2._snappy_decompress(enc) == b"abababab"
     with pytest.raises(ValueError, match="declared"):
         Z2._snappy_decompress(b"\x09\x10hello")  # wrong declared length
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(ValueError, match="declared"):  # 4 GiB from 6 bytes: no allocation
+        Z2._snappy_decompress(b"\xff\xff\xff\xff\x0fx")
+    with pytest.raises(ValueError, match="snappy"):  # copy offset outside the window
         Z2._snappy_decompress(b"\x08\x04ab" + bytes([(0 << 5) | (2 << 2) | 1, 9]))
     rng = np.random.default_rng(13)
     cases = [
@@ -601,7 +623,7 @@ def test_snappy_block_roundtrip_and_goldens():
 
 
 def test_blosc_snappy_container_decodes():
-    """blosc-snappy containers (inner codec id 2) decode stdlib-only:
+    """blosc-snappy containers (inner codec id 2) decode:
     single and legacy-split blocks, shuffled and raw-split."""
     import struct as _s
 
@@ -655,9 +677,9 @@ def _liblz4():
 @pytest.mark.skipif(_liblz4() is None, reason="reference liblz4 not present")
 def test_lz4_decoder_matches_reference_liblz4():
     """External conformance: raw LZ4 blocks produced by the REFERENCE
-    liblz4 (ctypes, test-side only) decode byte-identically through the
-    stdlib _lz4_block_decompress — the decoder is validated against the
-    real library, not just our own test encoder."""
+    liblz4 (ctypes, test-side only) decode byte-identically through
+    _lz4_block_decompress and its exact-length check — validated
+    against the real encoder, not just our own test encoder."""
     import ctypes
 
     lib = _liblz4()
@@ -678,6 +700,49 @@ def test_lz4_decoder_matches_reference_liblz4():
         assert n > 0 or len(data) == 0
         enc = dst.raw[:n]
         assert Z2._lz4_block_decompress(enc, len(data)) == data
+
+
+def test_corrupt_chunk_errors_name_the_chunk(tmp_path):
+    """A chunk that fails to decode raises ValueError naming the store,
+    the variable and the chunk key: a truncated zstd chunk, a corrupt
+    zlib chunk, a chunk that decodes short of its shape, and a shard
+    with a corrupt inner chunk. Good chunks beside them still decode."""
+    import re
+
+    import pyarrow as pa
+
+    store = str(tmp_path / "bad.zarr")
+    arr = np.arange(24, dtype="<f8").reshape(2, 3, 4)
+    raw = arr.tobytes()
+    zstd = pa.Codec("zstd").compress(raw, asbytes=True)
+    za = {"chunks": [2, 3, 4], "dtype": "<f8", "order": "C", "filters": None}
+    cases = {
+        "zs": ({"id": "zstd"}, {"0.0.0": zstd, "0.0.1": zstd[: len(zstd) // 2]}),
+        "zl": ({"id": "zlib"}, {"0.0.0": zlib.compress(raw), "1.0.0": b"\x78\x9c" + b"\xff" * 16,
+                                "0.1.0": zlib.compress(raw[:-8])}),
+    }
+    for var, (comp, chunks) in cases.items():
+        for key, data in chunks.items():
+            os.makedirs(os.path.join(store, var), exist_ok=True)
+            with open(os.path.join(store, var, key), "wb") as f:
+                f.write(data)
+        z = {**za, "compressor": comp}
+        assert np.array_equal(Z2.decode_chunk(store, var, z, (0, 0, 0)), arr)
+        for key in chunks.keys() - {"0.0.0"}:
+            with pytest.raises(ValueError, match=rf"{re.escape(store)}.*'{var}'.*chunk {key}"):
+                Z2.decode_chunk(store, var, z, tuple(int(k) for k in key.split(".")))
+
+    inner = {"id": "zlib", "level": 1}
+    shard = bytearray(Z2._encode_shard(arr, (1, 3, 4), inner))
+    shard[2:6] = b"\xff\xff\xff\xff"  # inside inner chunk 0's deflate stream
+    os.makedirs(os.path.join(store, "sh", "c", "0", "0"))
+    with open(os.path.join(store, "sh", "c", "0", "0", "0"), "wb") as f:
+        f.write(bytes(shard))
+    zs = {**za, "key_style": "v3", "compressor": {
+        "id": "sharding_indexed", "inner_chunks": [1, 3, 4], "inner_compressor": inner,
+        "index_location": "end", "index_crc": True}}
+    with pytest.raises(ValueError, match=r"'sh' chunk c/0/0/0: inner chunk 0"):
+        Z2.decode_chunk(store, "sh", zs, (0, 0, 0))
 
 
 def test_crc32c_check_value():

@@ -1,13 +1,13 @@
-"""Zstandard decoder (sources/zstd_codec.py) — RFC 8878 subset.
+"""Zstandard decoding (``zarr_v2.zstd_decompress``, pyarrow's libzstd).
 
 Conformance evidence is EXTERNAL here, unlike the roundtrip-style
 codec tests: every case is encoded by the reference ``zstd`` CLI or
-libzstd (present in this container, used test-side only) and must
-decode bit-identically through the stdlib decoder — covering raw/RLE/
-compressed blocks, predefined + FSE-compressed + RLE + repeat sequence
-tables, 1- and 4-stream Huffman literals, direct and FSE-compressed
-weights, treeless reuse, multi-block frames, multi-frame and skippable
-inputs, and checksummed frames."""
+libzstd (used test-side only) and must decode bit-identically through
+the package's decode path — covering raw/RLE/compressed blocks,
+predefined + FSE-compressed + RLE + repeat sequence tables, 1- and
+4-stream Huffman literals, direct and FSE-compressed weights, treeless
+reuse, multi-block frames, multi-frame and skippable inputs, and
+checksummed frames."""
 
 from __future__ import annotations
 
@@ -20,7 +20,7 @@ import subprocess
 import numpy as np
 import pytest
 
-from weather_tools_spark.sources.zstd_codec import zstd_decompress
+from weather_tools_spark.sources.zarr_v2 import zstd_decompress
 
 _HAS_CLI = shutil.which("zstd") is not None
 
@@ -128,7 +128,7 @@ def test_zarr_numcodecs_zstd_chunk_decodes():
 def test_blosc_zstd_container_decodes():
     """A blosc container with inner codec 4 (zstd) — each split a real
     reference-encoded zstd frame, the layout c-blosc produces —
-    decodes stdlib-only, raw splits included."""
+    decodes, raw splits included."""
     from weather_tools_spark.sources import zarr_v2 as Z2
 
     rng = np.random.default_rng(9)
@@ -199,18 +199,6 @@ def test_zarr_v3_zstd_codec_parses(tmp_path):
     assert za["compressor"] == {"id": "zstd"}
     got = Z2.decode_chunk(store, "t2m", za, (0, 0, 0))
     assert np.array_equal(got, arr)
-
-
-def test_xxh64_reference_vectors():
-    """XXH64 pinned against the reference implementation's published
-    test values (seed 0)."""
-    from weather_tools_spark.sources.zstd_codec import xxh64
-
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert xxh64(b"abc") == 0x44BC2CF5AD770999
-    # >32B exercises the 4-lane main loop + merge
-    assert xxh64(b"abcdefghijklmnopqrstuvwxyz0123456789") != xxh64(b"")
 
 
 @pytest.mark.skipif(not _HAS_CLI, reason="reference zstd CLI not present")

@@ -220,10 +220,13 @@ def cmd_mv(args: argparse.Namespace) -> int:
         print(f"wrote {n_chunks} chunk(s), vars={list(variables)} -> {args.output}")
         return 0
     # parquet sink: swaps to .format("bigquery") where the connector is
-    # deployed (reference bq.py WriteToBigQuery append semantics)
+    # deployed (reference bq.py WriteToBigQuery append semantics). The
+    # count is observed on the write itself: this run's rows, no re-scan.
+    from weather_tools_spark.operators.metrics import observe_counts
+
+    df, obs = observe_counts(df, "mv-parquet")
     df.write.mode(args.mode).parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(f"wrote {n} row(s) -> {args.output}")
+    print(f"wrote {obs.get['n_rows']} row(s) -> {args.output}")
     return 0
 
 

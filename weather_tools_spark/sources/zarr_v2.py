@@ -1,4 +1,5 @@
-"""Real Zarr v2 store codec — stdlib-only (json + zlib + numpy).
+"""Real Zarr v2 store codec — json + zlib + numpy, with pyarrow's
+bundled zstd, lz4 and snappy decoders.
 
 The reference's query engine is Zarr-first: it opens stores with
 ``xr.open_zarr`` and plans work from the store's chunk geometry
@@ -17,27 +18,26 @@ value). This module implements that format directly:
   writes only the tiny JSON metadata.
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
   read (the point of ``.zmetadata`` on object stores).
-- :func:`decode_chunk` — bytes → numpy for the ``zlib``/raw codecs,
-  used by ``zarr_scan._decode_specs(decoder="zarr2")`` inside the
-  pruned ``mapInPandas`` scan.
+- :func:`decode_chunk` — bytes → numpy for every codec below, used by
+  ``zarr_scan._decode_specs(decoder="zarr2")`` inside the pruned
+  ``mapInPandas`` scan.
 
 Compressor support: None (raw), zlib, gzip (v3), and the blosc1
 container — the container format is parsed here (header/bstarts/splits/
 byte-shuffle, see the blosc section below). READ decodes four inner
-codecs stdlib-only: zlib, lz4 (raw LZ4 block format, so
-numcodecs-default ``cname='lz4'`` stores — the real-world ERA5-mirror
-layout — decode with no third-party library), snappy, and zstd (the
-RFC 8878 decoder in sources/zstd_codec.py, which also serves the
-numcodecs ``Zstd`` compressor and the Zarr v3 ``zstd`` codec),
-including legacy typesize-split block layouts. WRITE is deliberately
-asymmetric: :func:`blosc_compress` emits zlib payloads only (it exists
-for roundtrip tests and conforming-store output; other encoders buy
-nothing here since any conforming blosc reader handles zlib). blosc
-with blosclz payloads or the bit-shuffle filter raises a gated error
-naming the library branch
-(bit-shuffle deliberately: its exact bit-order conventions cannot be
-verified without the reference library, and a plausibly-wrong decode
-of foreign data would be worse than the clear gate).
+codecs: zlib (stdlib), and lz4 (raw LZ4 block format, numcodecs'
+default ``cname='lz4'`` — the real-world ERA5-mirror layout), snappy
+and zstd through pyarrow's bundled native codecs, including legacy
+typesize-split block layouts. The same zstd reader serves the
+numcodecs ``Zstd`` compressor and the Zarr v3 ``zstd`` codec. WRITE
+is deliberately asymmetric: :func:`blosc_compress` emits zlib payloads
+only (it exists for roundtrip tests and conforming-store output; other
+encoders buy nothing here since any conforming blosc reader handles
+zlib). blosc with blosclz payloads or the bit-shuffle filter raises a
+gated error naming the library branch (bit-shuffle deliberately: its
+exact bit-order conventions cannot be verified without the reference
+library, and a plausibly-wrong decode of foreign data would be worse
+than the clear gate).
 
 Cluster note: chunk files are written with plain ``open`` — correct on
 local / NFS / FUSE-mounted object stores. A direct object-store writer
@@ -56,6 +56,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from .zarr_scan import ChunkedDatasetMeta
 
@@ -85,10 +86,10 @@ def _zarray(shape, chunks, dtype, compressor, fill_value):
 # public (c-blosc README_HEADER.rst): a 16-byte header, an int32 block
 # offset table, and per-block [int32 csize][payload] records, with an
 # optional byte-transpose ("shuffle") filter applied per block before
-# compression. The inner codec is selectable; zlib (RFC 1950, stdlib),
-# lz4 (raw block format, _lz4_block_decompress) and snappy
-# (_snappy_decompress) and zstd (sources/zstd_codec.py) all decode
-# here with no third-party library — covering numcodecs' default
+# compression. The inner codec is selectable; zlib (RFC 1950, stdlib)
+# and lz4 (raw block format, _lz4_block_decompress), snappy
+# (_snappy_decompress) and zstd (zstd_decompress) through pyarrow's
+# native codecs all decode here — covering numcodecs' default
 # cname='lz4' plus 'zlib'/'snappy'/'zstd'. blosclz raises a gated
 # NotImplementedError naming the branch.
 # ---------------------------------------------------------------------------
@@ -104,116 +105,105 @@ _BLOSC_MAX_SPLITS = 16
 _BLOSC_MIN_BUFFERSIZE = 128
 
 
+# Native decoders: pyarrow ships libzstd, liblz4 and libsnappy. Their
+# failures surface as OSError / ArrowInvalid; corrupt input here raises
+# ValueError, like every other codec path in this module.
+_NATIVE_ERRORS = (OSError, pa.ArrowInvalid)
+# what a corrupt chunk raises anywhere in _decompress plus the reshape
+# (gzip adds OSError/EOFError); decode_chunk names the chunk for all
+_DECODE_ERRORS = (ValueError, OSError, EOFError, zlib.error)
+_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
+_ZSTD_SKIPPABLE = 0x184D2A50  # magic of a skippable frame, low nibble free
+
+
+def _native(codec: str, src: bytes, size: int) -> bytes:
+    """One-shot block decode into a ``size``-byte buffer. pyarrow pads a
+    shorter output to ``size`` without complaint, so callers check the
+    exact length themselves."""
+    try:
+        return pa.Codec(codec).decompress(src, decompressed_size=size).to_pybytes()
+    except _NATIVE_ERRORS as e:
+        raise ValueError(f"{codec} decode failed: {e}") from None
+
+
 def _lz4_block_decompress(src: bytes, dst_size: int) -> bytes:
-    """Decode one raw LZ4 *block* (the format blosc's lz4 streams use —
-    token / literals / 2-byte LE offset / overlap-allowed match copy;
-    lz4_Block_format.md). Pure stdlib: numcodecs-default blosc-lz4 Zarr
-    stores (the common ERA5-mirror layout) decode with no library."""
-    dst = bytearray()
-    i, n = 0, len(src)
-    while i < n:
-        token = src[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = src[i]
+    """Decode one raw LZ4 *block* (the format blosc's lz4 splits use;
+    lz4_Block_format.md) of exactly ``dst_size`` bytes. liblz4 accepts a
+    match offset of 0 and leaves the output buffer's old bytes in place,
+    so a walk over the sequence headers (no bytes copied) first checks
+    every offset against the bytes produced so far and sums the decoded
+    length, which must be ``dst_size``."""
+    i = n = 0
+    try:
+        while i < len(src):
+            token = src[i]
+            i += 1
+            lit = token >> 4
+            if lit == 15:
+                while src[i] == 255:
+                    lit += 255
+                    i += 1
+                lit += src[i]
                 i += 1
-                lit += b
-                if b != 255:
-                    break
-        if lit:
-            if i + lit > n:
-                raise ValueError("lz4 block: literal run past end of input")
-            dst += src[i : i + lit]
             i += lit
-        if i >= n:  # final sequence carries literals only
-            break
-        if i + 2 > n:
-            raise ValueError("lz4 block: truncated match offset")
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0 or offset > len(dst):
-            raise ValueError(f"lz4 block: match offset {offset} outside output window")
-        mlen = (token & 0xF) + 4
-        if (token & 0xF) == 15:
-            while True:
-                b = src[i]
+            n += lit
+            if i >= len(src):  # the last sequence carries literals only
+                break
+            off = src[i] | src[i + 1] << 8
+            i += 2
+            if not 0 < off <= n:
+                raise ValueError(f"lz4 block: match offset {off} at output byte {n}")
+            mlen = (token & 15) + 4
+            if mlen == 19:
+                while src[i] == 255:
+                    mlen += 255
+                    i += 1
+                mlen += src[i]
                 i += 1
-                mlen += b
-                if b != 255:
-                    break
-        start = len(dst) - offset
-        if offset >= mlen:
-            dst += dst[start : start + mlen]
-        else:  # overlapping match: the trailing `offset` bytes repeat
-            pat = bytes(dst[start:])
-            dst += (pat * (mlen // offset + 1))[:mlen]
-    if len(dst) != dst_size:
-        raise ValueError(f"lz4 block: decoded {len(dst)}B, expected {dst_size}B")
-    return bytes(dst)
+            n += mlen
+    except IndexError:
+        raise ValueError("lz4 block: truncated sequence") from None
+    if i > len(src):
+        raise ValueError("lz4 block: truncated literals")
+    if n != dst_size:
+        raise ValueError(f"lz4 block: decodes to {n}B, cannot decode to {dst_size}B")
+    return _native("lz4_raw", src, dst_size)
 
 
 def _snappy_decompress(src: bytes) -> bytes:
-    """Raw snappy block decode (the public snappy format: leading
-    uncompressed-length varint, then 2-bit-tagged literal/copy
-    elements). Pure stdlib; used for blosc's snappy inner codec."""
-    n = 0
-    shift = 0
-    i = 0
-    while True:
-        if i >= len(src):
-            raise ValueError("snappy: truncated length varint")
-        b = src[i]
-        i += 1
+    """Raw snappy block decode (leading uncompressed-length varint, then
+    tagged elements); used for blosc's snappy inner codec. libsnappy
+    rejects a payload that does not decode to exactly the declared
+    length."""
+    n = shift = 0
+    for b in src[:5]:
         n |= (b & 0x7F) << shift
-        if not (b & 0x80):
+        if not b & 0x80:
             break
         shift += 7
-        if shift > 35:
-            raise ValueError("snappy: length varint too long")
-    dst = bytearray()
-    while i < len(src):
-        tag = src[i]
-        i += 1
-        t = tag & 3
-        if t == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                if i + nb > len(src):
-                    raise ValueError("snappy: truncated literal length")
-                ln = int.from_bytes(src[i : i + nb], "little")
-                i += nb
-            ln += 1
-            if i + ln > len(src):
-                raise ValueError("snappy: literal run past end of input")
-            dst += src[i : i + ln]
-            i += ln
-            continue
-        if t == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | src[i]
-            i += 1
-        elif t == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(src[i : i + 2], "little")
-            i += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(src[i : i + 4], "little")
-            i += 4
-        if off == 0 or off > len(dst):
-            raise ValueError(f"snappy: copy offset {off} outside output window")
-        start = len(dst) - off
-        if off >= ln:
-            dst += dst[start : start + ln]
-        else:  # overlapping copy repeats the trailing `off` bytes
-            pat = bytes(dst[start:])
-            dst += (pat * (ln // off + 1))[:ln]
-    if len(dst) != n:
-        raise ValueError(f"snappy: decoded {len(dst)}B, declared {n}B")
-    return bytes(dst)
+    else:
+        raise ValueError("snappy: truncated or overlong length varint")
+    if 3 * n > 64 * len(src):  # a 3-byte copy element yields at most 64
+        raise ValueError(f"snappy: {len(src)}B cannot decode to the declared {n}B")
+    try:
+        return _native("snappy", src, n)
+    except ValueError as e:
+        raise ValueError(f"{e} (declared length {n}B)") from None
+
+
+def zstd_decompress(data: bytes) -> bytes:
+    """Decode one or more concatenated zstd frames (skippable frames
+    included; content checksums verified). libzstd's streaming reader
+    needs no content size, which frames written from a pipe omit."""
+    if data[:4] == _ZSTD_MAGIC:
+        if len(data) > 4 and data[4] & 3:  # frame header's dictionary-ID flag
+            raise NotImplementedError("zstd dictionaries are not supported")
+    elif len(data) >= 4 and int.from_bytes(data[:4], "little") & ~0xF != _ZSTD_SKIPPABLE:
+        raise ValueError(f"zstd: bad frame magic {data[:4].hex()}")
+    try:
+        return pa.CompressedInputStream(pa.BufferReader(data), "zstd").read()
+    except _NATIVE_ERRORS as e:
+        raise ValueError(f"zstd: {e}") from None
 
 
 def _looks_like_zlib(payload: bytes) -> bool:
@@ -250,10 +240,11 @@ def _byte_unshuffle(buf: bytes, typesize: int) -> bytes:
 
 def blosc_decompress(chunk: bytes) -> bytes:
     """Decode one blosc1 container (any block layout a conforming
-    encoder may choose, split or unsplit). Inner codecs decoded
-    stdlib-only: zlib, lz4 (numcodecs' default — the real-world
-    ERA5-mirror layout), snappy, and zstd. blosclz payloads and the
-    bit-shuffle filter raise gated errors naming the library branch.
+    encoder may choose, split or unsplit). Inner codecs: zlib, lz4
+    (numcodecs' default — the real-world ERA5-mirror layout), snappy,
+    and zstd, the last three native through pyarrow. blosclz payloads
+    and the bit-shuffle filter raise gated errors naming the library
+    branch.
 
     Split handling: modern c-blosc (>= 1.11 FORWARD_COMPAT) splits
     lz4/blosclz blocks into ``typesize`` streams and never splits
@@ -279,7 +270,7 @@ def blosc_decompress(chunk: bytes) -> bytes:
         # Bit-transpose is not reproducible from public docs alone with
         # confidence (c-blosc delegates to the bitshuffle library's SSE/
         # AVX kernels whose scalar fallback has subtle padding rules), so
-        # the stdlib path stays gated — but when numcodecs IS installed
+        # the built-in path stays gated — but when numcodecs IS installed
         # its c-blosc binding decodes the whole container, bitshuffle
         # included. Optional-import branch, same pattern as RealEEClient.
         try:
@@ -288,15 +279,15 @@ def blosc_decompress(chunk: bytes) -> bytes:
             raise NotImplementedError(
                 "blosc bit-shuffle filter needs the bitshuffle/c-blosc "
                 "library (pip install numcodecs); only the byte-shuffle and "
-                "no-shuffle filters are stdlib-decodable"
+                "no-shuffle filters decode without it"
             ) from None
         return bytes(numcodecs.Blosc().decode(bytes(chunk)))[:nbytes]
     codec = _BLOSC_CODEC_NAMES.get((flags >> 5) & 0x7, f"code{(flags >> 5) & 0x7}")
     if codec not in ("zlib", "lz4", "snappy", "zstd"):
         raise NotImplementedError(
             f"blosc inner codec {codec!r} requires the c-blosc/python-blosc "
-            "library; blosc-zlib, blosc-lz4 and blosc-snappy chunks are "
-            "stdlib-decodable (re-encode the store with one of those cnames, "
+            "library; blosc-zlib, blosc-lz4, blosc-snappy and blosc-zstd chunks "
+            "decode without it (re-encode the store with one of those cnames, "
             "or install blosc and route decode through it)"
         )
     typesize = typesize or 1
@@ -357,17 +348,12 @@ def blosc_decompress(chunk: bytes) -> bytes:
                 elif codec == "snappy":
                     try:
                         block += _snappy_decompress(payload)
-                    except (ValueError, IndexError):
+                    except ValueError:
                         block += payload  # raw-stored split
                 elif codec == "zstd":
                     # c-blosc wraps each split in a zstd frame; a
                     # payload without the frame magic is raw-stored
-                    if payload[:4] == b"\x28\xb5\x2f\xfd":
-                        from .zstd_codec import zstd_decompress
-
-                        block += zstd_decompress(payload)
-                    else:
-                        block += payload
+                    block += zstd_decompress(payload) if payload[:4] == _ZSTD_MAGIC else payload
                 else:
                     block += payload  # raw-stored split
         if len(block) != neblock:
@@ -464,8 +450,6 @@ def _decompress(buf: bytes, compressor: dict | None) -> bytes:
 
         return gzip.decompress(buf)
     if compressor.get("id") == "zstd":
-        from .zstd_codec import zstd_decompress
-
         return zstd_decompress(buf)
     if compressor.get("id") == "blosc":
         return blosc_decompress(buf)
@@ -719,7 +703,7 @@ def _v3_normalize(cfg: dict) -> tuple[dict, dict]:
         if c.get("name") == "gzip":
             compressor = {"id": "gzip", "level": c.get("configuration", {}).get("level", 1)}
         elif c.get("name") == "zstd":
-            compressor = {"id": "zstd"}  # decode-only (stdlib RFC 8878 reader)
+            compressor = {"id": "zstd"}  # decode-only (pyarrow's libzstd)
         else:
             raise NotImplementedError(f"unsupported v3 codec {c.get('name')!r}")
     za = {
@@ -911,18 +895,23 @@ def open_zarr_v2(store: str) -> ChunkedDatasetMeta:
 
 def decode_chunk(store: str, var: str, za: dict, key: tuple[int, int, int]) -> np.ndarray:
     """Read one chunk file → full padded chunk array (caller slices the
-    valid extent on edge chunks). Raw/zlib/gzip codecs; C order; v2
-    dotted or v3 ``c/``-prefixed chunk keys."""
-    path = os.path.join(store, var, _chunk_key(za, key))
+    valid extent on edge chunks). Every compressor ``_decompress``
+    reads, plus v3 shards; C order; v2 dotted or v3 ``c/``-prefixed
+    chunk keys. A chunk that fails to decode raises ValueError naming
+    the store, variable and chunk key."""
+    chunk_key = _chunk_key(za, key)
     if za.get("order", "C") != "C" or za.get("filters"):
         raise NotImplementedError("only C-order unfiltered zarr v2 chunks supported")
     comp = za["compressor"]
-    if comp and comp.get("id") == "sharding_indexed":
-        with open(path, "rb") as f:
-            return _decode_shard(f.read(), za)
-    with open(path, "rb") as f:
-        buf = _decompress(f.read(), comp)
-    return np.frombuffer(buf, dtype=np.dtype(za["dtype"])).reshape(za["chunks"])
+    with open(os.path.join(store, var, chunk_key), "rb") as f:
+        raw = f.read()
+    try:
+        if comp and comp.get("id") == "sharding_indexed":
+            return _decode_shard(raw, za)
+        buf = _decompress(raw, comp)
+        return np.frombuffer(buf, dtype=np.dtype(za["dtype"])).reshape(za["chunks"])
+    except _DECODE_ERRORS as e:
+        raise ValueError(f"zarr store {store}: variable {var!r} chunk {chunk_key}: {e}") from e
 
 
 _CRC32C_TABLE = None
@@ -1019,8 +1008,11 @@ def _decode_shard(buf: bytes, za: dict) -> np.ndarray:
         off_i, nb_i = int(off), int(nb)
         if off_i + nb_i > len(buf):
             raise ValueError(f"inner chunk {flat} range beyond shard")
-        inner = _decompress(buf[off_i : off_i + nb_i], comp["inner_compressor"])
-        arr = np.frombuffer(inner, dtype=dt).reshape(inner_shape)
+        try:
+            inner = _decompress(buf[off_i : off_i + nb_i], comp["inner_compressor"])
+            arr = np.frombuffer(inner, dtype=dt).reshape(inner_shape)
+        except _DECODE_ERRORS as e:
+            raise ValueError(f"inner chunk {flat}: {e}") from e
         pos = np.unravel_index(flat, grid)
         sl = tuple(
             slice(p * i, (p + 1) * i) for p, i in zip(pos, inner_shape)
