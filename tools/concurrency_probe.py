@@ -25,10 +25,12 @@ Prints ``name CONC_OK`` per query per round; exit 1 on any divergence.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_QUERIES = [
     "q1_pricing_summary",          # shuffle-heavy money aggregate

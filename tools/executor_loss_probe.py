@@ -30,7 +30,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_QUERIES = [
     # shuffle-heavy agg, broadcast joins, Arrow kernel, LSH lanes
@@ -80,7 +81,7 @@ def main() -> int:
         SparkSession.builder.master("local-cluster[2,4,2048]")
         .config("spark.ui.enabled", "false")
         .config("spark.executor.memory", "1500m")
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .config("spark.sql.shuffle.partitions", "16")
         .getOrCreate()
     )

@@ -30,9 +30,11 @@ RETRY_DIVERGED <h_plain> <h_injected>``; exits 1 on any divergence.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_QUERIES = [
     # agg-heavy scan, joins + anti-join, float/window stats, LSH md5

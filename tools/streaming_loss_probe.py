@@ -41,7 +41,8 @@ import tempfile
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_SOURCE_FILES = 20
 WATERMARK = "1 hour"
@@ -84,7 +85,7 @@ def main() -> int:  # noqa: PLR0915
         SparkSession.builder.master("local-cluster[2,4,2048]")
         .config("spark.ui.enabled", "false")
         .config("spark.executor.memory", "1500m")
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )

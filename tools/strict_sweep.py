@@ -33,6 +33,8 @@ import os
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -52,7 +54,7 @@ def main() -> int:
     )
     args = ap.parse_args()
     sf = args.sf_dir
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -73,9 +75,7 @@ def main() -> int:
         # separate executor JVMs spawn their own Python workers, which
         # must import weather_tools_spark (driver-side sys.path edits
         # don't propagate across the process boundary)
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", "/root/repo"
-        ).config("spark.executor.memory", "6g")
+        builder = builder.config("spark.executorEnv.PYTHONPATH", REPO).config("spark.executor.memory", "6g")
     spark = builder.getOrCreate()
     # Silence ONLY the WindowExec "No Partition Defined" advisory
     # (VERDICT r11 item 8): every unpartitioned window a registry query

@@ -30,10 +30,12 @@ import argparse
 import datetime as _dt
 import json
 import math
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TIME_BUCKETS = {
     "time_date": "%Y-%m-%d",

@@ -16,6 +16,14 @@ The knobs below are chosen for the 100 TB design point and merely
   reading nanos as LongType keeps the native columnar scan + filter
   pushdown, and ``catalog.load_table`` converts to a microsecond
   TimestampType column (DuckDB performs the same ns→µs truncation).
+- ``get_spark`` on a ``local*`` master starts Python workers from this
+  package's daemon (``spark.python.daemon.module`` =
+  ``weather_tools_spark.worker_daemon``), whose forked workers skip the
+  per-task re-read of Spark's zip archives, and puts
+  the package root on the workers' ``PYTHONPATH`` so the daemon imports
+  at launch. ``configure`` does not select it: a session built elsewhere
+  (the external driver, ``tools/strict_sweep.py``) cannot guarantee its
+  workers import the package, so it keeps the stock daemon.
 """
 
 from __future__ import annotations
@@ -68,6 +76,14 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, master: str | None = None) -> Sp
     ``master`` defaults to ``local[N]`` with N = SPARK_GRAFT_CPUS or the
     machine's core count; on a cluster, leave ``master`` unset and let
     spark-submit decide.
+
+    On every ``local*`` master the Python daemon is
+    ``weather_tools_spark.worker_daemon``, which re-reads a zip archive
+    only when it changed, and the package root goes on the workers'
+    ``PYTHONPATH`` so that daemon imports. Only here, not in
+    ``configure``: other masters and sessions built elsewhere cannot
+    guarantee the package imports at daemon launch, so they keep
+    ``pyspark.daemon``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -77,17 +93,19 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, master: str | None = None) -> Sp
     if master:
         builder = builder.master(master)
         builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    if master and master.startswith("local-cluster"):
-        # real separate executor JVMs: their Python workers must import
-        # this package (driver-side sys.path edits don't cross the
-        # process boundary), and executor memory must fit the worker
-        # grant declared in the master string
+    if master and master.startswith("local"):
+        # Python workers must import this package (driver-side sys.path
+        # edits don't cross the process boundary): the daemon that forks
+        # them is this package's, so every worker skips the per-task
+        # zip-directory re-reads (see worker_daemon)
         builder = builder.config(
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ).config(
-            "spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "6g")
-        )
+        ).config("spark.python.daemon.module", "weather_tools_spark.worker_daemon")
+    if master and master.startswith("local-cluster"):
+        # real separate executor JVMs: executor memory must fit the
+        # worker grant declared in the master string
+        builder = builder.config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "6g"))
     spark = configure(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
