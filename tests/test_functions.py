@@ -78,19 +78,19 @@ def test_rewrite_skips_string_literals():
     q5 = "SELECT time_date, AVG(v) FROM t WHERE tag = 'time_date' GROUP BY time_date"
     out5 = xql.rewrite_time_buckets(q5)
     assert "tag = 'time_date'" in out5  # literal untouched
-    assert "date_format(time, 'yyyy-MM-dd') AS time_date" in out5
+    assert "date_format(CAST(CAST(time AS TIMESTAMP) AS DATE), 'yyyy-MM-dd') AS time_date" in out5
 
 
 def test_rewrite_time_buckets():
     out = xql.rewrite_time_buckets("SELECT time_date, AVG(v) FROM t GROUP BY time_date", time_col="ts")
-    assert "date_format(ts, 'yyyy-MM-dd') AS time_date" in out
-    # GROUP BY references the select alias (Spark resolves group-by aliases)
-    assert out.endswith("GROUP BY time_date")
+    assert "date_format(CAST(CAST(ts AS TIMESTAMP) AS DATE), 'yyyy-MM-dd') AS time_date" in out
+    # GROUP BY holds the typed DATE key; the label is formatted per group
+    assert out.endswith("GROUP BY CAST(CAST(ts AS TIMESTAMP) AS DATE)")
 
 
 def test_rewrite_time_buckets_groupby_only():
     out = xql.rewrite_time_buckets("SELECT count(*) FROM t GROUP BY time_month", time_col="ts")
-    assert out.endswith("GROUP BY date_format(ts, 'yyyy-MM')")
+    assert out.endswith("GROUP BY trunc(CAST(CAST(ts AS TIMESTAMP) AS DATE), 'MM')")
 
 
 def test_run_query_end_to_end(spark, sf_dir):

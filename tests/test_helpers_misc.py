@@ -57,7 +57,8 @@ def test_xql_full_rewrite_composes():
     out = xql.rewrite(sql, time_col="time")
     assert "latitude >= 6.55" in out  # country rewrite
     assert "AVG(d2m) AS avg_d2m" in out  # quoted agg naming
-    assert "date_format(time, 'yyyy-MM') AS time_month" in out  # bucket alias
+    # bucket alias over the typed month key
+    assert "date_format(trunc(CAST(CAST(time AS TIMESTAMP) AS DATE), 'MM'), 'yyyy-MM') AS time_month" in out
     assert "country" not in out
 
 

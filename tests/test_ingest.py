@@ -86,14 +86,13 @@ def test_chunk_manifest_enumeration(spark):
 
 def test_chunk_pruning_reduces_chunks(spark):
     meta = _meta()
-    manifest = Z.chunk_manifest(spark, meta)
     pruned = Z.prune_chunks(
-        manifest,
+        Z.chunk_table(meta),
         time_range=("2018-01-01 00:00:00", "2018-01-01 12:00:00"),
         lat_range=(48.0, 49.0),
         lon_range=(-108.0, -107.0),
     )
-    assert pruned.count() == 1  # one time chunk × one lat chunk × one lon chunk
+    assert len(pruned) == 1  # one time chunk × one lat chunk × one lon chunk
 
 
 def test_merge_normalized_wide_schema(spark):

@@ -915,16 +915,11 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_per_file_plans_one_roundrobin_exchange_one_mapinpandas(spark, tmp_path, monkeypatch):
-    """A GRIB glob read through open_dataset, ingest() and the GRIB
-    split all run the shared one-task-per-file plan (opener.map_files):
-    one round-robin Exchange feeding one MapInPandas."""
+def _grib_glob(tmp_path) -> list[str]:
+    """Three one-day, one-variable 2x2 GRIB2 files."""
     import numpy as np
 
-    from weather_tools_spark.pipeline import splitter
     from weather_tools_spark.sources import grib2 as G2
-    from weather_tools_spark.sources import hypercube as H
-    from weather_tools_spark.sources import opener as OP
 
     lats, lons = np.array([49.0, 48.75]), np.array([2.0, 2.25])
     paths = []
@@ -933,19 +928,115 @@ def test_per_file_plans_one_roundrobin_exchange_one_mapinpandas(spark, tmp_path,
         G2.write_grib2(p, [{"param": "d2m", "ref_time": f"2024-06-0{i + 1}", "lats": lats,
                             "lons": lons, "values": np.full((2, 2), float(i))}])
         paths.append(p)
+    return paths
+
+
+def _zarr_store(spark, path: str):
+    """An 8-step, 3x4 Zarr v2 store in 4 x 2 x 2 = 16 chunks; returns
+    its template."""
+    from weather_tools_spark.sources import zarr_scan as ZS
+    from weather_tools_spark.sources import zarr_v2 as Z2
+
+    meta = ZS.ChunkedDatasetMeta(
+        uri=path, times=[f"2024-01-01 {h:02d}:00:00" for h in range(8)],
+        lats=[50.0, 49.75, 49.5], lons=[10.0, 10.25, 10.5, 10.75],
+        chunk_time=2, chunk_lat=2, chunk_lon=2, variables=("d2m",),
+    )
+    rows = spark.range(8 * 3 * 4).selectExpr(
+        "timestamp_seconds(1704067200 + (id div 12) * 3600) AS time",
+        "50.0 - ((id div 4) % 3) * 0.25 AS latitude",
+        "10.0 + (id % 4) * 0.25 AS longitude",
+        "cast(id AS double) AS d2m",
+    )
+    Z2.write_zarr_v2(rows, path, meta)
+    return Z2.open_zarr_v2(path)
+
+
+def _assert_spread_decode(spark, name, df, units: int) -> None:
+    """``df`` decodes ``units`` whole units through one MapInPandas fed
+    by a Range of min(units, defaultParallelism) partitions — no
+    exchange before the decode — and every partition gets work."""
+    from pyspark.sql import functions as F
+
+    tasks = min(units, spark.sparkContext.defaultParallelism)
+    plan = _executed(df)
+    assert "Exchange" not in plan, (name, plan)
+    assert plan.count("MapInPandas") == 1, (name, plan)
+    assert f"Range (0, {units}, step=1, splits={tasks})" in plan, (name, plan)
+    assert df.select(F.spark_partition_id()).distinct().count() == tasks, name
+
+
+def test_per_unit_plans_no_exchange_before_mapinpandas(spark, tmp_path, monkeypatch):
+    """A GRIB glob and a Zarr store read through open_dataset, ingest()
+    and the GRIB split all run the shared read plan (opener.map_files):
+    the unit list is indexed by a Range split into min(units,
+    defaultParallelism) partitions, none empty, feeding one MapInPandas
+    with no Exchange in between."""
+    from weather_tools_spark.pipeline import splitter
+    from weather_tools_spark.sources import hypercube as H
+    from weather_tools_spark.sources import opener as OP
+
+    paths = _grib_glob(tmp_path)
+    _zarr_store(spark, str(tmp_path / "store.zarr"))
     frames = {
-        "open_dataset": OP.open_dataset(spark, str(tmp_path / "era5-*.grib2")),
-        "ingest": H.ingest(spark, paths),
+        "open_dataset": (OP.open_dataset(spark, str(tmp_path / "era5-*.grib2")), 3),
+        "open_dataset_zarr": (OP.open_dataset(spark, str(tmp_path / "store.zarr")), 16),
+        "ingest": (H.ingest(spark, paths), 3),
     }
     real = OP.map_files
     built = []
     monkeypatch.setattr(OP, "map_files", lambda *a: built.append(real(*a)) or built[-1])
     assert splitter.split_files_partitioned(spark, paths, str(tmp_path / "split")) == 3
-    frames["split"] = built[0]
+    frames["split"] = (built[0], 3)
+    for name, (df, units) in frames.items():
+        _assert_spread_decode(spark, name, df, units)
+
+
+def test_time_pruned_zarr_scan_spreads_kept_chunks(spark, tmp_path):
+    """Pruning happens on the driver: a time range that keeps 2 of the
+    4 time chunks decodes exactly those 8 chunks, spread over every
+    task, and returns exactly the in-range cells."""
+    from weather_tools_spark.sources import zarr_scan as ZS
+
+    meta = _zarr_store(spark, str(tmp_path / "store.zarr"))
+    tr = ("2024-01-01 02:00:00", "2024-01-01 05:00:00")
+    df = ZS.scan(spark, meta, time_range=tr, decoder="zarr2", include_uri=False)
+    _assert_spread_decode(spark, "pruned", df, 8)
+    assert df.count() == 3 * 3 * 4
+
+
+def test_flagship_xql_groups_on_a_date_key(spark, sf_dir, tmp_path):
+    """The flagship daily average, through the SQL surface over an
+    opened GRIB glob and as the registry's DataFrame form: the partial
+    HashAggregate groups on one DateType key, and date_format appears
+    only at or above the final aggregate (once per group)."""
+    from weather_tools_spark.plans import xql
+    from weather_tools_spark.sources import opener as OP
+
+    _grib_glob(tmp_path)
+    OP.open_dataset(spark, str(tmp_path / "era5-*.grib2"), view="era5_flagship")
+    frames = {
+        "sql": xql.run_query(
+            spark, "SELECT time_date, AVG('d2m') FROM era5_flagship GROUP BY time_date"
+        ),
+        "registry": SPARK["xql_flagship_weather_query"](spark, sf_dir),
+    }
     for name, df in frames.items():
-        plan = _executed(df)
-        assert plan.count("Exchange RoundRobinPartitioning") == 1, (name, plan)
-        assert plan.count("MapInPandas") == 1, (name, plan)
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getName().endswith("AdaptiveSparkPlanExec"):
+            plan = plan.executedPlan()
+        nodes, stack = [], [plan]
+        while stack:  # parents before children
+            node = stack.pop()
+            nodes.append(node)
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        aggs = [i for i, n in enumerate(nodes) if n.nodeName() == "HashAggregate"]
+        assert len(aggs) == 2, (name, plan.toString())
+        keys = nodes[aggs[-1]].groupingExpressions()
+        assert [keys.apply(i).dataType().typeName() for i in range(keys.size())] == ["date"]
+        formats = ["date_format" in n.verboseStringWithOperatorId() for n in nodes]
+        assert any(formats[: aggs[0] + 1]) and not any(formats[aggs[0] + 1 :]), (name, formats)
 
 
 def test_file_sinks_one_group_write(spark, tmp_path, monkeypatch):
@@ -1012,13 +1103,15 @@ def _mv_job_count(spark, tmp_path, *flags) -> int:
 def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
     """mv --zarr holds one decode for the sink's lifetime: one aggregate
     job derives all three axes and the chunk writer reads the held rows.
-    7 jobs on this input; deriving each axis with its own
-    distinct/sort scan and decoding again for the write took 19."""
-    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 7
+    6 jobs on this input; deriving each axis with its own
+    distinct/sort scan and decoding again for the write took 19, and an
+    exchange in front of the decode took one more."""
+    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 6
 
 
 def test_parquet_sink_counts_without_rescan_job_count(spark, tmp_path):
     """mv's parquet sink reads its row count from an observation on the
-    write: 2 jobs on this input; reading the output back to count it
-    took 5."""
-    assert _mv_job_count(spark, tmp_path) == 2
+    write: 1 job on this input (the write); reading the output back to
+    count it took 5, and an exchange in front of the decode took one
+    more."""
+    assert _mv_job_count(spark, tmp_path) == 1

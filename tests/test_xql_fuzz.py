@@ -10,6 +10,7 @@ failing seed from a tool run reproduces exactly under pytest."""
 from __future__ import annotations
 
 import random
+import re
 
 import duckdb
 import pytest
@@ -47,5 +48,8 @@ def test_grammar_covers_the_rewrite_surface(duck):
     assert "city = '" in corpus or "country = '" in corpus
     assert "AVG('" in corpus or "SUM('" in corpus or "MIN('" in corpus
     assert "time_date" in corpus and "time_month" in corpus
+    assert "GROUP BY time_year" in corpus
+    # a bucket selected inside a derived table, ordered on outside
+    assert re.search(r"GROUP BY event_type, (time_\w+)\) s ORDER BY event_type, \1", corpus)
     assert "event_type <> '" in corpus  # literal traps present
     assert "GROUP BY" in corpus and "LIMIT" in corpus

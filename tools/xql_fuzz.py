@@ -287,21 +287,36 @@ class Gen:
         return xql, ansi
 
     def subquery_query(self) -> tuple[str, str]:
-        """Aggregate over a projected/filtered derived table — the
-        rewriter must leave inner-query structure intact."""
+        """Aggregate over a projected/filtered derived table, or a bucket
+        selected inside a derived table and ordered on outside — the
+        rewriter must leave inner-query structure intact and let each
+        block's SELECT list name its own buckets."""
         r = self.rng
         wx, wa = self.where()
-        gx = r.choice(["event_type", "time_month"])
-        if gx == "time_month":
-            sel_x = f"time_month, avg(value) AS avg_value, COUNT(*) AS n"
-            sel_a = f"strftime(\"time\", '%Y-%m') AS time_month, avg(value) AS avg_value, count(*) AS n"
+        gx = r.choice(["event_type", "time_month", "time_year", "inner"])
+        if gx in TIME_BUCKETS:
+            fmt = TIME_BUCKETS[gx]
+            sel_x = f"{gx}, avg(value) AS avg_value, COUNT(*) AS n"
+            sel_a = f"strftime(\"time\", '{fmt}') AS {gx}, avg(value) AS avg_value, count(*) AS n"
             xql = (
                 f"SELECT {sel_x} FROM (SELECT * FROM weather{wx}) t"
-                f" GROUP BY time_month ORDER BY time_month"
+                f" GROUP BY {gx} ORDER BY {gx}"
             )
             ansi = (
                 f"SELECT {sel_a} FROM (SELECT * FROM weather{wa}) t"
-                f" GROUP BY time_month ORDER BY time_month"
+                f" GROUP BY {gx} ORDER BY {gx}"
+            )
+        elif gx == "inner":
+            b = r.choice(sorted(TIME_BUCKETS))
+            fmt = TIME_BUCKETS[b]
+            xql = (
+                f"SELECT * FROM (SELECT event_type, {b}, count(*) AS n FROM weather{wx}"
+                f" GROUP BY event_type, {b}) s ORDER BY event_type, {b}"
+            )
+            ansi = (
+                f"SELECT * FROM (SELECT event_type, strftime(\"time\", '{fmt}') AS {b},"
+                f" count(*) AS n FROM weather{wa}"
+                f" GROUP BY event_type, strftime(\"time\", '{fmt}')) s ORDER BY event_type, {b}"
             )
         else:
             xql = (

@@ -455,7 +455,7 @@ def zarr_pruned_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/zarr_v2.write_zarr_v2 — genuine .zarray/.zmetadata JSON +
     C-order compressed chunk files), reopen it from consolidated
     metadata alone, run the CHUNK-PRUNED scan with the stdlib decoder
-    (np.frombuffer + zlib, zarr_scan._decode_specs(decoder='zarr2')),
+    (np.frombuffer + zlib, zarr_scan._chunk_decoder(decoder='zarr2')),
     and aggregate the decoded values per variable. Cell values are an
     exact float64 function of the grid indices, so the DuckDB oracle
     recomputes the same sums arithmetically — a hash gate over the

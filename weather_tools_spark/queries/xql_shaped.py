@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from weather_tools_spark.catalog import events_time_between, load_table
 from weather_tools_spark.functions.geo import bbox_predicate, geo_entity_bbox
+from weather_tools_spark.plans.xql import bucket_agg, run_query
 from weather_tools_spark.queries import register
 from weather_tools_spark.queries.core_sql import _davg, _dsum_round
 
@@ -71,11 +72,9 @@ def xql_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     format apply.py:56-60). Output column named ``{func}_{var}``
     (apply.py:155)."""
     ev = load_table(spark, "events", sf_dir)
-    return (
-        ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("time_date"))
-        .agg(F.round(_davg(F.col("value")), 6).alias("avg_value"))
-        .orderBy("time_date")
-    )
+    return bucket_agg(
+        ev, "time_date", "ts", F.round(_davg(F.col("value")), 6).alias("avg_value")
+    ).orderBy("time_date")
 
 
 @register(
@@ -96,17 +95,14 @@ def xql_monthly_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly bucket + multiple aggregate functions per query
     (apply.py:142-156), output names ``{func}_{var}``."""
     ev = load_table(spark, "events", sf_dir)
-    return (
-        ev.groupBy(F.date_format("ts", "yyyy-MM").alias("time_month"))
-        .agg(
-            F.round(_davg(F.col("value")), 6).alias("avg_value"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-            F.round(F.min("value"), 4).alias("min_value"),
-            F.round(F.max("value"), 4).alias("max_value"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("time_month")
-    )
+    return bucket_agg(
+        ev, "time_month", "ts",
+        F.round(_davg(F.col("value")), 6).alias("avg_value"),
+        F.round(F.sum("value"), 4).alias("sum_value"),
+        F.round(F.min("value"), 4).alias("min_value"),
+        F.round(F.max("value"), 4).alias("max_value"),
+        F.count(F.lit(1)).alias("n"),
+    ).orderBy("time_month")
 
 
 @register(
@@ -126,14 +122,12 @@ def xql_yearly_bucket_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate (user_id) is aggregated away — the reference's implicit
     'squeeze' semantics (apply.py:205-222) made explicit."""
     ev = load_table(spark, "events", sf_dir)
-    return (
-        ev.groupBy(F.date_format("ts", "yyyy").alias("time_year"), F.col("event_type"))
-        .agg(
-            F.round(F.sum("value"), 4).alias("sum_value"),
-            F.round(F.sum("user_id").cast("double") / F.count("user_id"), 6).alias("avg_user_id"),
-        )
-        .orderBy("time_year", "event_type")
-    )
+    return bucket_agg(
+        ev, "time_year", "ts",
+        F.round(F.sum("value"), 4).alias("sum_value"),
+        F.round(F.sum("user_id").cast("double") / F.count("user_id"), 6).alias("avg_user_id"),
+        by=("event_type",),
+    ).orderBy("time_year", "event_type")
 
 
 @register(
@@ -244,12 +238,10 @@ def xql_flagship_weather_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("user_id") % 180) - 90.0 + 0.25).alias("latitude"),
         ((F.col("event_id") % 360) - 180.0 + 0.5).alias("longitude"),
     )
-    return (
-        geo.filter(bbox_predicate(F.col("latitude"), F.col("longitude"), _INDIA))
-        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("time_date"))
-        .agg(F.round(_davg(F.col("value")), 6).alias("avg_value"))
-        .orderBy("time_date")
-    )
+    return bucket_agg(
+        geo.filter(bbox_predicate(F.col("latitude"), F.col("longitude"), _INDIA)),
+        "time_date", "ts", F.round(_davg(F.col("value")), 6).alias("avg_value"),
+    ).orderBy("time_date")
 
 
 @register(
@@ -268,10 +260,8 @@ def xql_sql_surface_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (quoted agg args + time_date shorthand) is rewritten by
     plans.xql and executed via spark.sql — the full §3.1 lifecycle in
     one oracle-checked query."""
-    from weather_tools_spark.plans import xql as X
-
     load_table(spark, "events", sf_dir).createOrReplaceTempView("events")
-    df = X.run_query(
+    df = run_query(
         spark,
         "SELECT time_date, AVG('value'), COUNT(*) AS n FROM events "
         "GROUP BY time_date ORDER BY time_date",

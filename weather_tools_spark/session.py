@@ -45,6 +45,18 @@ def default_parallelism() -> int:
     return os.cpu_count() or 4
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    16g, or about two thirds of physical memory on a smaller host (in
+    local mode the driver JVM runs every task, so its heap must leave
+    the host room for the Python workers)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf names here
+        return "16g"
+    return f"{min(16 * 1024, phys * 2 // 3 // 2**20)}m"
+
+
 def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
     """Apply the engine's standard config to any builder (including the
     driver-provided one)."""
@@ -75,7 +87,8 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, master: str | None = None) -> Sp
 
     ``master`` defaults to ``local[N]`` with N = SPARK_GRAFT_CPUS or the
     machine's core count; on a cluster, leave ``master`` unset and let
-    spark-submit decide.
+    spark-submit decide. With a master set, the driver memory is
+    SPARK_GRAFT_DRIVER_MEM, else :func:`default_driver_memory`.
 
     On every ``local*`` master the Python daemon is
     ``weather_tools_spark.worker_daemon``, which re-reads a zip archive
@@ -92,7 +105,10 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, master: str | None = None) -> Sp
         master = f"local[{default_parallelism()}]"
     if master:
         builder = builder.master(master)
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     if master and master.startswith("local"):
         # Python workers must import this package (driver-side sys.path
         # edits don't cross the process boundary): the daemon that forks

@@ -19,10 +19,10 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
 - system columns data_import_time / data_uri / data_first_step
   (bq.py:49-54, 377-379) → ``with_system_columns``.
 
-Spark plan shape: paths-DF → repartition(paths) → mapInPandas(decode)
-(``opener.map_files``) → [filters] → join(broadcast(geo)) → sink. One
-file (or one zarr chunk) per task; no shuffle until an explicit
-sink/agg asks for one.
+Spark plan shape: range over the path list → mapInPandas(decode)
+(``opener.map_files``) → [filters] → join(broadcast(geo)) → sink.
+Whole files (or whole zarr chunks) per task; no shuffle until an
+explicit sink/agg asks for one.
 """
 
 from __future__ import annotations
@@ -260,8 +260,8 @@ def ingest(
 ) -> DataFrame:
     """File URIs → long-format row DataFrame.
 
-    The paths collection is repartitioned so each task decodes whole
-    files (the unit of I/O parallelism, exactly one shuffle-free stage);
+    The paths spread over the tasks so each task decodes whole files
+    (the unit of I/O parallelism, exactly one shuffle-free stage);
     decode emits Arrow batches via mapInPandas. At cluster scale the
     same plan applies with thousands of files per job.
     """

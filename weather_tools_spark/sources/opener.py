@@ -22,8 +22,11 @@ all against the stdlib codecs (no xarray/cfgrib/rasterio):
 
 Single-file formats probe only the file HEADER on the driver (variable
 names → output schema; the reference's metadata open) and decode on
-executors through :func:`map_files` — one task per file, whole-file
-decode, the plan ``hypercube.ingest`` and the file splitter share. The
+executors through :func:`map_files` — whole files spread over the
+tasks with no exchange before the decode, the plan the Zarr chunk
+scan, ``hypercube.ingest`` and the file splitter share. Range
+arguments mask the decoded frame inside the task, before the Arrow
+hand-off, and ``filter_cells`` stays the exact residual. The
 file sinks share the write side: :func:`grid_cubes` grids rows into
 NaN-filled cubes and :func:`write_buckets` serializes one whole file
 per time bucket on executors. The returned frame is plain long-format
@@ -49,7 +52,7 @@ from .grib1 import grib1_decode, is_grib1, list_params1
 from .grib2 import grib2_decode, is_grib2, list_params
 from .hdf5 import is_hdf5, list_variables_h5, nc4_decode
 from .netcdf3 import is_netcdf3, list_variables, nc3_decode
-from .zarr_scan import filter_cells
+from .zarr_scan import filter_cells, mask_cells
 from .zarr_v2 import ZMETADATA
 
 
@@ -122,21 +125,21 @@ def long_schema(columns: list[str]) -> str:
     return ", ".join(f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns)
 
 
-def map_files(spark: SparkSession, paths: list[str], run_one, schema) -> DataFrame:
-    """The one-task-per-file plan: the path list is the input frame,
-    repartitioned so whole files are the unit of parallelism, and
-    ``run_one(path)`` → pandas frame runs in mapInPandas on executors
-    (the driver touches at most a header)."""
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    )
+def map_files(spark: SparkSession, units: list, run_one, schema) -> DataFrame:
+    """The one read plan: ``run_one(unit)`` → pandas frame runs in
+    mapInPandas on executors, one whole unit (a file, or a Zarr chunk
+    key) at a time. The list rides in the task closure and a range
+    spreads its indices evenly over ``min(len(units),
+    defaultParallelism)`` partitions, none empty, so no exchange runs
+    before the decode (the driver touches at most a header)."""
+    k = max(1, min(len(units), spark.sparkContext.defaultParallelism))
 
     def gen(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                yield run_one(p)
+        for ids in batches:
+            for i in ids["id"]:
+                yield run_one(units[i])
 
-    return files.mapInPandas(gen, schema)
+    return spark.range(len(units), numPartitions=k).mapInPandas(gen, schema)
 
 
 def grid_cubes(pdf: pd.DataFrame, variables: list[str]):
@@ -191,7 +194,9 @@ def open_dataset(
     """Open any supported store/file as a long-format DataFrame;
     optionally register it as a temp view for the SQL surface. Range
     arguments prune CHUNKS for zarr stores (parquet row-group-style
-    min/max pruning) and apply as ordinary filters for file formats.
+    min/max pruning, on the driver), mask the decoded cells inside the
+    decode task, and apply again as ordinary filters (the exact
+    residual).
 
     ``variables`` is the projection pushdown (the reference's
     ``_only_target_vars``, weather_mv/loader_pipeline/util.py:159-191):
@@ -202,7 +207,7 @@ def open_dataset(
     pruned payloads never CF-unpack. Unknown names raise driver-side.
 
     ``uri`` may be a glob (``.../era5-*.grib2``): every match must be
-    the same format; one executor task decodes each whole file — the
+    the same format; executor tasks decode whole files — the
     reference's multi-file collection ingest (beam.Create(uris)).
 
     ``ee://`` URIs route to the EarthEngine connector
@@ -262,10 +267,14 @@ def open_dataset(
         from .datasource import _decoder_for
 
         decode_one, cols = _decoder_for(kind, uris[0], variables)
-        df = map_files(
-            spark, uris, lambda p: decode_one(p).reindex(columns=cols), long_schema(cols)
+
+        def run_one(path: str) -> pd.DataFrame:
+            rows = decode_one(path).reindex(columns=cols)
+            return mask_cells(rows, time_range, lat_range, lon_range)
+
+        df = filter_cells(
+            map_files(spark, uris, run_one, long_schema(cols)), time_range, lat_range, lon_range
         )
-        df = filter_cells(df, time_range, lat_range, lon_range)
     if view is not None:
         df.createOrReplaceTempView(view)
     return df

@@ -5,23 +5,25 @@ chunks (xql/src/xql/open.py:30-66, apply.py:285-286; xbeam
 DatasetToChunks in bq.py:419). Spark has no zarr datasource, so the
 engine plans scans the same way a columnar reader plans row-groups:
 
-1. build a *chunk manifest* DataFrame — one row per chunk, carrying the
+1. build a *chunk manifest* — one row per chunk, carrying the
    coordinate ranges the chunk covers (min/max per dimension);
-2. prune it with ordinary Catalyst predicates (compare the query's
-   coordinate ranges against chunk ranges — the zarr analog of parquet
-   row-group min/max pruning, SURVEY.md §4 'chunk-range pruning');
-3. hand surviving chunk specs to ``mapInPandas`` tasks that each decode
-   N whole chunks (one task = whole chunks, never a partial chunk).
+2. prune it by comparing the query's coordinate ranges against chunk
+   ranges — the zarr analog of parquet row-group min/max pruning,
+   SURVEY.md §4 'chunk-range pruning';
+3. spread the surviving chunk keys over ``mapInPandas`` tasks, with no
+   exchange in front, that each decode whole chunks (never a partial
+   chunk) and mask them to the query's ranges.
 
-The decode step needs a zarr reader, absent here — it is stubbed with a
-deterministic fake; planning, pruning and batch plumbing are real.
+The manifest is a small pandas frame built and pruned on the driver
+(``chunk_manifest`` gives it as a Spark DataFrame for the streaming
+spec files). The ``"fake"`` decoder is a deterministic stand-in for tests; the
+``"zarr2"`` decoder reads real Zarr v2/v3 stores (sources/zarr_v2.py).
 """
 
 from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -61,8 +63,9 @@ CHUNK_MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
-    """Enumerate chunk keys with their coordinate min/max ranges."""
+def chunk_table(meta: ChunkedDatasetMeta) -> pd.DataFrame:
+    """The chunk manifest on the driver: one :data:`CHUNK_MANIFEST_SCHEMA`
+    row per chunk, its key and the coordinate min/max ranges it covers."""
     rows = []
     nt, nla, nlo = len(meta.times), len(meta.lats), len(meta.lons)
     times = pd.to_datetime(meta.times)
@@ -78,40 +81,58 @@ def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
                         ti // meta.chunk_time,
                         lai // meta.chunk_lat,
                         loi // meta.chunk_lon,
-                        tchunk.min().to_pydatetime(),
-                        tchunk.max().to_pydatetime(),
+                        tchunk.min(),
+                        tchunk.max(),
                         float(min(lachunk)),
                         float(max(lachunk)),
                         float(min(lochunk)),
                         float(max(lochunk)),
                     )
                 )
-    return spark.createDataFrame(rows, CHUNK_MANIFEST_SCHEMA)
+    return pd.DataFrame(rows, columns=CHUNK_MANIFEST_SCHEMA.names)
+
+
+def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
+    """:func:`chunk_table` as a Spark DataFrame."""
+    return spark.createDataFrame(chunk_table(meta), CHUNK_MANIFEST_SCHEMA)
+
+
+def _time_bounds(time_range: tuple[str, str] | None):
+    """``time_range`` as tz-naive pandas timestamps widened to whole
+    microseconds, for masks and pruning on pandas frames; ``None`` when
+    there is no range, or a bound carries a zone or does not parse
+    (time is then left to :func:`filter_cells`)."""
+    if time_range is None:
+        return None
+    try:
+        lo, hi = (pd.Timestamp(t) for t in time_range)
+    except (TypeError, ValueError):
+        return None
+    if lo.tzinfo is not None or hi.tzinfo is not None:
+        return None
+    return lo.floor("us"), hi.ceil("us")
 
 
 def prune_chunks(
-    manifest: DataFrame,
+    manifest: pd.DataFrame,
     time_range: tuple[str, str] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Range-overlap pruning: a chunk survives iff its [min,max] range
-    intersects the predicate range on every constrained dimension —
-    exactly parquet row-group min/max semantics applied to chunks."""
-    out = manifest
-    if time_range is not None:
-        lo, hi = time_range
-        out = out.filter(
-            (F.col("time_max") >= F.lit(lo).cast("timestamp"))
-            & (F.col("time_min") < F.lit(hi).cast("timestamp"))
-        )
+) -> pd.DataFrame:
+    """Range-overlap pruning of a :func:`chunk_table`, on the driver: a
+    chunk survives iff its [min,max] range intersects the predicate
+    range on every constrained dimension — exactly parquet row-group
+    min/max semantics applied to chunks. A time bound that is not a
+    plain timestamp prunes nothing."""
+    keep = pd.Series(True, index=manifest.index)
+    bounds = _time_bounds(time_range)
+    if bounds is not None:
+        keep &= (manifest["time_max"] >= bounds[0]) & (manifest["time_min"] < bounds[1])
     if lat_range is not None:
-        lo, hi = lat_range
-        out = out.filter((F.col("lat_max") >= lo) & (F.col("lat_min") <= hi))
+        keep &= (manifest["lat_max"] >= lat_range[0]) & (manifest["lat_min"] <= lat_range[1])
     if lon_range is not None:
-        lo, hi = lon_range
-        out = out.filter((F.col("lon_max") >= lo) & (F.col("lon_min") <= hi))
-    return out
+        keep &= (manifest["lon_max"] >= lon_range[0]) & (manifest["lon_min"] <= lon_range[1])
+    return manifest[keep]
 
 
 def filter_cells(
@@ -133,6 +154,28 @@ def filter_cells(
     if lon_range is not None:
         rows = rows.filter(F.col("longitude").between(*lon_range))
     return rows
+
+
+def mask_cells(
+    pdf: pd.DataFrame,
+    time_range: tuple[str, str] | None = None,
+    lat_range: tuple[float, float] | None = None,
+    lon_range: tuple[float, float] | None = None,
+) -> pd.DataFrame:
+    """:func:`filter_cells` on a decoded pandas frame, run inside the
+    decode task so out-of-range cells never cross the Arrow hand-off.
+    It keeps every row ``filter_cells`` keeps (and, for a time bound
+    that is not a plain timestamp, masks no time), so ``filter_cells``
+    stays the exact residual."""
+    keep = pd.Series(True, index=pdf.index)
+    bounds = _time_bounds(time_range) if "time" in pdf.columns else None
+    if bounds is not None:
+        keep &= (pdf["time"] >= bounds[0]) & (pdf["time"] < bounds[1])
+    if lat_range is not None:
+        keep &= pdf["latitude"].between(*lat_range)
+    if lon_range is not None:
+        keep &= pdf["longitude"].between(*lon_range)
+    return pdf if keep.all() else pdf[keep]
 
 
 def row_schema(meta: ChunkedDatasetMeta, include_uri: bool = True):
@@ -162,19 +205,20 @@ ROW_SCHEMA = T.StructType(
 )
 
 
-def _fake_chunk_decode(spec: pd.Series, meta: ChunkedDatasetMeta) -> pd.DataFrame:
+def _fake_chunk_decode(key: tuple, meta: ChunkedDatasetMeta) -> pd.DataFrame:
     """Deterministic fake chunk reader (no zarr lib in container): values
     are a pure function of (uri, chunk key, cell), so full-scan vs
     pruned-scan equivalence is testable."""
+    _, t_idx, lat_idx, lon_idx = key
     times = pd.to_datetime(meta.times)
-    t0 = spec.t_idx * meta.chunk_time
-    la0 = spec.lat_idx * meta.chunk_lat
-    lo0 = spec.lon_idx * meta.chunk_lon
+    t0 = t_idx * meta.chunk_time
+    la0 = lat_idx * meta.chunk_lat
+    lo0 = lon_idx * meta.chunk_lon
     tchunk = times[t0 : t0 + meta.chunk_time]
     lachunk = meta.lats[la0 : la0 + meta.chunk_lat]
     lochunk = meta.lons[lo0 : lo0 + meta.chunk_lon]
     seed = int(
-        hashlib.md5(f"{meta.uri}:{spec.t_idx}:{spec.lat_idx}:{spec.lon_idx}".encode()).hexdigest()[:8],
+        hashlib.md5(f"{meta.uri}:{t_idx}:{lat_idx}:{lon_idx}".encode()).hexdigest()[:8],
         16,
     )
     rng = np.random.RandomState(seed)
@@ -193,9 +237,9 @@ def _fake_chunk_decode(spec: pd.Series, meta: ChunkedDatasetMeta) -> pd.DataFram
     )
 
 
-def _decode_specs(meta: ChunkedDatasetMeta, decoder: str, include_uri: bool = True):
-    """Shared chunk-spec → rows generator for the batch scan and the
-    streaming ingest.
+def _chunk_decoder(meta: ChunkedDatasetMeta, decoder: str, include_uri: bool = True):
+    """Shared chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → rows
+    decoder for the batch scan and the streaming ingest.
 
     - ``"fake"`` — deterministic synthetic values (test plumbing);
     - ``"zarr2"`` — REAL Zarr v2 chunk decode, stdlib-only (JSON
@@ -205,19 +249,17 @@ def _decode_specs(meta: ChunkedDatasetMeta, decoder: str, include_uri: bool = Tr
       (xql/src/xql/open.py:92);
     - anything else requires the zarr/xarray libs, absent here."""
     if decoder == "zarr2":
-        from .zarr_v2 import zarr2_decode_specs
+        from .zarr_v2 import zarr2_chunk_decoder
 
-        return zarr2_decode_specs(meta, include_uri=include_uri)
+        return zarr2_chunk_decoder(meta, include_uri=include_uri)
     if decoder != "fake":  # pragma: no cover
         raise NotImplementedError("real zarr decoding requires the zarr/xarray libs")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, spec in pdf.iterrows():
-                out = _fake_chunk_decode(spec, meta)
-                yield out if include_uri else out.drop(columns=["data_uri"])
+    def decode(key: tuple) -> pd.DataFrame:
+        out = _fake_chunk_decode(key, meta)
+        return out if include_uri else out.drop(columns=["data_uri"])
 
-    return run
+    return decode
 
 
 CONSOLIDATED_METADATA = "_consolidated_metadata.json"
@@ -356,6 +398,8 @@ def stream_ingest(
 
     Returns the started StreamingQuery (caller drives/stops it).
     """
+    from .opener import map_files
+
     spec_schema = (
         "uri string, t_idx int, lat_idx int, lon_idx int"
     )
@@ -364,13 +408,11 @@ def stream_ingest(
         .option("maxFilesPerTrigger", max_chunks_per_trigger)
         .json(manifest_dir)
     )
-    run = _decode_specs(meta, decoder)
+    decode = _chunk_decoder(meta, decoder)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.repartition(
-            max(1, batch_df.sparkSession.sparkContext.defaultParallelism)
-        ).mapInPandas(run, schema=row_schema(meta))
-        sink_fn(rows, batch_id)
+        keys = [tuple(r) for r in batch_df.collect()]
+        sink_fn(map_files(batch_df.sparkSession, keys, decode, row_schema(meta)), batch_id)
 
     writer = specs.writeStream.foreachBatch(process).trigger(availableNow=True)
     if checkpoint_dir is not None:
@@ -404,17 +446,25 @@ def scan(
     decoder: str = "fake",
     include_uri: bool = True,
 ) -> DataFrame:
-    """Pruned chunk scan → long-format rows. Residual cell-level filters
-    are applied after decode (chunks overlap range boundaries).
+    """Pruned chunk scan → long-format rows. The chunk list is built
+    and pruned on the driver, and its kept keys spread over the decode
+    tasks with no exchange (``opener.map_files``). Each task masks its
+    decoded chunks to the ranges; the residual cell-level filters are
+    applied after decode (chunks overlap range boundaries).
 
     ``include_uri=False`` drops the per-row ``data_uri`` string at the
     DECODE, not after: the column is constant per store, and carrying
     it through the Arrow boundary costs ~40 B/row — at a month of ERA5
     (747M rows) that is ~30 GB of serialized strings the consumer
     (open_dataset) previously dropped one operator later."""
-    manifest = prune_chunks(chunk_manifest(spark, meta), time_range, lat_range, lon_range)
-    rows = manifest.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        _decode_specs(meta, decoder, include_uri=include_uri),
-        schema=row_schema(meta, include_uri=include_uri),
-    )
+    from .opener import map_files
+
+    kept = prune_chunks(chunk_table(meta), time_range, lat_range, lon_range)
+    keys = list(kept[["uri", "t_idx", "lat_idx", "lon_idx"]].itertuples(index=False, name=None))
+    decode = _chunk_decoder(meta, decoder, include_uri=include_uri)
+
+    def run_one(key: tuple) -> pd.DataFrame:
+        return mask_cells(decode(key), time_range, lat_range, lon_range)
+
+    rows = map_files(spark, keys, run_one, row_schema(meta, include_uri=include_uri))
     return filter_cells(rows, time_range, lat_range, lon_range)

@@ -19,7 +19,7 @@ value). This module implements that format directly:
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
   read (the point of ``.zmetadata`` on object stores).
 - :func:`decode_chunk` — bytes → numpy for every codec below, used by
-  ``zarr_scan._decode_specs(decoder="zarr2")`` inside the pruned
+  ``zarr_scan._chunk_decoder(decoder="zarr2")`` inside the pruned
   ``mapInPandas`` scan.
 
 Compressor support: None (raw), zlib, gzip (v3), and the blosc1
@@ -52,7 +52,6 @@ import math
 import os
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -1021,10 +1020,10 @@ def _decode_shard(buf: bytes, za: dict) -> np.ndarray:
     return out
 
 
-def zarr2_decode_specs(meta: ChunkedDatasetMeta, include_uri: bool = True):
-    """Chunk-spec → long-rows kernel over a real Zarr v2 store at
-    ``meta.uri`` — the real-decoder branch of
-    ``zarr_scan._decode_specs``. Per task: one metadata read, then
+def zarr2_chunk_decoder(meta: ChunkedDatasetMeta, include_uri: bool = True):
+    """Chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → long rows over a
+    real Zarr v2 store at ``meta.uri`` — the real-decoder branch of
+    ``zarr_scan._chunk_decoder``. Per task: one metadata read, then
     whole-chunk decodes; coordinates come from the (small) template
     axes carried in the closure, values byte-exact from the store."""
     times = pd.to_datetime(meta.times)
@@ -1032,34 +1031,30 @@ def zarr2_decode_specs(meta: ChunkedDatasetMeta, include_uri: bool = True):
     lons = np.asarray(meta.lons, dtype="f8")
     ct, cla, clo = meta.chunk_time, meta.chunk_lat, meta.chunk_lon
     variables = list(meta.variables)
+    md: dict[str, dict] = {}  # store → metadata, filled once per task
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md: dict | None = None
-        for pdf in batches:
-            for _, spec in pdf.iterrows():
-                if md is None:
-                    md = read_store_metadata(spec.uri)
-                t0, la0, lo0 = spec.t_idx * ct, spec.lat_idx * cla, spec.lon_idx * clo
-                vt = min(ct, len(times) - t0)
-                vla = min(cla, len(lats) - la0)
-                vlo = min(clo, len(lons) - lo0)
-                tt, la, lo = np.meshgrid(
-                    times[t0 : t0 + vt], lats[la0 : la0 + vla], lons[lo0 : lo0 + vlo],
-                    indexing="ij",
-                )
-                out = {
-                    "time": tt.ravel(),
-                    "latitude": la.ravel(),
-                    "longitude": lo.ravel(),
-                }
-                for v in variables:
-                    arr = decode_chunk(
-                        spec.uri, v, md[f"{v}/.zarray"],
-                        (spec.t_idx, spec.lat_idx, spec.lon_idx),
-                    )
-                    out[v] = arr[:vt, :vla, :vlo].ravel()
-                if include_uri:
-                    out["data_uri"] = spec.uri
-                yield pd.DataFrame(out)
+    def decode(key: tuple) -> pd.DataFrame:
+        uri, t_idx, lat_idx, lon_idx = key
+        if uri not in md:
+            md[uri] = read_store_metadata(uri)
+        t0, la0, lo0 = t_idx * ct, lat_idx * cla, lon_idx * clo
+        vt = min(ct, len(times) - t0)
+        vla = min(cla, len(lats) - la0)
+        vlo = min(clo, len(lons) - lo0)
+        tt, la, lo = np.meshgrid(
+            times[t0 : t0 + vt], lats[la0 : la0 + vla], lons[lo0 : lo0 + vlo],
+            indexing="ij",
+        )
+        out = {
+            "time": tt.ravel(),
+            "latitude": la.ravel(),
+            "longitude": lo.ravel(),
+        }
+        for v in variables:
+            arr = decode_chunk(uri, v, md[uri][f"{v}/.zarray"], (t_idx, lat_idx, lon_idx))
+            out[v] = arr[:vt, :vla, :vlo].ravel()
+        if include_uri:
+            out["data_uri"] = uri
+        return pd.DataFrame(out)
 
-    return run
+    return decode
