@@ -331,3 +331,31 @@ def test_mv_zarr_sink_releases_cache_on_failure(spark, tmp_path, grib_days, monk
     with pytest.raises(RuntimeError, match="chunk write failed"):
         main(["mv", "--uris", grib_days, "--output", str(tmp_path / "s.zarr"), "--zarr"])
     assert _persistent_rdds(spark) == cached
+
+
+def test_mv_zarr_time_axis_ignores_the_driver_time_zone(spark, tmp_path, grib_days, monkeypatch):
+    """The store's time coordinate does not depend on the driver
+    process's time zone: collected TIMESTAMPs come back in that zone, so
+    the axes are derived as microseconds (a New York driver used to fail
+    in a task, and would have shifted the axis by 5 h)."""
+    import time
+
+    import pandas as pd
+
+    from weather_tools_spark.sources.zarr_v2 import read_coord_array, read_store_metadata
+
+    def store_times(name: str) -> list:
+        store = str(tmp_path / name)
+        assert main(["mv", "--uris", grib_days, "--output", store, "--zarr"]) == 0
+        return list(read_coord_array(store, "time", read_store_metadata(store)))
+
+    utc = store_times("utc.zarr")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        new_york = store_times("new_york.zarr")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    days = pd.to_datetime([f"2024-01-0{d} {h:02d}:00" for d in (1, 2) for h in (0, 6, 18)])
+    assert new_york == utc == list(days.asi8 // 1_000_000_000)

@@ -1103,10 +1103,38 @@ def _mv_job_count(spark, tmp_path, *flags) -> int:
 def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
     """mv --zarr holds one decode for the sink's lifetime: one aggregate
     job derives all three axes and the chunk writer reads the held rows.
-    6 jobs on this input; deriving each axis with its own
-    distinct/sort scan and decoding again for the write took 19, and an
-    exchange in front of the decode took one more."""
-    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 6
+    5 jobs on this input; deriving each axis with its own
+    distinct/sort scan and decoding again for the write took 19, an
+    exchange in front of the decode took one more, and counting the
+    written chunks with a ``count()`` one more again."""
+    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 5
+
+
+def test_zarr_chunk_write_plan_one_exchange_one_mapinpandas(spark, tmp_path):
+    """The Zarr chunk writer hashes rows to tasks on the chunk id and
+    streams each task's sorted rows through one MapInPandas: one hash
+    Exchange on ``_chunk``, no per-chunk FlatMapGroupsInPandas."""
+    from weather_tools_spark.sources import zarr_scan as ZS
+    from weather_tools_spark.sources import zarr_v2 as Z2
+
+    meta = ZS.ChunkedDatasetMeta(
+        uri=str(tmp_path), times=["2024-01-01 00:00:00", "2024-01-01 06:00:00"],
+        lats=[50.0, 49.0], lons=[10.0, 11.0, 12.0], chunk_time=1, chunk_lat=2, chunk_lon=2,
+        variables=("d2m", "u10"),
+    )
+    rows = spark.range(12).selectExpr(
+        "TIMESTAMP'2024-01-01 00:00:00' AS time", "50.0D - id % 2 AS latitude",
+        "10.0D + id % 3 AS longitude", "id * 1.0D AS d2m", "id * 2.0D AS u10",
+    )
+    plan = Z2._chunk_write_plan(rows, str(tmp_path), meta, None, "v2")._jdf.queryExecution()
+    text = plan.explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert len(re.findall(r"^\(\d+\) MapInPandas\b", text, re.MULTILINE)) == 1, text
+    assert "FlatMapGroupsInPandas" not in text
+    exchanges = re.findall(r"^\(\d+\) Exchange\b", text, re.MULTILINE)
+    assert len(exchanges) == 1, text
+    assert re.search(r"Arguments: hashpartitioning\(_chunk#\d+L?, \d+\), REPARTITION_BY_COL", text)
 
 
 def test_parquet_sink_counts_without_rescan_job_count(spark, tmp_path):

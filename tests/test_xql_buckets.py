@@ -46,6 +46,12 @@ SHAPES = {
         "SELECT {e} AS {b}, count(*) AS n FROM tv GROUP BY {e} HAVING {e} >= '2023'"
         " ORDER BY {b} DESC",
     ),
+    "having_and_order_unselected": (
+        "SELECT count(*) AS n, sum(v) AS s FROM tv GROUP BY {b} HAVING {b} >= '2023'"
+        " ORDER BY {b}",
+        "SELECT n, s FROM (SELECT {e} AS {b}, count(*) AS n, sum(v) AS s FROM tv GROUP BY {e}"
+        " HAVING {e} >= '2023') ORDER BY {b}",
+    ),
     "bucket_inside_subquery": (
         "SELECT * FROM (SELECT event_type, {b}, count(*) n FROM tv GROUP BY event_type, {b}) s"
         " ORDER BY event_type, {b}",
@@ -144,6 +150,16 @@ def test_bucket_rewrite_blocks_and_names():
         "SELECT time_date, count(*) FROM w GROUP BY ROLLUP(time_date, k)", time_col="t"
     )
     assert out.endswith(f"GROUP BY ROLLUP({day}, k)")
+    # ORDER BY a bucket the block neither selects nor can reach through
+    # its HAVING filter: the key becomes a FROM column
+    assert xql.rewrite_time_buckets(
+        "SELECT count(*) AS n FROM w GROUP BY time_date HAVING time_date >= '2024-01-02' "
+        "ORDER BY time_date", time_col="t"
+    ) == (
+        f"SELECT count(*) AS n FROM w, LATERAL (SELECT {day} AS _time_date_key) "
+        "GROUP BY _time_date_key HAVING date_format(_time_date_key, 'yyyy-MM-dd') >= "
+        "'2024-01-02' ORDER BY date_format(_time_date_key, 'yyyy-MM-dd')"
+    )
 
 
 def test_default_driver_memory_caps_at_two_thirds_of_ram(monkeypatch):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import zlib
 
 import numpy as np
@@ -867,3 +868,93 @@ def test_v3_sharded_write_roundtrip(spark, tmp_path):
     shard0 = open(os.path.join(store, "d2m", "c", "0", "0", "0"), "rb").read()
     p0 = np.frombuffer(shard0[-(8 * 16 + 4):-4], dtype="<u8").reshape(8, 2)
     assert not (p0 == np.uint64(0xFFFFFFFFFFFFFFFF)).any()
+
+
+def test_chunks_spanning_arrow_batches_match_a_numpy_store(spark, tmp_path):
+    """The writer streams each task's rows, sorted by chunk, in Arrow
+    batches far smaller than a chunk: every chunk file, edge chunks
+    included, equals the padded NumPy slice of the same dense cube."""
+    rng = np.random.default_rng(5)
+    times = pd.date_range("2024-02-28 20:00", periods=11, freq="h")
+    lats = list(np.linspace(60.0, 56.5, 15))
+    lons = list(np.linspace(-3.0, 1.75, 20))
+    chunks = (5, 7, 9)
+    cubes = {v: rng.normal(280.0, 5.0, (11, 15, 20)) for v in ("d2m", "u10")}
+    it, ila, ilo = np.meshgrid(range(11), range(15), range(20), indexing="ij")
+    pdf = pd.DataFrame({
+        "time": times[it.ravel()], "latitude": np.asarray(lats)[ila.ravel()],
+        "longitude": np.asarray(lons)[ilo.ravel()],
+        **{v: c.ravel() for v, c in cubes.items()},
+    }).sample(frac=1.0, random_state=3)
+    store = str(tmp_path / "batches.zarr")
+    meta = ZS.ChunkedDatasetMeta(
+        uri=store, times=[str(t) for t in times], lats=lats, lons=lons,
+        chunk_time=chunks[0], chunk_lat=chunks[1], chunk_lon=chunks[2], variables=tuple(cubes),
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        n = Z2.write_zarr_v2(spark.createDataFrame(pdf), store, meta)
+    finally:
+        spark.conf.set(conf, prev)
+    assert n == 3 * 3 * 3
+
+    for v, cube in cubes.items():
+        want = {}
+        for idx in np.ndindex(3, 3, 3):
+            block = np.full(chunks, np.nan, "<f8")
+            part = cube[tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, chunks))]
+            block[tuple(slice(0, s) for s in part.shape)] = part
+            want[".".join(map(str, idx))] = zlib.compress(block.tobytes(), 1)
+        got = {
+            f: open(os.path.join(store, v, f), "rb").read()
+            for f in os.listdir(os.path.join(store, v)) if not f.startswith(".")
+        }
+        assert got == want, v
+
+
+def test_off_axis_rows_raise_naming_store_and_count(spark, tmp_path):
+    """A row whose coordinate is not on the store's axes raises a
+    ValueError that names the store and the row count; it is never
+    written into a cell (an offset of -1 would land on a chunk's last
+    cell)."""
+    store = str(tmp_path / "polluted.zarr")
+    meta = _meta(store, variables=("d2m",))
+    src, rows, _ = _source_frame(spark, meta)
+    stray = spark.createDataFrame(
+        [(pd.Timestamp(TIMES[0]).to_pydatetime(), LATS[0], 10.1, -1.0)], src.schema
+    )
+    with pytest.raises(ValueError, match=r"^1 rows .*" + re.escape(store)):
+        Z2.write_zarr_v2(src.unionByName(stray), store, meta)
+    out = ZS.scan(spark, Z2.open_zarr_v2(store), decoder="zarr2").drop("data_uri")
+    assert sorted(map(tuple, out.collect())) == sorted(rows)
+
+
+def test_write_plan_py4j_commands_do_not_grow_with_axes(spark, tmp_path):
+    """The chunk key is SQL text: building the write plan for a 1,440-
+    value axis sends the JVM as many py4j commands as for a 10-value
+    one (one ``F.lit`` per axis value used to cost a command each)."""
+    client = spark.sparkContext._gateway._gateway_client
+    rows = spark.range(10).selectExpr(
+        "TIMESTAMP'2024-01-01 00:00:00' AS time", "50.0D AS latitude",
+        "id / 4.0D AS longitude", "1.0D AS d2m",
+    )
+
+    def commands(n_lons: int) -> int:
+        meta = ZS.ChunkedDatasetMeta(
+            uri=str(tmp_path), times=TIMES, lats=LATS, lons=[i / 4 for i in range(n_lons)],
+            chunk_time=2, chunk_lat=2, chunk_lon=8, variables=("d2m",),
+        )
+        sent = []
+        send = client.send_command
+        client.send_command = lambda cmd, *a, **k: sent.append(cmd) or send(cmd, *a, **k)
+        try:
+            Z2._chunk_write_plan(rows, str(tmp_path), meta, None, "v2")
+        finally:
+            del client.send_command
+        # garbage-collected Java handles release themselves at any time
+        return sum(not cmd.startswith("m\nd\n") for cmd in sent)
+
+    commands(10)  # first build loads JVM classes
+    assert commands(10) == commands(1440)

@@ -196,8 +196,12 @@ def cmd_mv(args: argparse.Namespace) -> int:
         # copy of the rows costs less than decoding GRIB again); one
         # aggregate job derives the three coordinate axes in-plan (axes
         # are dimension-sized, the same bounded contract as the geo
-        # lookup) and the distributed chunk writer reads the same rows.
-        from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta
+        # lookup; time as microseconds, so the driver process's own time
+        # zone never enters) and the chunk writer streams the same rows,
+        # hashed and sorted by chunk, into whole chunk files per task.
+        import pandas as pd
+
+        from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta, time_micros_sql
         from weather_tools_spark.sources.zarr_v2 import write_zarr_v2
 
         if "time" not in df.columns:
@@ -207,9 +211,10 @@ def cmd_mv(args: argparse.Namespace) -> int:
         variables = tuple(c for c in df.columns if c not in dims)
         df.persist()
         try:
-            times, lats, lons = df.agg(*(F.array_sort(F.collect_set(c)) for c in dims)).first()
+            axes = (F.expr(time_micros_sql("time")), "latitude", "longitude")
+            times, lats, lons = df.agg(*(F.array_sort(F.collect_set(c)) for c in axes)).first()
             meta = ChunkedDatasetMeta(
-                uri=args.output, times=[t.isoformat() for t in times],
+                uri=args.output, times=[t.isoformat() for t in pd.to_datetime(times, unit="us")],
                 lats=lats[::-1], lons=lons,  # latitude north → south
                 chunk_time=chunks[0], chunk_lat=chunks[1], chunk_lon=chunks[2],
                 variables=variables,

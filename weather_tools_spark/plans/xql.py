@@ -277,14 +277,31 @@ class _BucketRewrite:
             and m.group(2).lower() in _TIME_BUCKETS
         }
         star = any(re.fullmatch(r"(\w+\.)?\*", t) for _, _, t in select_items)
-        for m in _SHORTHAND.finditer(self.flat, lo, hi):
+        found = [
+            (m, clause(m.start()))
+            for m in _SHORTHAND.finditer(self.flat, lo, hi)
+            if m.group(1).lower() not in sources  # a column of a relation
+            and not any(o < m.start() < c for o, c in subs)  # an inner block's
+            and not re.search(r"\bAS\s*$", self.flat[lo : m.start()], re.IGNORECASE)
+        ]
+        # Spark cannot resolve an ORDER BY key through a HAVING filter
+        # unless it is a grouping column: such a block computes the key
+        # once as a column of its FROM, which a LATERAL subquery adds
+        # without a join
+        from_ = next((s for s in spans if s[0] == "FROM"), None)
+        lateral = sorted({
+            m.group(1).lower() for m, (name, _, _) in found
+            if name in _ALIAS_CLAUSES and name != "HAVING" and m.group(1).lower() not in aliased
+        }) if from_ and any(s[0] == "HAVING" for s in spans) else []
+        if lateral:
+            end = from_[1] + len(self.flat[from_[1] : from_[2]].rstrip())
+            cols = ", ".join(f"{bucket_exprs(sh, self.time_col)[0]} AS _{sh}_key" for sh in lateral)
+            self.edits.append((end, end, f", LATERAL (SELECT {cols})"))
+        for m, (name, s, e) in found:
             p, sh = m.start(), m.group(1).lower()
-            if sh in sources or any(o < p < c for o, c in subs):
-                continue  # a column of a relation, or an inner block's
-            if re.search(r"\bAS\s*$", self.flat[lo:p], re.IGNORECASE):
-                continue  # an output name
-            name, s, e = clause(p)
             key, label = bucket_exprs(sh, self.time_col)
+            if sh in lateral:
+                key, label = f"_{sh}_key", f"date_format(_{sh}_key, '{_TIME_BUCKETS[sh][1]}')"
             if name == "SELECT":
                 item = next(t for a, b, t in select_items if a <= p < b)
                 new = f"{label} AS {m.group(1)}" if item == m.group(0) else label
@@ -316,6 +333,12 @@ def rewrite_time_buckets(sql: str, time_col: str = "time") -> str:
     expressions) becomes ``date_format(<key>, fmt)``. The labels equal
     ``date_format(time, fmt)`` for TIMESTAMP, TIMESTAMP_NTZ, DATE and
     ISO-string time columns in any session time zone.
+
+    A block with a HAVING clause whose ORDER BY (or SORT, CLUSTER,
+    DISTRIBUTE BY) names a shorthand it does not select adds the key to
+    its FROM as ``LATERAL (SELECT <key> AS _<shorthand>_key)`` and uses
+    that column throughout, since Spark resolves such an ORDER BY only
+    through a grouping column.
 
     In a block that reads a relation outputting the shorthand as a
     column (a subquery or CTE that selected it), the shorthand is that

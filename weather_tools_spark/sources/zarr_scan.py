@@ -312,6 +312,37 @@ def read_consolidated_metadata(out_dir: str) -> ChunkedDatasetMeta:
     )
 
 
+def time_micros_sql(col: str) -> str:
+    """SQL for microseconds since 1970-01-01 00:00 of ``col``'s
+    wall-clock time in the session time zone: epoch microseconds in a
+    UTC session, and in any zone the value a naive ISO time of
+    :class:`ChunkedDatasetMeta` denotes. It never depends on the driver
+    process's own time zone."""
+    return (
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', "
+        f"CAST({col} AS TIMESTAMP_NTZ))"
+    )
+
+
+def axis_positions_sql(meta: ChunkedDatasetMeta) -> tuple[str, str, str]:
+    """SQL for a row's 0-based position on ``meta``'s time, latitude and
+    longitude axes, NULL when the coordinate is not on the axis. Each
+    axis is one ``array_position`` over its literals (times as
+    :func:`time_micros_sql` values, doubles spelled by ``repr`` so they
+    round-trip exactly), so the plan costs the same few py4j calls
+    however long the axes are."""
+    micros = pd.to_datetime(meta.times).asi8 // 1000
+
+    def position(col: str, literals) -> str:
+        return f"(nullif(array_position(array({', '.join(literals)}), {col}), 0) - 1)"
+
+    return (
+        position(time_micros_sql("time"), (f"{m}L" for m in micros)),
+        position("CAST(latitude AS DOUBLE)", (f"{float(v)!r}D" for v in meta.lats)),
+        position("CAST(longitude AS DOUBLE)", (f"{float(v)!r}D" for v in meta.lons)),
+    )
+
+
 def write_chunked(
     rows: DataFrame,
     out_dir: str,
@@ -337,16 +368,12 @@ def write_chunked(
 
     Read-back contract: ``scan``'s pruning semantics apply to the
     written store by construction (directory = chunk)."""
-    times = {str(t): i for i, t in enumerate(pd.to_datetime(meta.times))}
-    lats = {v: i for i, v in enumerate(meta.lats)}
-    lons = {v: i for i, v in enumerate(meta.lons)}
-    t_map = F.create_map(*[x for kv in times.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    la_map = F.create_map(*[x for kv in lats.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    lo_map = F.create_map(*[x for kv in lons.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    keyed = (
-        rows.withColumn("t_idx", (t_map[F.col("time").cast("string")] / meta.chunk_time).cast("int"))
-        .withColumn("lat_idx", (la_map[F.col("latitude")] / meta.chunk_lat).cast("int"))
-        .withColumn("lon_idx", (lo_map[F.col("longitude")] / meta.chunk_lon).cast("int"))
+    t, la, lo = axis_positions_sql(meta)
+    keyed = rows.selectExpr(
+        "*",
+        f"CAST({t} div {meta.chunk_time} AS INT) AS t_idx",
+        f"CAST({la} div {meta.chunk_lat} AS INT) AS lat_idx",
+        f"CAST({lo} div {meta.chunk_lon} AS INT) AS lon_idx",
     )
     off_template = (
         F.col("t_idx").isNull() | F.col("lat_idx").isNull() | F.col("lon_idx").isNull()

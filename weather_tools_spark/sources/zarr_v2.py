@@ -11,9 +11,10 @@ one flat binary file per chunk (C-order array bytes, optionally
 zlib-compressed, edge chunks padded to full chunk shape with the fill
 value). This module implements that format directly:
 
-- :func:`write_zarr_v2` — a *distributed* Zarr v2 sink: executors
-  assemble and write whole chunk files (one task owns one chunk — the
-  same aligned-whole-chunk contract as ``xbeam.ChunksToZarr`` with a
+- :func:`write_zarr_v2` — a *distributed* Zarr v2 sink: rows are
+  hashed to tasks by chunk id and sorted, and each task streams them
+  into whole chunk files (one task owns each chunk — the same
+  aligned-whole-chunk contract as ``xbeam.ChunksToZarr`` with a
   template, weather_mv/loader_pipeline/regrid.py:384-390); the driver
   writes only the tiny JSON metadata.
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
@@ -57,7 +58,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from .zarr_scan import ChunkedDatasetMeta
+from .zarr_scan import ChunkedDatasetMeta, axis_positions_sql
 
 ZMETADATA = ".zmetadata"
 _DIMS = ("time", "latitude", "longitude")
@@ -486,19 +487,16 @@ def write_zarr_v2(
     meta: ChunkedDatasetMeta,
     compressor: dict | None = {"id": "zlib", "level": 1},
 ) -> int:
-    """Distributed Zarr v2 sink: shuffle rows to their owning chunk,
-    one ``applyInPandas`` task assembles and writes each chunk file
-    (all variables), driver writes the JSON metadata. Returns the
-    number of chunks written.
+    """Distributed Zarr v2 sink: rows are hashed to tasks by their
+    owning chunk and sorted within each task, which streams them into
+    whole chunk files (all variables); the driver writes the JSON
+    metadata. Returns the number of chunks written.
 
     ``rows`` is a long-format frame with columns
     ``time, latitude, longitude, <variables...>`` (the ``scan`` row
     shape). Cells absent from ``rows`` keep the NaN fill value —
     the template-write semantics of ``xbeam.ChunksToZarr``.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     times = pd.to_datetime(meta.times)
     shape = (len(times), len(meta.lats), len(meta.lons))
     chunks = (meta.chunk_time, meta.chunk_lat, meta.chunk_lon)
@@ -533,69 +531,89 @@ def write_zarr_v2(
     return _distributed_chunk_write(rows, store, meta, compressor, key_style="v2")
 
 
-def _distributed_chunk_write(
+def _chunk_write_plan(
     rows, store: str, meta: ChunkedDatasetMeta, compressor: dict | None, key_style: str
-) -> int:
-    """Shared executor stage for both format versions: shuffle rows to
-    their owning chunk, one ``applyInPandas`` task assembles and writes
-    each (padded) chunk file for every variable."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    times = pd.to_datetime(meta.times)
+):
+    """The chunk writer as a lazy frame: one ``selectExpr`` keys each
+    row by its linear chunk id ``_chunk`` and its flat C-order offset
+    ``_off`` inside that chunk (both NULL off the axes); rows are hashed
+    to tasks by chunk id and sorted within each task, and one
+    ``mapInPandas`` per task streams its batches into one NaN-filled
+    block per variable, writing the chunk files whenever the id changes
+    (a chunk may span batches). Each task yields one
+    ``(chunks, off_axis)`` row."""
     chunks = (meta.chunk_time, meta.chunk_lat, meta.chunk_lon)
+    shape = (len(meta.times), len(meta.lats), len(meta.lons))
+    grid = tuple(math.ceil(s / c) for s, c in zip(shape, chunks))
+    (ct, cla, clo), (_, n_la, n_lo) = chunks, grid
     variables = list(meta.variables)
-    t_gi = {str(t): i for i, t in enumerate(times)}
-    la_gi = {float(v): i for i, v in enumerate(meta.lats)}
-    lo_gi = {float(v): i for i, v in enumerate(meta.lons)}
-    t_map = F.create_map(*[x for kv in t_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    la_map = F.create_map(*[x for kv in la_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    lo_map = F.create_map(*[x for kv in lo_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    keyed = (
-        rows.withColumn("_gt", t_map[F.col("time").cast("string")])
-        .withColumn("_gla", la_map[F.col("latitude")])
-        .withColumn("_glo", lo_map[F.col("longitude")])
-        .withColumn("t_idx", (F.col("_gt") / chunks[0]).cast("int"))
-        .withColumn("lat_idx", (F.col("_gla") / chunks[1]).cast("int"))
-        .withColumn("lon_idx", (F.col("_glo") / chunks[2]).cast("int"))
-    )
+    t, la, lo = axis_positions_sql(meta)
+    keyed = rows.selectExpr(
+        *(f"`{v}`" for v in variables), f"{t} AS _t", f"{la} AS _la", f"{lo} AS _lo",
+        f"((_t div {ct}) * {n_la} + _la div {cla}) * {n_lo} + _lo div {clo} AS _chunk",
+        f"((_t % {ct}) * {cla} + _la % {cla}) * {clo} + _lo % {clo} AS _off",
+    ).drop("_t", "_la", "_lo")
+    shard = compressor is not None and compressor.get("id") == "sharding_indexed"
 
-    def write_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        ti, lai, loi = int(pdf.t_idx.iloc[0]), int(pdf.lat_idx.iloc[0]), int(pdf.lon_idx.iloc[0])
-        ot, ola, olo = (pdf._gt % chunks[0]), (pdf._gla % chunks[1]), (pdf._glo % chunks[2])
-        key = f"c/{ti}/{lai}/{loi}" if key_style == "v3" else f"{ti}.{lai}.{loi}"
-        nbytes = 0
-        for v in variables:
-            arr = np.full(chunks, np.nan, dtype="<f8")  # padded edge chunks
-            arr[ot, ola, olo] = pdf[v].to_numpy(dtype="f8")
-            if compressor and compressor.get("id") == "sharding_indexed":
+    def flush(chunk_id: int, blocks: dict) -> None:
+        key = _chunk_key({"key_style": key_style}, np.unravel_index(chunk_id, grid))
+        for v, block in blocks.items():
+            arr = block.reshape(chunks)  # padded edge chunks keep the fill
+            if shard:
                 data = _encode_shard(
-                    arr,
-                    tuple(compressor["inner_chunks"]),
-                    compressor["inner_compressor"],
+                    arr, tuple(compressor["inner_chunks"]), compressor["inner_compressor"]
                 )
             else:
                 data = _compress(arr.tobytes(), compressor, arr.dtype.itemsize)
             _put_bytes(os.path.join(store, v, key), data)
-            nbytes += len(data)
-        return pd.DataFrame(
-            {"t_idx": [ti], "lat_idx": [lai], "lon_idx": [loi], "nbytes": [nbytes]}
-        )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("t_idx", T.IntegerType()),
-            T.StructField("lat_idx", T.IntegerType()),
-            T.StructField("lon_idx", T.IntegerType()),
-            T.StructField("nbytes", T.LongType()),
-        ]
+    def write(batches):
+        n_chunks = off_axis = 0
+        cur, blocks = None, {}
+        for pdf in batches:
+            on_axes = pdf["_chunk"].notna()
+            if not on_axes.all():
+                off_axis += int((~on_axes).sum())
+                pdf = pdf[on_axes]
+            ids = pdf["_chunk"].to_numpy("int64")
+            offs = pdf["_off"].to_numpy("int64")
+            values = {v: pdf[v].to_numpy("f8") for v in variables}
+            starts = np.flatnonzero(np.diff(ids, prepend=-1)).tolist()
+            for a, b in zip(starts, [*starts[1:], len(ids)]):
+                if ids[a] != cur:
+                    if blocks:
+                        flush(cur, blocks)
+                    n_chunks += 1
+                    cur = int(ids[a])
+                    blocks = {v: np.full(ct * cla * clo, np.nan, "<f8") for v in variables}
+                for v in variables:
+                    blocks[v][offs[a:b]] = values[v][a:b]
+        if blocks:
+            flush(cur, blocks)
+        yield pd.DataFrame({"chunks": [n_chunks], "off_axis": [off_axis]})
+
+    return (
+        keyed.repartition("_chunk")
+        .sortWithinPartitions("_chunk")
+        .mapInPandas(write, "chunks long, off_axis long")
     )
-    written = (
-        keyed.groupBy("t_idx", "lat_idx", "lon_idx")
-        .applyInPandas(write_chunk, schema=out_schema)
-        .count()
-    )
-    return int(written)
+
+
+def _distributed_chunk_write(
+    rows, store: str, meta: ChunkedDatasetMeta, compressor: dict | None, key_style: str
+) -> int:
+    """Run :func:`_chunk_write_plan` (both format versions) and sum the
+    tasks' counts: returns the number of chunks written, or raises
+    ``ValueError`` naming the store and the row count when rows lie off
+    ``meta``'s axes (the other rows are written)."""
+    counts = _chunk_write_plan(rows, store, meta, compressor, key_style).collect()
+    off_axis = sum(r.off_axis for r in counts)
+    if off_axis:
+        raise ValueError(
+            f"{off_axis} rows have coordinates that are not on the axes of the Zarr "
+            f"store {store!r}; they were not written"
+        )
+    return sum(r.chunks for r in counts)
 
 
 # ---------------------------------------------------------------------------
