@@ -32,55 +32,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return SPARK["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# Driver-verification rotation: CORRECTNESS_r01 sampled the first 50
-# registry entries in dict order, leaving 38 queries with no driver-side
-# verdict. Those 38 lead the round-2 ordering (followed by queries new
-# in round 2) so a prefix-sampling driver sweeps them; r01 ∪ r02 then
-# covers the whole surface. Relative order within each group is the
-# stable registry order.
-_DRIVER_FIRST = [
-    # r01-unsampled (registry indices 50-87 last round)
-    "events_sessionization",
-    "events_json_props_extract",
-    "events_type_share_by_day",
-    "events_lead_lag_trailing_window",
-    "events_daily_type_pivot",
-    "events_funnel_conversion",
-    "events_trailing_7d_active_users",
-    "hypertable_rollup_cascade",
-    "events_asof_join_orders",
-    "dl_partition_fanout",
-    "manifest_latest_state",
-    "mars_range_expansion",
-    "sim_cosine_topk",
-    "dedup_embedding_cosine",
-    "sim_lsh_ann_topk",
-    "sim_ivf_ann_topk",
-    "multimodal_feature_extract",
-    "sim_label_centroid_distance",
-    "text_token_stats",
-    "text_quality_scores",
-    "text_langid_distribution",
-    "text_langid_accuracy",
-    "dedup_name_levenshtein",
-    "text_fingerprint_groups",
-    "text_bpe_token_counts",
-    "text_top_terms",
-    "text_length_histogram",
-    "xql_select_filter_range",
-    "xql_daily_avg",
-    "xql_monthly_multi_agg",
-    "xql_yearly_bucket_by_type",
-    "xql_whole_table_agg",
-    "xql_where_or",
-    "xql_orderby_limit_offset",
-    "xql_flagship_weather_query",
-    "xql_sql_surface_daily",
-    "null_handling_aggregates",
-    "xql_city_bbox_rewrite",
-]
-
-
 def _driver_verified() -> set[str]:
     """Names with a clean verdict in any CORRECTNESS_r*.json the driver
     has written next to this file. A record counts as verified when it
@@ -118,9 +69,9 @@ def _driver_verified() -> set[str]:
 def _ordered(reg: dict) -> dict:
     """Self-rotating driver order: entries with no clean driver verdict
     yet come first (a prefix-sampling driver always sweeps the
-    never-verified surface), preserving the curated priority order
-    within that group. Already-verified entries follow, ROTATED by the
-    number of CORRECTNESS rounds seen so far: each round a different
+    never-verified surface), in registry order within that group.
+    Already-verified entries follow, ROTATED by the number of
+    CORRECTNESS rounds seen so far: each round a different
     window of previously-green entries sits just behind the unverified
     head, so a prefix-sampling driver periodically RE-verifies old
     entries instead of never seeing them again (a regression in a
@@ -132,11 +83,8 @@ def _ordered(reg: dict) -> dict:
     import os
     import sys as _sys
 
-    from weather_tools_spark.queries import CHECK_CHANGED, R02_NEW
+    from weather_tools_spark.queries import CHECK_CHANGED
 
-    priority = [n for n in _DRIVER_FIRST if n in reg]
-    priority += [n for n in R02_NEW if n in reg and n not in priority]
-    priority += [n for n in reg if n not in priority]
     verified = _driver_verified()
     # Entries whose check changed this round are un-verified by
     # definition (the old clean verdict gated a different oracle/path).
@@ -151,10 +99,10 @@ def _ordered(reg: dict) -> dict:
     changed_regate = [n for n in changed if n in verified]
     head = (
         changed_new
-        + [n for n in priority if n not in verified and n not in changed]
+        + [n for n in reg if n not in verified and n not in changed]
         + changed_regate
     )
-    rest = [n for n in priority if n in verified and n not in changed]
+    rest = [n for n in reg if n in verified and n not in changed]
     here = os.path.dirname(os.path.abspath(__file__))
     rounds = len(glob.glob(os.path.join(here, "CORRECTNESS_r*.json")))
     # Rotate the verified tail by a fixed stride per round: the window
@@ -167,7 +115,7 @@ def _ordered(reg: dict) -> dict:
     rest = rest[offset:] + rest[:offset]
     print(
         f"[registry-order] rounds={rounds} unverified_head={len(head)} "
-        f"verified_rotation_offset={offset} total={len(priority)}",
+        f"verified_rotation_offset={offset} total={len(reg)}",
         file=_sys.stderr,
     )
     return {n: reg[n] for n in head + rest}

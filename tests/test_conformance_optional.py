@@ -11,7 +11,7 @@ trusting the stdlib implementations by construction alone.
 
 This extends the numcodecs-bitshuffle optional gate (test_zarr_v2) to
 the whole codec surface, and is the conformance half of the
-``DECODERS["xarray"]`` branch (sources/hypercube.py) — the reference's
+``_xarray_decode`` branch (sources/hypercube.py) — the reference's
 xarray engine dispatch (weather_mv/loader_pipeline/sinks.py:437-519).
 
 The last test runs in EVERY environment: it pins that the xarray
@@ -209,19 +209,19 @@ def test_zarr_codec_vs_zarr_library(tmp_path, spark):
 
 @pytest.mark.skipif(not _has("xarray"), reason="xarray not installed")
 def test_decoders_xarray_branch_matches_stdlib(tmp_path):
-    """DECODERS['xarray'] (the library-backed hypercube branch) agrees
+    """``_xarray_decode`` (the library-backed hypercube branch) agrees
     with the stdlib netcdf3 branch on the same file — the conformance
     gate for decode_auto's probed default on xarray-equipped clusters."""
-    from weather_tools_spark.sources.hypercube import DECODERS, IngestOptions
+    from weather_tools_spark.sources.hypercube import IngestOptions, _xarray_decode
     from weather_tools_spark.sources.netcdf3 import nc3_decode
 
     p = str(tmp_path / "conf.nc")
     _nc3_fixture(p)
     ours = nc3_decode(p, None)
-    theirs = DECODERS["xarray"](p, IngestOptions())
+    theirs = _xarray_decode(p, IngestOptions())
     _assert_long_format_equal(ours, theirs, ["t2m", "sp"])
     # projection pushdown parity: the variables option narrows both
-    narrowed = DECODERS["xarray"](p, IngestOptions(variables=["t2m"]))
+    narrowed = _xarray_decode(p, IngestOptions(variables=["t2m"]))
     assert "sp" not in narrowed.columns
     _assert_long_format_equal(
         nc3_decode(p, IngestOptions(variables=["t2m"])), narrowed, ["t2m"]
@@ -232,13 +232,13 @@ def test_xarray_branch_gates_cleanly_or_works(tmp_path):
     """Runs in EVERY environment: with xarray absent the branch raises
     the canonical NotImplementedError (never a silent wrong answer);
     with xarray present it decodes (covered in depth above)."""
-    from weather_tools_spark.sources.hypercube import DECODERS, IngestOptions
+    from weather_tools_spark.sources.hypercube import IngestOptions, _xarray_decode
 
     p = str(tmp_path / "conf.nc")
     _nc3_fixture(p)
     if _has("xarray"):
-        out = DECODERS["xarray"](p, IngestOptions())
+        out = _xarray_decode(p, IngestOptions())
         assert {"time", "latitude", "longitude", "t2m", "sp"} <= set(out.columns)
     else:
         with pytest.raises(NotImplementedError, match="xarray not installed"):
-            DECODERS["xarray"](p, IngestOptions())
+            _xarray_decode(p, IngestOptions())

@@ -37,7 +37,7 @@ def test_roundtrip_byte_identical(tmp_path, compression):
     assert g_origin == origin and g_pixel == pixel
 
 
-def test_decode_long_format_georeferencing(tmp_path):
+def test_decode_long_format_georeferencing(spark, tmp_path):
     arr, origin, pixel = _raster()
     path = str(tmp_path / "t.tif")
     GT.write_geotiff(path, arr, origin, pixel)
@@ -49,10 +49,21 @@ def test_decode_long_format_georeferencing(tmp_path):
     # north-up: first row is the max latitude
     assert pdf.latitude.iloc[0] == 52.0
 
-    opts = H.IngestOptions(area=(52.0, 4.4, 51.6, 4.8))
-    clipped = GT.gtiff_decode(path, opts, value_col="d2m")
-    assert set(clipped.latitude) == {52.0, 51.75}
-    assert set(clipped.longitude) == {4.5, 4.75}
+    # the area applies in ingest; a raster has no time axis, so a time
+    # option leaves its cells alone
+    from pyspark.sql.types import _parse_datatype_string
+
+    opts = H.IngestOptions(area=(52.0, 4.4, 51.6, 4.8), start_time="2024-01-01")
+    assert len(GT.gtiff_decode(path, opts)) == 12
+    schema = _parse_datatype_string(
+        "latitude double, longitude double, value double, "
+        "data_uri string, data_first_step timestamp"
+    )
+    clipped = H.ingest(spark, [path], opts, schema=schema).collect()
+    assert {(r.latitude, r.longitude): r.value for r in clipped} == {
+        (52.0, 4.5): 2 * 1.5 - 2.25, (52.0, 4.75): 3 * 1.5 - 2.25,
+        (51.75, 4.5): 6 * 1.5 - 2.25, (51.75, 4.75): 7 * 1.5 - 2.25,
+    }
 
 
 def test_partitioned_sink_one_raster_per_slice(spark, tmp_path):

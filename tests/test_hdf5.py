@@ -121,15 +121,20 @@ def test_netcdf4_conventions(tmp_path):
     )
 
 
-def test_nc4_decode_filters(tmp_path):
+def test_nc4_decode_filters(spark, tmp_path):
+    """The area of ``IngestOptions`` applies to decoded NetCDF-4 cells
+    in ``hypercube.ingest``; the decoder itself decodes every cell."""
     coords = _coords()
     vals = np.arange(60.0).reshape(4, 3, 5)
     path = str(tmp_path / "f.nc4")
     H5.write_netcdf4(path, coords, {"d2m": vals})
     opts = H.IngestOptions(area=(51.5, 5.0, 50.5, 6.0))
-    pdf = H5.nc4_decode(path, opts)
+    assert len(H5.nc4_decode(path, opts)) == 60
+    pdf = H.ingest(spark, [path], opts).toPandas()
     assert set(pdf["latitude"]) == {51.0}
-    assert pdf["longitude"].max() <= 6.0
+    assert set(pdf["longitude"]) == {5.0, 5.5, 6.0}
+    # lat index 1, lon indices 0..2 at each of the 4 times
+    assert sorted(pdf["d2m"]) == sorted(t * 15 + 5 + j for t in range(4) for j in range(3))
 
 
 def test_ingest_auto_detects_netcdf4(spark, tmp_path):

@@ -122,116 +122,6 @@ def test_merge_normalized_wide_schema(spark):
     assert rows[48.0].isobaricInhPa_850_instant_t is None  # xr.merge-style NULL fill
 
 
-def test_chunked_store_write_read_roundtrip(spark, tmp_path):
-    meta = _meta()
-    original = Z.scan(spark, meta)
-    out = str(tmp_path / "store")
-    Z.write_chunked(original, out, meta)
-    back = Z.read_chunked(spark, out)
-    key = ["time", "latitude", "longitude"]
-    a = original.orderBy(key).toPandas()[["time", "latitude", "longitude", "d2m"]]
-    b = back.orderBy(key).toPandas()[["time", "latitude", "longitude", "d2m"]]
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
-    # chunk layout on disk: one directory per chunk key combination
-    import glob as _glob
-
-    chunk_dirs = _glob.glob(f"{out}/t_idx=*/lat_idx=*/lon_idx=*")
-    assert len(chunk_dirs) == 2 * 4 * 4
-    # partition pruning reaches the directory level on read-back
-    pruned = back.filter("t_idx = 0 AND lat_idx = 1 AND lon_idx = 2")
-    assert pruned.count() == 24 * 2 * 2
-
-
-def test_stream_ingest_chunks_match_batch_scan(spark, tmp_path):
-    """Streaming chunk ingest (foreachBatch) must deliver exactly the
-    rows the batch scan produces, across micro-batches."""
-    meta = _meta()
-    n_chunks = Z.write_chunk_specs(spark, meta, str(tmp_path / "specs"))
-    assert n_chunks == 2 * 4 * 4
-    out_dir = str(tmp_path / "rows")
-    batches = []
-
-    def sink(df, batch_id):
-        batches.append(batch_id)
-        df.write.mode("append").parquet(out_dir)
-
-    q = Z.stream_ingest(
-        spark, meta, str(tmp_path / "specs"), sink,
-        max_chunks_per_trigger=8, checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert q.awaitTermination(300), "streaming ingest did not finish in time"
-    got = spark.read.parquet(out_dir)
-    want = Z.scan(spark, meta)
-    assert got.count() == want.count()
-    key = ["time", "latitude", "longitude"]
-    a = got.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
-    b = want.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
-    assert a.equals(b)
-    # 32 specs over ~32 files at 8 files/trigger → several micro-batches
-    # (round-robin repartition can leave a few empty files, so the exact
-    # count may be one less than ceil(32/8))
-    assert len(batches) >= 3, batches
-
-
-def test_pruned_scan_equals_full_scan_filtered(spark):
-    meta = _meta()
-    tr = ("2018-01-01 06:00:00", "2018-01-02 06:00:00")
-    la = (46.0, 48.0)
-    lo = (-106.0, -104.0)
-    pruned = Z.scan(spark, meta, time_range=tr, lat_range=la, lon_range=lo).toPandas()
-    full = (
-        Z.scan(spark, meta)
-        .filter(
-            (F.col("time") >= F.lit(tr[0]).cast("timestamp"))
-            & (F.col("time") < F.lit(tr[1]).cast("timestamp"))
-            & F.col("latitude").between(*la)
-            & F.col("longitude").between(*lo)
-        )
-        .toPandas()
-    )
-    key = ["time", "latitude", "longitude"]
-    a = pruned.sort_values(key).reset_index(drop=True)
-    b = full.sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
-    assert len(a) > 0
-
-
-def test_chunked_store_template_consistency(spark, tmp_path):
-    """Template-write parity: consolidated metadata round-trips to the
-    identical template; off-template rows are excluded and reported;
-    read-back planned FROM the metadata (not the data listing) prunes
-    correctly."""
-    import datetime as dt
-
-    meta = _meta()
-    original = Z.scan(spark, meta)
-    out = str(tmp_path / "store")
-    n_bad = Z.write_chunked(original, out, meta)
-    assert n_bad == 0
-    # consolidated metadata round-trips to the same template
-    back_meta = Z.read_consolidated_metadata(out)
-    assert Z.template_dict(back_meta) == Z.template_dict(meta)
-    # planning from the recovered template reproduces the store geometry
-    assert Z.chunk_manifest(spark, back_meta).count() == 2 * 4 * 4
-    # off-template rows (coordinate not on the template axes) are
-    # excluded from the store and reported; strict mode raises
-    stray = spark.createDataFrame(
-        [(dt.datetime(2031, 1, 1), 12.345, 67.89, 1.0, 2.0, 3.0, meta.uri)],
-        Z.ROW_SCHEMA,
-    )
-    polluted = original.unionByName(stray)
-    out2 = str(tmp_path / "store2")
-    try:
-        Z.write_chunked(polluted, out2, meta)
-        raise AssertionError("strict template write should reject stray rows")
-    except ValueError as e:
-        assert "1 rows" in str(e)
-    n_bad2 = Z.write_chunked(polluted, out2, meta, strict=False)
-    assert n_bad2 == 1
-    clean = Z.read_chunked(spark, out2)
-    assert clean.count() == original.count()  # stray row not in the store
-
-
 def test_default_decoder_detection(monkeypatch, tmp_path):
     """A real file no magic-byte probe recognises: decode_auto raises
     detect's ValueError without xarray, never invents fake rows; once
@@ -335,7 +225,7 @@ def test_xarray_decode_real_branch(monkeypatch):
 
 
 def test_auto_decoder_uses_fake_for_mem_uris_even_with_xarray(spark, monkeypatch):
-    """ADVICE r3: on an xarray-equipped cluster, decoder='auto' must NOT
+    """On an xarray-equipped cluster, ingest's decode_auto must NOT
     route synthetic mem:// URIs to the real branch (they have no bytes
     to open) — the deterministic fake output must be preserved."""
     import importlib.machinery
@@ -348,6 +238,8 @@ def test_auto_decoder_uses_fake_for_mem_uris_even_with_xarray(spark, monkeypatch
     monkeypatch.setitem(sys.modules, "xarray", stub)
     assert importlib.util.find_spec("xarray") is not None
 
-    got = H.ingest(spark, ["mem://a.nc"]).collect()  # decoder defaults to 'auto'
-    want = H.ingest(spark, ["mem://a.nc"], decoder="fake").collect()
-    assert len(got) > 0 and sorted(map(tuple, got)) == sorted(map(tuple, want))
+    got = H.ingest(spark, ["mem://a.nc"]).select("time", "latitude", "longitude", "d2m")
+    want = H._fake_grid_decode("mem://a.nc", H.IngestOptions())
+    got = got.toPandas().sort_values(["time", "latitude", "longitude"], ignore_index=True)
+    want = want[got.columns].sort_values(["time", "latitude", "longitude"], ignore_index=True)
+    assert len(got) > 0 and got.equals(want)

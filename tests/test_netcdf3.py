@@ -54,7 +54,7 @@ def test_roundtrip_byte_identical(tmp_path, version):
     assert attrs["time"]["units"].startswith("seconds since 1970")
 
 
-def test_decode_long_format_and_filters(tmp_path):
+def test_decode_long_format_and_filters(spark, tmp_path):
     times, lats, lons, d2m, u10 = _grid()
     path = str(tmp_path / "grid.nc")
     N3.write_netcdf3(
@@ -67,11 +67,13 @@ def test_decode_long_format_and_filters(tmp_path):
               & (pdf.latitude == 48.0) & (pdf.longitude == 11.5)]
     assert float(row.d2m.iloc[0]) == 8.5 and float(row.u10.iloc[0]) == 8.75
 
+    # the decoder decodes every cell; ranges apply in ingest
+    assert len(N3.nc3_decode(path, H.IngestOptions(area=(48.0, 11.0, 47.9, 11.3)))) == 18
     opts = H.IngestOptions(start_time="2024-02-01 01:00:00", end_time="2024-02-01 02:00:00",
                            area=(48.0, 11.0, 47.9, 11.3))
-    got = N3.nc3_decode(path, opts)
-    assert set(got.time.dt.hour) == {1}
-    assert set(got.latitude) == {48.0} and set(got.longitude) == {11.0, 11.25}
+    got = {(r.time.hour, r.latitude, r.longitude): r.d2m
+           for r in H.ingest(spark, [path], opts).collect()}
+    assert got == {(1, 48.0, 11.0): 6.5, (1, 48.0, 11.25): 7.5}
 
 
 def test_ingest_auto_detects_classic_netcdf(spark, tmp_path):

@@ -37,6 +37,36 @@ def test_zarr_dispatch_with_pruning(spark, tmp_path):
     assert len(got) == 8 and {r.d2m for r in got} == {2.0, 3.0}
 
 
+def test_open_ended_time_range_is_unbounded(spark, tmp_path):
+    """A ``None`` end of ``time_range`` leaves that end open — in the
+    chunk pruning, the in-task mask and the residual filter alike — for
+    a Zarr store and a NetCDF-3 file."""
+    times = [f"2024-07-01 {h:02d}:00:00" for h in range(4)]
+    lats, lons = [50.0, 49.75], [8.0, 8.25]
+    rows = [
+        (t.to_pydatetime(), la, lo, float(ti))
+        for ti, t in enumerate(pd.to_datetime(times)) for la in lats for lo in lons
+    ]
+    src = spark.createDataFrame(rows, "time timestamp, latitude double, longitude double, d2m double")
+    store = str(tmp_path / "s.zarr")
+    Z2.write_zarr_v2(src, store, ZS.ChunkedDatasetMeta(
+        uri=store, times=times, lats=lats, lons=lons,
+        chunk_time=2, chunk_lat=2, chunk_lon=2, variables=("d2m",),
+    ))
+    nc = str(tmp_path / "s.nc")
+    N3.write_netcdf3(
+        nc,
+        {"time": (pd.to_datetime(times).asi8 // 10**9).astype(">i4"),
+         "latitude": np.array(lats), "longitude": np.array(lons)},
+        {"d2m": np.repeat(np.arange(4.0), 4).reshape(4, 2, 2)},
+    )
+    for uri in (store, nc):
+        after = OP.open_dataset(spark, uri, time_range=("2024-07-01 01:00:00", None)).collect()
+        assert len(after) == 12 and {r.d2m for r in after} == {1.0, 2.0, 3.0}, uri
+        before = OP.open_dataset(spark, uri, time_range=(None, "2024-07-01 01:00:00")).collect()
+        assert len(before) == 4 and {r.d2m for r in before} == {0.0}, uri
+
+
 def test_netcdf_dispatch_and_header_probe(spark, tmp_path):
     path = str(tmp_path / "g.nc")
     times = np.array([1704067200], dtype=">i4")  # 2024-01-01

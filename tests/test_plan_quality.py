@@ -1000,7 +1000,7 @@ def test_time_pruned_zarr_scan_spreads_kept_chunks(spark, tmp_path):
 
     meta = _zarr_store(spark, str(tmp_path / "store.zarr"))
     tr = ("2024-01-01 02:00:00", "2024-01-01 05:00:00")
-    df = ZS.scan(spark, meta, time_range=tr, decoder="zarr2", include_uri=False)
+    df = ZS.scan(spark, meta, time_range=tr, include_uri=False)
     _assert_spread_decode(spark, "pruned", df, 8)
     assert df.count() == 3 * 3 * 4
 

@@ -62,3 +62,17 @@ def test_audit_only_queries_keep_their_oracles():
     # audit queries exist to be hash-gated; dropping an oracle would
     # quietly downgrade them to rows-only
     assert AUDIT_ONLY <= set(ORACLE)
+
+
+def test_driver_order_is_a_permutation_of_the_registry(capsys):
+    # __spark_entry__.queries() only reorders: every registered query,
+    # each once, bound to its registered function
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry", os.path.join(REPO, "__spark_entry__.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    got = mod.queries()
+    assert sorted(got) == sorted(SPARK) and len(got) == len(SPARK)
+    assert all(got[n] is SPARK[n] for n in got)
+    assert "[registry-order]" in capsys.readouterr().err

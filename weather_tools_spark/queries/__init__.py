@@ -32,104 +32,8 @@ ORACLE: dict[str, str] = {}
 # clean verdict exists for the name.
 CHECK_CHANGED: list[str] = [
     # Re-add a name here ONLY when its oracle or execution path changes.
-    # (r11's 25 entries were all driver-green in CORRECTNESS_r11 and are
-    # reset — VERDICT r11 item 4 — so the rotation window isn't starved.)
-    #
-    # r12 (ADVICE r11): the POT moment aggregate is now GLOBAL with the
-    # threshold re-attached by broadcast crossJoin — the old
-    # groupBy("u") returned 0 rows in the empty-exceedance degenerate
-    # regime while the oracle's ungrouped aggregate returned 1. Values
-    # identical on every tested store, plan changed:
-    "events_peak_over_threshold",
-    # r12 (ADVICE r11): yule_k/simpson_d promote one denominator factor
-    # to double before the N*N / N*(N-1) product on BOTH engines — the
-    # BIGINT product silently wraps in Spark past ~3e9 tokens/source
-    # while DuckDB raises. Oracle + plan changed:
-    "text_yule_k",
-    # r12 sfx10-probe fix: the dedup/similarity scan-parallelism guard
-    # (operators/dedup._widen, now also the cosine dgemm's floor) is
-    # UNCONDITIONAL for few-file parquet inputs — getNumPartitions
-    # overstated real parallelism on a single-row-group 74 MB corpus
-    # (18 byte-range tasks, 17 empty: a parquet task only materializes
-    # row groups whose midpoint lands in its range), serializing the
-    # shingle explode on one core (measured exponent 1.58 → 0.50 over
-    # the 3→10 decade after the fix). Values identical, the scan edge
-    # of every consumer's plan changed:
-    "dedup_exact_canonical",
-    "dedup_exact_normalized",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_jaccard_prefix_pairs",
-    "dedup_containment_pairs",
-    "dedup_minhash_lsh_pairs",
-    "dedup_simhash_pairs",
-    "dedup_winnowing_pairs",
-    "dedup_paragraph_dupes",
-    "dedup_cluster_canonical",
-    "corpus_clean_report_exact",
-    "corpus_decontamination",
-    "corpus_exact_substring_dedup",
-    "corpus_ngram_novelty",
-    "sim_cosine_topk",
-    "sim_cosine_topk_blocked",
-    "sim_random_projection_jl",
-    "ml_knn_label_accuracy",
-    "ml_label_propagation",
-    # r12 session 2: the shared trade-graph oracle CTEs (_sp_edges_sql /
-    # _sp_bfs_sql) are now MATERIALIZED — DuckDB was re-evaluating the
-    # fact-scale edge build once per CTE reference (exponentially
-    # through chained BFS levels; harmonic centrality measured 46.7 s
-    # -> 0.2 s at 100x). Results identical, oracle text changed for
-    # every consumer:
-    "graph_shortest_paths",
-    "graph_kcore",
-    "graph_ktruss",
-    "graph_connected_components",
-    "graph_assortativity",
-    "graph_edge_jaccard",
-    "graph_modularity_regions",
-    "graph_reciprocity",
-    # (the five md5/recall audit twins of the same kernels re-gate via
-    # their rows-only + audit-twin channel as usual)
-    #
-    # r12 OPTIMIZATION round (OPTIMIZATION_r12.md): execution paths
-    # rewritten for performance, values proven identical (interleaved
-    # A/B value-equality + driver-exact strict sweep at 3 SFs each):
-    "orders_open_backlog_monthly",
-    "ml_adaboost_stumps",
-    "ml_naive_bayes_langid",
-    "ml_nb_learning_curve",
-    "stats_kendall_tau",
-    "graph_assortativity",
-    "graph_edge_jaccard",
-    "graph_reciprocity",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_containment_pairs",
-    "dedup_cluster_canonical",
-    "q21_waiting_orders",
-    "orders_gini_coefficient",
-    "orders_lorenz_deciles",
-    "corpus_pack_sequences",
-    "text_langid_distribution",
-    "text_langid_accuracy",
-    "text_langid_cohens_kappa",
-    "ml_langid_mcc",
-    "ml_macro_f1_multiclass",
-    "corpus_bpe_train",
-    "corpus_bpe_tokenize",
-    # r13 OPTIMIZATION round (OPTIMIZATION_r13.md): probe-dispatched
-    # skew-safe shingle df-cap, pyarrow-native shingle kernel
-    # (mapInArrow), one-pass NB learning-curve training tables — values
-    # proven identical (kernel parity test + driver-exact strict sweep):
-    "dedup_ngram_jaccard_pairs",
-    "dedup_containment_pairs",
-    "dedup_jaccard_prefix_pairs",
-    "dedup_minhash_lsh_pairs",
-    "dedup_winnowing_pairs",
-    "dedup_cluster_canonical",
-    "corpus_decontamination",
-    "ml_nb_learning_curve",
-    "stats_kendall_tau",
-    "graph_assortativity",
+    # (Every earlier entry holds a clean verdict in CORRECTNESS_r*.json,
+    # so the list is reset and the rotation window isn't starved.)
 ]
 # A name can be re-listed under several change rationales above (e.g. a
 # graph query whose oracle CTE changed AND whose execution path was
@@ -159,44 +63,6 @@ AUDIT_ONLY: frozenset[str] = frozenset(
         "text_heavy_hitters_audit",
     }
 )
-
-# Names of queries first registered in round 2 — surfaced early in the
-# driver ordering (see __spark_entry__._ordered) so a prefix-sampling
-# driver verifies them the round they land.
-R02_NEW: list[str] = [
-    "dedup_embedding_lsh_pairs",
-    "dedup_minhash_md5_audit",
-    "sketch_error_bounds_audit",
-    "sim_ann_recall_audit",
-    "dedup_banded_recall_audit",
-    "dedup_winnowing_md5_audit",
-    "dedup_simhash_md5_audit",
-    "dedup_cluster_canonical",
-    "dq_column_profile",
-    "join_salted_equivalence",
-    "events_resample_1h_gapfill",
-    "geo_webmercator_project",
-    "multimodal_frame_resize_plan",
-    "corpus_train_split",
-    "text_token_rarity",
-    "events_conversion_window",
-    "sample_stratified_deterministic",
-    "unpivot_lineitem_metrics",
-    "corpus_decontamination",
-    "orders_cohort_retention",
-    "text_repetition_profile",
-    "pipeline_compaction_report",
-    "events_value_outliers",
-    "events_transition_matrix",
-    "orders_price_percentiles",
-    "customer_rfm_segments",
-    "text_bigram_counts",
-    "events_hourly_seasonality",
-    "text_heavy_hitters_audit",
-    "orders_open_backlog_monthly",
-    "pipeline_quarantine_report",
-    "documents_dup_rate_by_source",
-]
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

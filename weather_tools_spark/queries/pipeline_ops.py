@@ -455,7 +455,7 @@ def zarr_pruned_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/zarr_v2.write_zarr_v2 — genuine .zarray/.zmetadata JSON +
     C-order compressed chunk files), reopen it from consolidated
     metadata alone, run the CHUNK-PRUNED scan with the stdlib decoder
-    (np.frombuffer + zlib, zarr_scan._chunk_decoder(decoder='zarr2')),
+    (np.frombuffer + zlib, zarr_v2.zarr2_chunk_decoder),
     and aggregate the decoded values per variable. Cell values are an
     exact float64 function of the grid indices, so the DuckDB oracle
     recomputes the same sums arithmetically — a hash gate over the
@@ -500,7 +500,6 @@ def zarr_pruned_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         Z2.open_zarr_v2(store),
         time_range=("2024-03-01 02:00:00", "2024-03-01 05:00:00"),
         lat_range=(50.4, 50.8),  # lat indices 1,2 (50.75, 50.5)
-        decoder="zarr2",
     )
     melted = got.selectExpr(
         "stack(2, 'd2m', d2m, 'u10', u10) AS (variable, value)"
@@ -540,7 +539,7 @@ def netcdf_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic 2-day grid flows through the DISTRIBUTED file-per-day
     sink (sources/netcdf3.write_netcdf3_partitioned — genuine CDF-1
     bytes, executor tasks each serialize whole files), then back in
-    through hypercube ingest with decoder='auto', which routes the
+    through hypercube ingest, whose decode_auto routes the
     files to the stdlib classic codec by MAGIC BYTES (no xarray). The
     aggregate is over the decoded values; cell values are an exact
     float64 function of grid indices, so the DuckDB oracle recomputes
@@ -623,7 +622,7 @@ def netcdf4_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     superblock v0, symbol-table root group, v1 object headers, chunked
     v1-B-tree layout with a shuffle+deflate filter pipeline, one whole
     file per executor task), then back in through hypercube ingest
-    with decoder='auto', which routes the files to the stdlib HDF5
+    (decode_auto), which routes the files to the stdlib HDF5
     subset codec by the \\x89HDF magic (no xarray/h5py). The aggregate
     is over the decoded values; cell values are an exact float64
     function of grid indices, so the DuckDB oracle recomputes the same
@@ -785,7 +784,7 @@ def grib_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-slice, 2-parameter grid flows through the DISTRIBUTED GRIB2 sink
     (sources/grib2.write_grib2_partitioned — genuine WMO section
     layout, simple packing, one whole multi-message file per executor
-    task), then back in through hypercube ingest with decoder='auto',
+    task), then back in through hypercube ingest (decode_auto),
     which routes the files to the stdlib codec by the GRIB magic +
     edition byte. Cell values are exact multiples of 10^-3 so simple
     packing at D=3 round-trips exactly and the DuckDB oracle recomputes
@@ -865,8 +864,8 @@ def grib1_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTRIBUTED GRIB1 sink (sources/grib1.write_grib1_partitioned —
     genuine FM 92 Ed.1 section layout: 3-byte lengths, millidegree
     sign-magnitude grid, IBM hexadecimal-float reference value, simple
-    packing), then back in through hypercube ingest with
-    decoder='auto', which routes the files to the edition-1 stdlib
+    packing), then back in through hypercube ingest
+    (decode_auto), which routes the files to the edition-1 stdlib
     codec by the GRIB magic + edition byte — the reference's cfgrib
     edition fallback (weather_mv loader_pipeline/sinks.py:370-389) as
     a real decode path. Cell values are exact multiples of 10^-3 so

@@ -59,41 +59,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .opener import FORMATS, detect, expand, long_schema
+from .opener import _decoder_for, detect, expand, long_schema
 
 _PUSHABLE_COLS = ("latitude", "longitude", "time")
 _COORD_COLS = ("time", "latitude", "longitude")
-
-
-def _decoder_for(
-    kind: str, first: str, variables: list[str] | None = None, strict: bool = True
-):
-    """(decode_one, columns) for a single-file format — the same pairing
-    ``opener.open_dataset`` uses for its mapInPandas plan.
-
-    ``variables`` is the projection pushdown: when given, only those
-    data variables decode (``opts.variables`` on every decoder —
-    message-skip for GRIB, chunk-skip for HDF5, unpack-skip for
-    NetCDF-3) and the returned column list is coordinates + exactly
-    that subset. Unknown names raise when ``strict`` (the driver-side
-    schema probe — a typo should fail the query); decode tasks pass
-    ``strict=False`` so a glob member missing a variable still decodes
-    (the reindex backfills NaN, same as an unprojected read)."""
-    from types import SimpleNamespace
-
-    fmt = FORMATS.get(kind)
-    if fmt is None:
-        raise ValueError(f"format {kind!r} has no single-file decoder (zarr: use open_dataset)")
-    available = sorted(set(fmt.variables(first)))
-    if variables is not None:
-        unknown = sorted(set(variables) - set(available))
-        if unknown and strict:
-            raise ValueError(f"unknown variables {unknown} (file has {available})")
-        available = [v for v in available if v in set(variables)]
-        opts = SimpleNamespace(variables=list(available))
-    else:
-        opts = None
-    return (lambda p: fmt.decode(p, opts)), list(fmt.coords) + available
 
 
 class _FilePartition(InputPartition):

@@ -336,26 +336,21 @@ def gtiff_decode(path: str, opts=None, value_col: str = "value") -> pd.DataFrame
     """Raster → long-format rows (latitude, longitude, value, band
     metadata) — the rioxarray-open analog for the ingest surface.
     GeoTIFF is north-up: row 0 is the NORTHERN edge, so latitude
-    descends down the rows (the ERA5 grid convention)."""
+    descends down the rows (the ERA5 grid convention). A single band
+    has nothing to project, so ``opts`` is unused; ranges apply to the
+    decoded frame (``zarr_scan.mask_cells``)."""
     arr, (x0, y0), (sx, sy) = read_geotiff(path)
     h, w = arr.shape
     lons = x0 + np.arange(w) * sx
     lats = y0 - np.arange(h) * sy
     la, lo = np.meshgrid(lats, lons, indexing="ij")
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         {
             "latitude": la.ravel(),
             "longitude": lo.ravel(),
             value_col: np.asarray(arr, dtype="f8").ravel(),
         }
     )
-    if opts is not None and getattr(opts, "area", None) is not None:
-        n, w_, s, e_ = opts.area
-        pdf = pdf[
-            (pdf["latitude"] <= n) & (pdf["latitude"] >= s)
-            & (pdf["longitude"] >= w_) & (pdf["longitude"] <= e_)
-        ]
-    return pdf.reset_index(drop=True)
 
 
 def write_geotiff_partitioned(

@@ -400,9 +400,11 @@ def read_grib1_bytes(
 
 
 def grib1_decode(path: str, opts=None) -> pd.DataFrame:
-    """Hypercube-ingest decoder over GRIB1 bytes — same long-format
-    merge semantics as :func:`grib2.grib2_decode`, same
-    ``opts.variables`` message-filter pushdown."""
+    """Hypercube-ingest decoder over GRIB1 bytes — the long-format
+    merge of :func:`grib2.grib2_decode` (``grib2.merge_messages``),
+    same ``opts.variables`` message-filter pushdown."""
+    from .grib2 import merge_messages
+
     want = None
     variables = getattr(opts, "variables", None) if opts is not None else None
     if variables:
@@ -420,38 +422,7 @@ def grib1_decode(path: str, opts=None) -> pd.DataFrame:
                 # pruning must never silently blank a requested variable
                 want = None
                 break
-    messages = read_grib1(path, want)
-    has_step = any(m["step_hours"] for m in messages)
-    frames: dict[tuple, pd.DataFrame] = {}
-    for m in messages:
-        la, lo = np.meshgrid(m["lats"], m["lons"], indexing="ij")
-        key = (m["ref_time"], m["step_hours"], m["lats"].tobytes(), m["lons"].tobytes())
-        pdf = frames.get(key)
-        if pdf is None:
-            cols = {"time": m["ref_time"]}
-            if has_step:  # step as seconds-FLOAT64 (reference bq.py:440-441)
-                cols["step"] = m["step_hours"] * 3600.0
-                cols["valid_time"] = m["valid_time"]
-            cols["latitude"] = la.ravel()
-            cols["longitude"] = lo.ravel()
-            pdf = pd.DataFrame(cols)
-            frames[key] = pdf
-        pdf[m["param"]] = m["values"].ravel()
-    if not frames:
-        return pd.DataFrame({"time": [], "latitude": [], "longitude": []})
-    out = pd.concat(frames.values(), ignore_index=True)
-    if opts is not None:
-        if getattr(opts, "start_time", None) is not None:
-            out = out[out["time"] >= pd.Timestamp(opts.start_time)]
-        if getattr(opts, "end_time", None) is not None:
-            out = out[out["time"] < pd.Timestamp(opts.end_time)]
-        if getattr(opts, "area", None) is not None:
-            n, w, s, e = opts.area
-            out = out[
-                (out["latitude"] <= n) & (out["latitude"] >= s)
-                & (out["longitude"] >= w) & (out["longitude"] <= e)
-            ]
-    return out.reset_index(drop=True)
+    return merge_messages(read_grib1(path, want))
 
 
 def write_grib1_partitioned(

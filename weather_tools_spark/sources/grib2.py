@@ -1064,9 +1064,10 @@ def _decode_complex(s5: bytes, s7: bytes, npts: int) -> np.ndarray:
 
 def grib2_decode(path: str, opts=None) -> pd.DataFrame:
     """Hypercube-ingest decoder over GRIB2 bytes: one long-format frame
-    with a column per parameter (messages sharing grid + ref_time merge
-    into one row set — the hypercube-merge semantics of the xarray
-    branch). Honors ``opts.variables`` as the message filter pushdown."""
+    with a column per parameter (:func:`merge_messages`). Honors
+    ``opts.variables`` as the message filter pushdown; every cell of a
+    kept message decodes (ranges apply to the decoded frame,
+    ``zarr_scan.mask_cells``)."""
     want = None
     variables = getattr(opts, "variables", None) if opts is not None else None
     if variables:
@@ -1086,33 +1087,41 @@ def grib2_decode(path: str, opts=None) -> pd.DataFrame:
                 # never silently blank a requested variable
                 want = None
                 break
-    messages = read_grib2(path, want)
+    return merge_messages(read_grib2(path, want))
+
+
+def merge_messages(messages: list[dict]) -> pd.DataFrame:
+    """Decoded GRIB messages (edition 1 or 2) → one long-format frame
+    with a column per parameter: messages sharing reference time,
+    step, member, level and grid merge into one row set (the
+    hypercube-merge semantics of the xarray branch)."""
     # forecast-step / ensemble columns appear only when the file uses
-    # them (step ≠ 0 or PDS template 4.1) — static-grid decode output
-    # keeps its 3-coordinate schema
+    # them (step ≠ 0 or PDS template 4.1; GRIB1 messages carry no
+    # member or level) — static-grid decode output keeps its
+    # 3-coordinate schema
     has_step = any(m["step_hours"] for m in messages)
-    has_member = any(m["member"] is not None for m in messages)
+    has_member = any(m.get("member") is not None for m in messages)
     # the vertical axis exists when some PARAMETER appears at more than
     # one level — different variables at their own fixed surfaces
     # (2 m dewpoint, 10 m wind) still merge into one wide row set
     lv: dict[str, set] = {}
     for m in messages:
-        lv.setdefault(m["param"], set()).add((m["level_type"], m["level"]))
+        lv.setdefault(m["param"], set()).add((m.get("level_type"), m.get("level")))
     has_level = any(len(s) > 1 for s in lv.values())
     frames: dict[tuple, pd.DataFrame] = {}
     for m in messages:
-        if "lat_grid" in m:  # curvilinear (Lambert) grid: per-point coords
-            la, lo = m["lat_grid"], m["lon_grid"]
-        else:
-            la, lo = np.meshgrid(m["lats"], m["lons"], indexing="ij")
+        curvilinear = "lat_grid" in m  # Lambert/polar/reduced: per-point coords
+        la, lo = (m["lat_grid"], m["lon_grid"]) if curvilinear else (m["lats"], m["lons"])
         key = (
-            m["ref_time"], m["step_hours"], m["member"],
+            m["ref_time"], m["step_hours"], m.get("member"),
             m["level_type"] if has_level else None,
             m["level"] if has_level else None,
-            la.tobytes(), lo.tobytes(),
+            curvilinear, la.tobytes(), lo.tobytes(),
         )
         pdf = frames.get(key)
         if pdf is None:
+            if not curvilinear:
+                la, lo = np.meshgrid(la, lo, indexing="ij")
             cols = {"time": m["ref_time"]}
             if has_step:
                 # reference semantics: step stored as SECONDS-as-FLOAT64,
@@ -1130,19 +1139,7 @@ def grib2_decode(path: str, opts=None) -> pd.DataFrame:
         pdf[m["param"]] = m["values"].ravel()
     if not frames:
         return pd.DataFrame({"time": [], "latitude": [], "longitude": []})
-    out = pd.concat(frames.values(), ignore_index=True)
-    if opts is not None:
-        if getattr(opts, "start_time", None) is not None:
-            out = out[out["time"] >= pd.Timestamp(opts.start_time)]
-        if getattr(opts, "end_time", None) is not None:
-            out = out[out["time"] < pd.Timestamp(opts.end_time)]
-        if getattr(opts, "area", None) is not None:
-            n, w, s, e = opts.area
-            out = out[
-                (out["latitude"] <= n) & (out["latitude"] >= s)
-                & (out["longitude"] >= w) & (out["longitude"] <= e)
-            ]
-    return out.reset_index(drop=True)
+    return pd.concat(frames.values(), ignore_index=True)
 
 
 def grib_messages(pdf: pd.DataFrame, variables: list[str]) -> list[dict]:

@@ -995,7 +995,8 @@ def nc4_decode(path: str, opts=None) -> pd.DataFrame:
     contract and CF conventions as nc3_decode (sources/netcdf3.py).
     ``opts.variables`` is the projection pushdown: pruned variables'
     chunks are never inflated (see :func:`read_hdf5`); coordinates
-    always decode."""
+    always decode, and so does every cell (ranges apply to the decoded
+    frame, ``zarr_scan.mask_cells``)."""
     variables = getattr(opts, "variables", None) if opts is not None else None
     want = None
     if variables:
@@ -1019,19 +1020,7 @@ def nc4_decode(path: str, opts=None) -> pd.DataFrame:
         if arr.shape != shape:
             raise ValueError(f"{path}: variable {v} shape {arr.shape} != {shape}")
         out[v] = np.asarray(arr, dtype="f8").ravel()
-    pdf = pd.DataFrame(out)
-    if opts is not None:
-        if getattr(opts, "start_time", None) is not None:
-            pdf = pdf[pdf["time"] >= pd.Timestamp(opts.start_time)]
-        if getattr(opts, "end_time", None) is not None:
-            pdf = pdf[pdf["time"] < pd.Timestamp(opts.end_time)]
-        if getattr(opts, "area", None) is not None:
-            n, w, s, e = opts.area
-            pdf = pdf[
-                (pdf["latitude"] <= n) & (pdf["latitude"] >= s)
-                & (pdf["longitude"] >= w) & (pdf["longitude"] <= e)
-            ]
-    return pdf.reset_index(drop=True)
+    return pd.DataFrame(out)
 
 
 def write_netcdf4(

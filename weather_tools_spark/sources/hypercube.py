@@ -11,9 +11,11 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
   → ``normalized_var_name`` (pure) applied during decode;
 - coordinate-space explosion to rows (util.py:207-237, bq.py:338-386)
   → decode emits long-format pandas batches via ``mapInPandas``;
-- area/time filter *before* explosion (bq.py:332-335) → pushed into the
-  decoder via ``IngestOptions`` (chunk-level pruning) AND re-applied as
-  DataFrame filters (Catalyst prunes post-hoc);
+- area/time filter (bq.py:332-335) → ``IngestOptions`` become the
+  ``(time_range, lat_range, lon_range)`` every read path uses:
+  ``zarr_scan.mask_cells`` drops out-of-range cells inside the decode
+  task and ``zarr_scan.filter_cells`` is the exact residual (decoders
+  only decode and project);
 - geo columns via broadcast join against the grid lookup
   (bq.py:197-238, 344-375) → ``attach_geo``;
 - system columns data_import_time / data_uri / data_first_step
@@ -28,8 +30,7 @@ explicit sink/agg asks for one.
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass, field
-from typing import Callable
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -40,6 +41,7 @@ from pyspark.sql import types as T
 from weather_tools_spark.functions.geo import build_geo_lookup
 
 from .opener import FORMATS, detect, map_files
+from .zarr_scan import filter_cells, mask_cells
 
 # Canonical coordinate column set (mirrors the reference's
 # frozenset(('latitude','time','step','valid_time','longitude','number')),
@@ -123,11 +125,6 @@ class IngestOptions:
     area: tuple[float, float, float, float] | None = None  # N, W, S, E
     start_time: str | None = None
     end_time: str | None = None
-    lat_res: float = 1.0
-    lon_res: float = 1.0
-
-
-DecoderFn = Callable[[str, IngestOptions], pd.DataFrame]
 
 
 def _fake_grid_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
@@ -230,13 +227,6 @@ def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
     return (fmt.decode if fmt is not None else _xarray_decode)(uri, opts)
 
 
-DECODERS: dict[str, DecoderFn] = {
-    "fake": _fake_grid_decode,
-    "xarray": _xarray_decode,
-    **{kind: fmt.decode for kind, fmt in FORMATS.items()},
-}
-
-
 ROW_SCHEMA = T.StructType(
     [
         T.StructField("time", T.TimestampType()),
@@ -255,41 +245,39 @@ def ingest(
     spark: SparkSession,
     uris: list[str],
     opts: IngestOptions | None = None,
-    decoder: str = "auto",
     schema: T.StructType = ROW_SCHEMA,
 ) -> DataFrame:
     """File URIs → long-format row DataFrame.
 
     The paths spread over the tasks so each task decodes whole files
-    (the unit of I/O parallelism, exactly one shuffle-free stage);
-    decode emits Arrow batches via mapInPandas. At cluster scale the
-    same plan applies with thousands of files per job.
+    (the unit of I/O parallelism, exactly one shuffle-free stage) with
+    :func:`decode_auto`; decode emits Arrow batches via mapInPandas.
+    The area and time options apply as they do in
+    ``opener.open_dataset``: masked in the task, before
+    ``data_first_step`` is taken, with ``filter_cells`` as the
+    residual. At cluster scale the same plan applies with thousands of
+    files per job.
     """
     opts = opts or IngestOptions()
-    decode = decode_auto if decoder == "auto" else DECODERS[decoder]
+    time_range = lat_range = lon_range = None
+    if opts.start_time is not None or opts.end_time is not None:
+        time_range = (opts.start_time, opts.end_time)  # None leaves an end open
+    if opts.area is not None:
+        n, w, s, e = opts.area
+        lat_range, lon_range = (s, n), (w, e)
+    ranges = (time_range, lat_range, lon_range)
     data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
 
     def run(uri: str) -> pd.DataFrame:
-        rows = decode(uri, opts)
-        if opts.area is not None:
-            n, w, s, e = opts.area
-            rows = rows[
-                (rows["latitude"] <= n)
-                & (rows["latitude"] >= s)
-                & (rows["longitude"] >= w)
-                & (rows["longitude"] <= e)
-            ]
-        has_time = "time" in rows.columns  # a GeoTIFF has no time axis
-        if has_time and opts.start_time is not None:
-            rows = rows[rows["time"] >= pd.Timestamp(opts.start_time)]
-        if has_time and opts.end_time is not None:
-            rows = rows[rows["time"] < pd.Timestamp(opts.end_time)]
+        rows = mask_cells(decode_auto(uri, opts), *ranges)
         out = rows.reindex(columns=data_cols)
         out["data_uri"] = uri
+        has_time = "time" in rows.columns  # a GeoTIFF has no time axis
         out["data_first_step"] = rows["time"].min() if has_time and len(rows) else pd.NaT
         return out
 
-    return select_variables(map_files(spark, uris, run, schema), opts.variables)
+    rows = filter_cells(map_files(spark, uris, run, schema), *ranges)
+    return select_variables(rows, opts.variables)
 
 
 def with_system_columns(df: DataFrame, import_time: str | None = None) -> DataFrame:

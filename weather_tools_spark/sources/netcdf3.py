@@ -413,7 +413,9 @@ def nc3_decode(path: str, opts) -> pd.DataFrame:
     ``opts.variables`` is the projection pushdown (the reference's
     ``_only_target_vars``, weather_mv/loader_pipeline/util.py:159-191):
     data variables outside the set are never CF-unpacked or
-    materialized as columns — coordinates always decode."""
+    materialized as columns — coordinates always decode. Every cell
+    decodes: ranges apply to the decoded frame
+    (``zarr_scan.mask_cells``)."""
     want = None
     variables = getattr(opts, "variables", None) if opts is not None else None
     if variables:
@@ -431,19 +433,7 @@ def nc3_decode(path: str, opts) -> pd.DataFrame:
         if want is not None and v not in want:
             continue  # projected out — skip the unpack copy entirely
         out[v] = _cf_unpack(arr, attrs.get(v, {})).ravel()
-    pdf = pd.DataFrame(out)
-    if opts is not None:
-        if getattr(opts, "start_time", None) is not None:
-            pdf = pdf[pdf["time"] >= pd.Timestamp(opts.start_time)]
-        if getattr(opts, "end_time", None) is not None:
-            pdf = pdf[pdf["time"] < pd.Timestamp(opts.end_time)]
-        if getattr(opts, "area", None) is not None:
-            n, w, s, e = opts.area
-            pdf = pdf[
-                (pdf["latitude"] <= n) & (pdf["latitude"] >= s)
-                & (pdf["longitude"] >= w) & (pdf["longitude"] <= e)
-            ]
-    return pdf.reset_index(drop=True)
+    return pd.DataFrame(out)
 
 
 def write_netcdf3_partitioned(rows, out_dir: str, variables: list[str]) -> int:

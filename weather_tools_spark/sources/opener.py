@@ -18,20 +18,24 @@ all against the stdlib codecs (no xarray/cfgrib/rasterio):
   ``MM\\0*``, geotiff.py).
 
 ``open_dataset``, ``hypercube.decode_auto`` and ``format("weather")``
-(sources/datasource.py) all read the same table.
+(sources/datasource.py) all read the same table; ``open_dataset`` and
+``format("weather")`` pair a format with its projected decoder through
+:func:`_decoder_for`.
 
 Single-file formats probe only the file HEADER on the driver (variable
 names → output schema; the reference's metadata open) and decode on
 executors through :func:`map_files` — whole files spread over the
 tasks with no exchange before the decode, the plan the Zarr chunk
-scan, ``hypercube.ingest`` and the file splitter share. Range
-arguments mask the decoded frame inside the task, before the Arrow
-hand-off, and ``filter_cells`` stays the exact residual. The
-file sinks share the write side: :func:`grid_cubes` grids rows into
-NaN-filled cubes and :func:`write_buckets` serializes one whole file
-per time bucket on executors. The returned frame is plain long-format
-rows, so the xql SQL surface (plans/xql.py) runs on top by registering
-it as a view: ``open_dataset(spark, uri, view="era5")`` then
+scan, ``hypercube.ingest`` and the file splitter share. A decoder only
+decodes and projects (``opts.variables``); range arguments meet the
+decoded cells in ``zarr_scan.mask_cells``, inside the task before the
+Arrow hand-off, and ``zarr_scan.filter_cells`` stays the exact
+residual, on every read path. The file sinks share the write side:
+:func:`grid_cubes` grids rows into NaN-filled cubes and
+:func:`write_buckets` serializes one whole file per time bucket on
+executors. The returned frame is plain long-format rows, so the xql
+SQL surface (plans/xql.py) runs on top by registering it as a view:
+``open_dataset(spark, uri, view="era5")`` then
 ``xql.run_query(spark, "SELECT ... FROM era5 ...")`` — the reference's
 flagship flow end-to-end.
 """
@@ -74,6 +78,37 @@ FORMATS: dict[str, Format] = {
     # single value band and no time axis: nothing variable-level to prune
     "geotiff": Format(is_tiff, gtiff_decode, lambda path: ["value"], ("latitude", "longitude")),
 }
+
+
+def _decoder_for(
+    kind: str, first: str, variables: list[str] | None = None, strict: bool = True
+):
+    """(decode_one, columns) for a single-file format — the pairing
+    :func:`open_dataset` and ``format("weather")`` share.
+
+    ``variables`` is the projection pushdown: when given, only those
+    data variables decode (``opts.variables`` on every decoder —
+    message-skip for GRIB, chunk-skip for HDF5, unpack-skip for
+    NetCDF-3) and the returned column list is coordinates + exactly
+    that subset. Unknown names raise when ``strict`` (the driver-side
+    schema probe — a typo should fail the query); decode tasks pass
+    ``strict=False`` so a glob member missing a variable still decodes
+    (the reindex backfills NaN, same as an unprojected read)."""
+    from types import SimpleNamespace
+
+    fmt = FORMATS.get(kind)
+    if fmt is None:
+        raise ValueError(f"format {kind!r} has no single-file decoder (zarr: use open_dataset)")
+    available = sorted(set(fmt.variables(first)))
+    if variables is not None:
+        unknown = sorted(set(variables) - set(available))
+        if unknown and strict:
+            raise ValueError(f"unknown variables {unknown} (file has {available})")
+        available = [v for v in available if v in set(variables)]
+        opts = SimpleNamespace(variables=list(available))
+    else:
+        opts = None
+    return (lambda p: fmt.decode(p, opts)), list(fmt.coords) + available
 
 
 def expand(uri: str) -> list[str]:
@@ -184,7 +219,7 @@ def write_buckets(rows: DataFrame, out_dir: str, bucket: str, write_one) -> int:
 def open_dataset(
     spark: SparkSession,
     uri: str,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
     view: str | None = None,
@@ -196,7 +231,7 @@ def open_dataset(
     arguments prune CHUNKS for zarr stores (parquet row-group-style
     min/max pruning, on the driver), mask the decoded cells inside the
     decode task, and apply again as ordinary filters (the exact
-    residual).
+    residual). Time is kept in ``[start, end)``; a ``None`` end is open.
 
     ``variables`` is the projection pushdown (the reference's
     ``_only_target_vars``, weather_mv/loader_pipeline/util.py:159-191):
@@ -257,15 +292,10 @@ def open_dataset(
             meta = dataclasses.replace(
                 meta, variables=tuple(v for v in meta.variables if v in set(variables))
             )
-        df = ZS.scan(
-            spark, meta, time_range, lat_range, lon_range,
-            decoder="zarr2", include_uri=False,
-        )
+        df = ZS.scan(spark, meta, time_range, lat_range, lon_range, include_uri=False)
     else:
         # the decoder pairing — projection pushdown included — is the
         # one format("weather") uses
-        from .datasource import _decoder_for
-
         decode_one, cols = _decoder_for(kind, uris[0], variables)
 
         def run_one(path: str) -> pd.DataFrame:

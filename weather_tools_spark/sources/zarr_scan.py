@@ -16,16 +16,19 @@ engine plans scans the same way a columnar reader plans row-groups:
 
 The manifest is a small pandas frame built and pruned on the driver
 (``chunk_manifest`` gives it as a Spark DataFrame for the streaming
-spec files). The ``"fake"`` decoder is a deterministic stand-in for tests; the
-``"zarr2"`` decoder reads real Zarr v2/v3 stores (sources/zarr_v2.py).
+spec files); chunks decode from real Zarr v2/v3 stores
+(``zarr_v2.zarr2_chunk_decoder``).
+
+:func:`mask_cells` (in the decode task) and :func:`filter_cells` (the
+exact residual) are the one place ranges meet decoded cells, for every
+read path: this scan, ``opener.open_dataset`` and ``hypercube.ingest``.
+The file decoders only decode and project.
 """
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,25 +100,26 @@ def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
     return spark.createDataFrame(chunk_table(meta), CHUNK_MANIFEST_SCHEMA)
 
 
-def _time_bounds(time_range: tuple[str, str] | None):
+def _time_bounds(time_range: tuple[str | None, str | None] | None):
     """``time_range`` as tz-naive pandas timestamps widened to whole
-    microseconds, for masks and pruning on pandas frames; ``None`` when
-    there is no range, or a bound carries a zone or does not parse
-    (time is then left to :func:`filter_cells`)."""
+    microseconds, for masks and pruning on pandas frames, with ``None``
+    for an open end; ``None`` when there is no range, or a bound
+    carries a zone or does not parse (time is then left to
+    :func:`filter_cells`)."""
     if time_range is None:
         return None
     try:
-        lo, hi = (pd.Timestamp(t) for t in time_range)
+        lo, hi = (None if t is None else pd.Timestamp(t) for t in time_range)
     except (TypeError, ValueError):
         return None
-    if lo.tzinfo is not None or hi.tzinfo is not None:
+    if any(t is not None and t.tzinfo is not None for t in (lo, hi)):
         return None
-    return lo.floor("us"), hi.ceil("us")
+    return (None if lo is None else lo.floor("us")), (None if hi is None else hi.ceil("us"))
 
 
 def prune_chunks(
     manifest: pd.DataFrame,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
 ) -> pd.DataFrame:
@@ -125,9 +129,11 @@ def prune_chunks(
     min/max semantics applied to chunks. A time bound that is not a
     plain timestamp prunes nothing."""
     keep = pd.Series(True, index=manifest.index)
-    bounds = _time_bounds(time_range)
-    if bounds is not None:
-        keep &= (manifest["time_max"] >= bounds[0]) & (manifest["time_min"] < bounds[1])
+    lo, hi = _time_bounds(time_range) or (None, None)
+    if lo is not None:
+        keep &= manifest["time_max"] >= lo
+    if hi is not None:
+        keep &= manifest["time_min"] < hi
     if lat_range is not None:
         keep &= (manifest["lat_max"] >= lat_range[0]) & (manifest["lat_min"] <= lat_range[1])
     if lon_range is not None:
@@ -137,18 +143,20 @@ def prune_chunks(
 
 def filter_cells(
     rows: DataFrame,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """The residual cell-level range filter applied after decode: time
-    in ``[start, end)``, latitude and longitude within their closed
-    ranges. Frames without a time axis (GeoTIFF) ignore ``time_range``."""
+    in ``[start, end)`` (``None`` leaves that end open), latitude and
+    longitude within their closed ranges. Frames without a time axis
+    (GeoTIFF) ignore ``time_range``."""
     if time_range is not None and "time" in rows.columns:
-        rows = rows.filter(
-            (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
-            & (F.col("time") < F.lit(time_range[1]).cast("timestamp"))
-        )
+        start, end = time_range
+        if start is not None:
+            rows = rows.filter(F.col("time") >= F.lit(start).cast("timestamp"))
+        if end is not None:
+            rows = rows.filter(F.col("time") < F.lit(end).cast("timestamp"))
     if lat_range is not None:
         rows = rows.filter(F.col("latitude").between(*lat_range))
     if lon_range is not None:
@@ -158,7 +166,7 @@ def filter_cells(
 
 def mask_cells(
     pdf: pd.DataFrame,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
 ) -> pd.DataFrame:
@@ -168,9 +176,11 @@ def mask_cells(
     that is not a plain timestamp, masks no time), so ``filter_cells``
     stays the exact residual."""
     keep = pd.Series(True, index=pdf.index)
-    bounds = _time_bounds(time_range) if "time" in pdf.columns else None
-    if bounds is not None:
-        keep &= (pdf["time"] >= bounds[0]) & (pdf["time"] < bounds[1])
+    lo, hi = (_time_bounds(time_range) if "time" in pdf.columns else None) or (None, None)
+    if lo is not None:
+        keep &= pdf["time"] >= lo
+    if hi is not None:
+        keep &= pdf["time"] < hi
     if lat_range is not None:
         keep &= pdf["latitude"].between(*lat_range)
     if lon_range is not None:
@@ -190,126 +200,6 @@ def row_schema(meta: ChunkedDatasetMeta, include_uri: bool = True):
     if include_uri:
         fields.append(T.StructField("data_uri", T.StringType()))
     return T.StructType(fields)
-
-
-ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("time", T.TimestampType()),
-        T.StructField("latitude", T.DoubleType()),
-        T.StructField("longitude", T.DoubleType()),
-        T.StructField("d2m", T.DoubleType()),
-        T.StructField("u10", T.DoubleType()),
-        T.StructField("v10", T.DoubleType()),
-        T.StructField("data_uri", T.StringType()),
-    ]
-)
-
-
-def _fake_chunk_decode(key: tuple, meta: ChunkedDatasetMeta) -> pd.DataFrame:
-    """Deterministic fake chunk reader (no zarr lib in container): values
-    are a pure function of (uri, chunk key, cell), so full-scan vs
-    pruned-scan equivalence is testable."""
-    _, t_idx, lat_idx, lon_idx = key
-    times = pd.to_datetime(meta.times)
-    t0 = t_idx * meta.chunk_time
-    la0 = lat_idx * meta.chunk_lat
-    lo0 = lon_idx * meta.chunk_lon
-    tchunk = times[t0 : t0 + meta.chunk_time]
-    lachunk = meta.lats[la0 : la0 + meta.chunk_lat]
-    lochunk = meta.lons[lo0 : lo0 + meta.chunk_lon]
-    seed = int(
-        hashlib.md5(f"{meta.uri}:{t_idx}:{lat_idx}:{lon_idx}".encode()).hexdigest()[:8],
-        16,
-    )
-    rng = np.random.RandomState(seed)
-    tt, la, lo = np.meshgrid(tchunk, lachunk, lochunk, indexing="ij")
-    n = tt.size
-    return pd.DataFrame(
-        {
-            "time": tt.ravel(),
-            "latitude": np.asarray(la.ravel(), dtype=float),
-            "longitude": np.asarray(lo.ravel(), dtype=float),
-            "d2m": (rng.rand(n) * 150 + 180).round(4),
-            "u10": (rng.rand(n) * 60 - 30).round(4),
-            "v10": (rng.rand(n) * 60 - 30).round(4),
-            "data_uri": meta.uri,
-        }
-    )
-
-
-def _chunk_decoder(meta: ChunkedDatasetMeta, decoder: str, include_uri: bool = True):
-    """Shared chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → rows
-    decoder for the batch scan and the streaming ingest.
-
-    - ``"fake"`` — deterministic synthetic values (test plumbing);
-    - ``"zarr2"`` — REAL Zarr v2 chunk decode, stdlib-only (JSON
-      metadata + zlib/raw codec + ``np.frombuffer``); ``meta.uri``
-      must point at a v2 store (see sources/zarr_v2.py). This is the
-      decode path the reference reaches through ``xr.open_zarr``
-      (xql/src/xql/open.py:92);
-    - anything else requires the zarr/xarray libs, absent here."""
-    if decoder == "zarr2":
-        from .zarr_v2 import zarr2_chunk_decoder
-
-        return zarr2_chunk_decoder(meta, include_uri=include_uri)
-    if decoder != "fake":  # pragma: no cover
-        raise NotImplementedError("real zarr decoding requires the zarr/xarray libs")
-
-    def decode(key: tuple) -> pd.DataFrame:
-        out = _fake_chunk_decode(key, meta)
-        return out if include_uri else out.drop(columns=["data_uri"])
-
-    return decode
-
-
-CONSOLIDATED_METADATA = "_consolidated_metadata.json"
-
-
-def template_dict(meta: ChunkedDatasetMeta) -> dict:
-    """Canonical JSON-able form of the store template: axes, chunk
-    geometry, variables — what zarr consolidates into ``.zmetadata``."""
-    return {
-        "uri": meta.uri,
-        "times": [str(t) for t in pd.to_datetime(meta.times)],
-        "lats": list(map(float, meta.lats)),
-        "lons": list(map(float, meta.lons)),
-        "chunks": {
-            "time": meta.chunk_time,
-            "latitude": meta.chunk_lat,
-            "longitude": meta.chunk_lon,
-        },
-        "variables": list(meta.variables),
-    }
-
-
-def write_consolidated_metadata(out_dir: str, meta: ChunkedDatasetMeta) -> None:
-    import json
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, CONSOLIDATED_METADATA), "w") as f:
-        json.dump(template_dict(meta), f, sort_keys=True)
-
-
-def read_consolidated_metadata(out_dir: str) -> ChunkedDatasetMeta:
-    """Template read-back: one metadata file open instead of listing the
-    store — the point of zarr's consolidated metadata on object stores,
-    where directory listings are slow and unatomic."""
-    import json
-    import os
-
-    with open(os.path.join(out_dir, CONSOLIDATED_METADATA)) as f:
-        d = json.load(f)
-    return ChunkedDatasetMeta(
-        uri=d["uri"],
-        times=d["times"],
-        lats=d["lats"],
-        lons=d["lons"],
-        chunk_time=d["chunks"]["time"],
-        chunk_lat=d["chunks"]["latitude"],
-        chunk_lon=d["chunks"]["longitude"],
-        variables=tuple(d["variables"]),
-    )
 
 
 def time_micros_sql(col: str) -> str:
@@ -343,71 +233,12 @@ def axis_positions_sql(meta: ChunkedDatasetMeta) -> tuple[str, str, str]:
     )
 
 
-def write_chunked(
-    rows: DataFrame,
-    out_dir: str,
-    meta: ChunkedDatasetMeta,
-    strict: bool = True,
-) -> int:
-    """Chunked store *sink* against a precomputed template — the engine
-    analog of xbeam.ChunksToZarr with a template dataset (weather_mv
-    regrid.py:384-390): every row is assigned its chunk key from the
-    template's chunk geometry (pure arithmetic against the broadcast
-    axis arrays), and the partitioned write produces one directory per
-    chunk — the same physical layout contract (aligned whole chunks, no
-    partial files) a Zarr store requires, materialized as parquet so
-    this container needs no zarr library. The template itself is written
-    as consolidated metadata next to the chunks, so readers plan from
-    ONE file instead of listing the store.
-
-    Rows whose coordinates fall outside the template axes have no chunk
-    (the reference's template write would corrupt or error): they are
-    counted via ``observe`` (no extra job), excluded from the store, and
-    ``strict=True`` raises after the write reporting the count. Returns
-    the number of off-template rows (0 in the healthy path).
-
-    Read-back contract: ``scan``'s pruning semantics apply to the
-    written store by construction (directory = chunk)."""
-    t, la, lo = axis_positions_sql(meta)
-    keyed = rows.selectExpr(
-        "*",
-        f"CAST({t} div {meta.chunk_time} AS INT) AS t_idx",
-        f"CAST({la} div {meta.chunk_lat} AS INT) AS lat_idx",
-        f"CAST({lo} div {meta.chunk_lon} AS INT) AS lon_idx",
-    )
-    off_template = (
-        F.col("t_idx").isNull() | F.col("lat_idx").isNull() | F.col("lon_idx").isNull()
-    )
-    from pyspark.sql import Observation
-
-    obs = Observation("chunk_sink")
-    keyed = keyed.observe(
-        obs, F.sum(F.when(off_template, 1).otherwise(0)).alias("n_off_template")
-    ).filter(~off_template)
-    keyed.write.mode("overwrite").partitionBy("t_idx", "lat_idx", "lon_idx").parquet(out_dir)
-    write_consolidated_metadata(out_dir, meta)
-    n_bad = int(obs.get["n_off_template"] or 0)
-    if strict and n_bad:
-        raise ValueError(
-            f"{n_bad} rows fall outside the store template axes; "
-            "they were excluded from the written store"
-        )
-    return n_bad
-
-
-def read_chunked(spark: SparkSession, path: str) -> DataFrame:
-    """Read a chunked store written by ``write_chunked`` (partition
-    columns give Catalyst chunk-level pruning for free)."""
-    return spark.read.parquet(path)
-
-
 def stream_ingest(
     spark: SparkSession,
     meta: ChunkedDatasetMeta,
     manifest_dir: str,
     sink_fn,
     max_chunks_per_trigger: int = 4,
-    decoder: str = "fake",
     checkpoint_dir: str | None = None,
 ):
     """Streaming chunk ingest — the reference's Zarr→rows streaming path
@@ -426,6 +257,7 @@ def stream_ingest(
     Returns the started StreamingQuery (caller drives/stops it).
     """
     from .opener import map_files
+    from .zarr_v2 import zarr2_chunk_decoder
 
     spec_schema = (
         "uri string, t_idx int, lat_idx int, lon_idx int"
@@ -435,7 +267,7 @@ def stream_ingest(
         .option("maxFilesPerTrigger", max_chunks_per_trigger)
         .json(manifest_dir)
     )
-    decode = _chunk_decoder(meta, decoder)
+    decode = zarr2_chunk_decoder(meta)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         keys = [tuple(r) for r in batch_df.collect()]
@@ -467,10 +299,9 @@ def write_chunk_specs(spark: SparkSession, meta: ChunkedDatasetMeta, manifest_di
 def scan(
     spark: SparkSession,
     meta: ChunkedDatasetMeta,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     lat_range: tuple[float, float] | None = None,
     lon_range: tuple[float, float] | None = None,
-    decoder: str = "fake",
     include_uri: bool = True,
 ) -> DataFrame:
     """Pruned chunk scan → long-format rows. The chunk list is built
@@ -485,10 +316,11 @@ def scan(
     (747M rows) that is ~30 GB of serialized strings the consumer
     (open_dataset) previously dropped one operator later."""
     from .opener import map_files
+    from .zarr_v2 import zarr2_chunk_decoder
 
     kept = prune_chunks(chunk_table(meta), time_range, lat_range, lon_range)
     keys = list(kept[["uri", "t_idx", "lat_idx", "lon_idx"]].itertuples(index=False, name=None))
-    decode = _chunk_decoder(meta, decoder, include_uri=include_uri)
+    decode = zarr2_chunk_decoder(meta, include_uri=include_uri)
 
     def run_one(key: tuple) -> pd.DataFrame:
         return mask_cells(decode(key), time_range, lat_range, lon_range)

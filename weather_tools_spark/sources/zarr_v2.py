@@ -20,8 +20,8 @@ value). This module implements that format directly:
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
   read (the point of ``.zmetadata`` on object stores).
 - :func:`decode_chunk` — bytes → numpy for every codec below, used by
-  ``zarr_scan._chunk_decoder(decoder="zarr2")`` inside the pruned
-  ``mapInPandas`` scan.
+  :func:`zarr2_chunk_decoder` inside the pruned ``mapInPandas`` scan
+  (``zarr_scan.scan``).
 
 Compressor support: None (raw), zlib, gzip (v3), and the blosc1
 container — the container format is parsed here (header/bstarts/splits/
@@ -1040,8 +1040,8 @@ def _decode_shard(buf: bytes, za: dict) -> np.ndarray:
 
 def zarr2_chunk_decoder(meta: ChunkedDatasetMeta, include_uri: bool = True):
     """Chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → long rows over a
-    real Zarr v2 store at ``meta.uri`` — the real-decoder branch of
-    ``zarr_scan._chunk_decoder``. Per task: one metadata read, then
+    real Zarr v2 or v3 store at ``meta.uri`` — the chunk decoder of
+    ``zarr_scan.scan`` and ``zarr_scan.stream_ingest``. Per task: one metadata read, then
     whole-chunk decodes; coordinates come from the (small) template
     axes carried in the closure, values byte-exact from the store."""
     times = pd.to_datetime(meta.times)
