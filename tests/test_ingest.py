@@ -95,6 +95,81 @@ def test_chunk_pruning_reduces_chunks(spark):
     assert len(pruned) == 1  # one time chunk × one lat chunk × one lon chunk
 
 
+def _store(spark, tmp_path) -> Z.ChunkedDatasetMeta:
+    """``_meta()``'s geometry written as a real Zarr store, each value
+    an exact function of its variable and cell."""
+    import dataclasses
+
+    import pandas as pd
+
+    from weather_tools_spark.sources import zarr_v2 as Z2
+
+    meta = dataclasses.replace(_meta(), uri=str(tmp_path / "store.zarr"))
+    rows = [
+        (t.to_pydatetime(), la, lo) + tuple(ti * 1e4 + lai * 100 + loi + k + 0.25 for k in range(3))
+        for ti, t in enumerate(pd.to_datetime(meta.times))
+        for lai, la in enumerate(meta.lats)
+        for loi, lo in enumerate(meta.lons)
+    ]
+    src = spark.createDataFrame(rows, ["time", "latitude", "longitude", *meta.variables])
+    Z2.write_zarr_v2(src, meta.uri, meta)
+    return Z2.open_zarr_v2(meta.uri)
+
+
+def test_stream_ingest_chunks_match_batch_scan(spark, tmp_path):
+    """Streaming chunk ingest (foreachBatch) must deliver exactly the
+    rows the batch scan produces, across micro-batches."""
+    meta = _store(spark, tmp_path)
+    n_chunks = Z.write_chunk_specs(spark, meta, str(tmp_path / "specs"))
+    assert n_chunks == 2 * 4 * 4
+    out_dir = str(tmp_path / "rows")
+    batches = []
+
+    def sink(df, batch_id):
+        batches.append(batch_id)
+        df.write.mode("append").parquet(out_dir)
+
+    q = Z.stream_ingest(
+        spark, meta, str(tmp_path / "specs"), sink,
+        max_chunks_per_trigger=8, checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(300), "streaming ingest did not finish in time"
+    got = spark.read.parquet(out_dir)
+    want = Z.scan(spark, meta)
+    assert got.count() == want.count() == 48 * 8 * 8
+    key = ["time", "latitude", "longitude"]
+    a = got.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
+    b = want.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
+    assert a.equals(b)
+    # 32 specs over ~32 files at 8 files/trigger → several micro-batches
+    # (round-robin repartition can leave a few empty files, so the exact
+    # count may be one less than ceil(32/8))
+    assert len(batches) >= 3, batches
+
+
+def test_pruned_scan_equals_full_scan_filtered(spark, tmp_path):
+    meta = _store(spark, tmp_path)
+    tr = ("2018-01-01 06:00:00", "2018-01-02 06:00:00")
+    la = (46.0, 48.0)
+    lo = (-106.0, -104.0)
+    pruned = Z.scan(spark, meta, time_range=tr, lat_range=la, lon_range=lo).toPandas()
+    full = (
+        Z.scan(spark, meta)
+        .filter(
+            (F.col("time") >= F.lit(tr[0]).cast("timestamp"))
+            & (F.col("time") < F.lit(tr[1]).cast("timestamp"))
+            & F.col("latitude").between(*la)
+            & F.col("longitude").between(*lo)
+        )
+        .toPandas()
+    )
+    key = ["time", "latitude", "longitude"]
+    a = pruned.sort_values(key).reset_index(drop=True)
+    b = full.sort_values(key).reset_index(drop=True)
+    assert a.equals(b)
+    assert len(a) == 24 * 3 * 3
+
+
 def test_merge_normalized_wide_schema(spark):
     import datetime as dt
 
