@@ -296,7 +296,7 @@ def test_mv_zarr_sink_axes_cells_and_released_cache(spark, tmp_path, grib_days):
     """mv --zarr over a multi-file, multi-time glob with --area: the
     store's axes are the area-filtered rows' distinct values (time and
     longitude ascending, latitude north → south), every cell round-trips,
-    and the held decode is released."""
+    and nothing stays cached."""
     from weather_tools_spark.sources.opener import open_dataset
     from weather_tools_spark.sources.zarr_v2 import open_zarr_v2
 
@@ -320,16 +320,28 @@ def test_mv_zarr_sink_axes_cells_and_released_cache(spark, tmp_path, grib_days):
     assert cells(open_dataset(spark, store).collect()) == cells(src)
 
 
-def test_mv_zarr_sink_releases_cache_on_failure(spark, tmp_path, grib_days, monkeypatch):
+def test_mv_zarr_sink_never_persists(spark, tmp_path, grib_days, monkeypatch):
+    """mv --zarr holds no copy of its input: the axes come from file
+    headers and the chunk writer is the one pass over the rows, so no
+    frame is persisted or cached, whether the write succeeds or fails."""
+    from pyspark.sql import DataFrame
+
     from weather_tools_spark.sources import zarr_v2
+
+    for name in ("persist", "cache"):
+        monkeypatch.setattr(
+            DataFrame, name, lambda self, *a, _n=name, **k: pytest.fail(f"mv --zarr ran {_n}")
+        )
+    cached = _persistent_rdds(spark)
+    assert main(["mv", "--uris", grib_days, "--output", str(tmp_path / "a.zarr"), "--zarr"]) == 0
+    assert _persistent_rdds(spark) == cached
 
     def boom(*a, **k):
         raise RuntimeError("chunk write failed")
 
     monkeypatch.setattr(zarr_v2, "write_zarr_v2", boom)
-    cached = _persistent_rdds(spark)
     with pytest.raises(RuntimeError, match="chunk write failed"):
-        main(["mv", "--uris", grib_days, "--output", str(tmp_path / "s.zarr"), "--zarr"])
+        main(["mv", "--uris", grib_days, "--output", str(tmp_path / "b.zarr"), "--zarr"])
     assert _persistent_rdds(spark) == cached
 
 

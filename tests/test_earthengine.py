@@ -283,3 +283,21 @@ def test_completion_poll_targets_own_task_under_concurrency(spark, tmp_path):
     assert fake.tasks["task-1"] == ["COMPLETED"]  # own task polled to done
     # the foreign task was NOT consumed past its own clock by our poll
     assert "FAILED" in fake.tasks["other-workers-task"]
+
+
+def test_time_range_open_end_gets_every_image_from_t_on(spark):
+    """``time_range=(t, None)`` keeps every image from ``t`` on, in the
+    manifest and through ``open_dataset``; ``(None, t)`` every image
+    before ``t``."""
+    import pandas as pd
+
+    info = EE.FakeEEClient().get_asset_info("A")  # the factory's two images
+    t1 = str(pd.Timestamp(info["times"][1], unit="s"))
+    assert list(EE.chunk_manifest(info, time_range=(t1, None))["t_index"].unique()) == [1]
+    assert list(EE.chunk_manifest(info, time_range=(None, t1))["t_index"].unique()) == [0]
+    rows = OP.open_dataset(
+        spark, "ee://A", client_factory=EE.FakeEEClient, time_range=(t1, None)
+    ).collect()
+    every = EE.open_ee(spark, "ee://A", EE.FakeEEClient).collect()
+    assert sorted(rows) == sorted(r for r in every if r.time >= pd.Timestamp(t1))
+    assert {r.time for r in rows} == {pd.Timestamp(info["times"][1], unit="s")}

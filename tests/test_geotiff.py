@@ -66,6 +66,19 @@ def test_decode_long_format_georeferencing(spark, tmp_path):
     }
 
 
+
+def test_ingest_under_the_default_schema_gives_a_null_time(spark, tmp_path):
+    """A raster has no time axis: under the default ``ROW_SCHEMA`` its
+    cells ingest with a typed null ``time``."""
+    arr, origin, pixel = _raster()
+    path = str(tmp_path / "t.tif")
+    GT.write_geotiff(path, arr, origin, pixel)
+    rows = H.ingest(spark, [path], H.IngestOptions(area=(52.0, 4.4, 51.6, 4.8))).collect()
+    assert {(r.latitude, r.longitude) for r in rows} == {
+        (52.0, 4.5), (52.0, 4.75), (51.75, 4.5), (51.75, 4.75),
+    }
+    assert all(r.time is None and r.data_first_step is None for r in rows)
+
 def test_partitioned_sink_one_raster_per_slice(spark, tmp_path):
     rows = []
     for h in (0, 12):

@@ -83,3 +83,20 @@ def test_manifest_parquet_roundtrip_prunes_in_catalyst(spark, tmp_path):
     assert "PushedFilters" in plan or "v10" in plan
     out = scan_grib_manifest(spark, man, params=["v10"]).collect()
     assert len(out) == 12 and {r.param for r in out} == {"v10"}
+
+
+def test_scan_time_range_open_ends_match_an_unfiltered_scan(spark, tmp_path):
+    """A ``None`` end of ``time_range`` is open: each open-ended scan
+    equals the unfiltered scan filtered on that side alone."""
+    man = build_grib_manifest(spark, _corpus(tmp_path))
+
+    def rows(**kw):
+        return sorted(tuple(r) for r in scan_grib_manifest(spark, man, **kw).collect())
+
+    everything = rows()
+    cut = np.datetime64("2024-05-02T00:00:00")
+    since = rows(time_range=("2024-05-02", None))
+    until = rows(time_range=(None, "2024-05-02"))
+    assert since == [r for r in everything if np.datetime64(r[0]) >= cut] and since
+    assert until == [r for r in everything if np.datetime64(r[0]) < cut] and until
+    assert rows(time_range=(None, None)) == everything

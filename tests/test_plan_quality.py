@@ -1101,13 +1101,14 @@ def _mv_job_count(spark, tmp_path, *flags) -> int:
 
 
 def test_zarr_sink_decodes_once_job_count(spark, tmp_path):
-    """mv --zarr holds one decode for the sink's lifetime: one aggregate
-    job derives all three axes and the chunk writer reads the held rows.
-    5 jobs on this input; deriving each axis with its own
-    distinct/sort scan and decoding again for the write took 19, an
-    exchange in front of the decode took one more, and counting the
-    written chunks with a ``count()`` one more again."""
-    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 5
+    """mv --zarr decodes its input once, in the chunk writer: the store
+    axes come from file headers on the driver. 2 jobs on this input;
+    persisting the decode and deriving the axes with one aggregate job
+    over it took 5, deriving each axis with its own distinct/sort scan
+    and decoding again for the write took 19, an exchange in front of
+    the decode took one more, and counting the written chunks with a
+    ``count()`` one more again."""
+    assert _mv_job_count(spark, tmp_path, "--zarr", "--chunks", "2,2,2") == 2
 
 
 def test_zarr_chunk_write_plan_one_exchange_one_mapinpandas(spark, tmp_path):

@@ -139,7 +139,7 @@ def _manifest_batch(spark, cfg, parts, status: str, seq: int):
 def cmd_mv(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
-    from weather_tools_spark.sources.opener import open_dataset
+    from weather_tools_spark.sources.opener import dataset_axes, open_dataset
 
     # flag combinations that cannot work fail here, before any Spark job
     if args.geo and (args.zarr or args.netcdf):
@@ -156,13 +156,20 @@ def cmd_mv(args: argparse.Namespace) -> int:
                   file=sys.stderr)
             return 2
 
-    spark = _spark("weather-mv")
     lat_range = lon_range = None
     if args.area:
         n, w, s, e = args.area
         lat_range, lon_range = (s, n), (w, e)
     keep = [v for v in args.variables.split(",") if v]
     try:
+        # the Zarr store's template: its axes from the input's headers,
+        # read before a session exists (an input with no time axis, or
+        # an ee:// asset, fails here)
+        axes = (
+            dataset_axes(args.uris, None, lat_range, lon_range, keep or None)
+            if args.zarr else None
+        )
+        spark = _spark("weather-mv")
         # the projection reaches the decoder: pruned GRIB messages are
         # skipped at the header, pruned NetCDF payloads never unpack
         df = open_dataset(
@@ -191,37 +198,24 @@ def cmd_mv(args: argparse.Namespace) -> int:
         print(f"wrote {n} NetCDF file(s), vars={variables} -> {args.output}")
         return 0
     if args.zarr:
-        # Zarr sink (the reference's xbeam ChunksToZarr path): the input
-        # is decoded once and held for the sink's lifetime only (a local
-        # copy of the rows costs less than decoding GRIB again); one
-        # aggregate job derives the three coordinate axes in-plan (axes
-        # are dimension-sized, the same bounded contract as the geo
-        # lookup; time as microseconds, so the driver process's own time
-        # zone never enters) and the chunk writer streams the same rows,
-        # hashed and sorted by chunk, into whole chunk files per task.
-        import pandas as pd
-
-        from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta, time_micros_sql
+        # Zarr sink (the reference's xbeam ChunksToZarr template write):
+        # the store's axes were read from file headers on the driver
+        # (dataset_axes, the reference's metadata open), so the chunk
+        # writer is the only pass over the input: it streams the lazily
+        # decoded rows, hashed and sorted by chunk, into whole chunk
+        # files per task. Two jobs and no held copy of the input.
+        from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta
         from weather_tools_spark.sources.zarr_v2 import write_zarr_v2
 
-        if "time" not in df.columns:
-            print("--zarr needs a time axis (GRIB/NetCDF input)", file=sys.stderr)
-            return 2
-        dims = ("time", "latitude", "longitude")
-        variables = tuple(c for c in df.columns if c not in dims)
-        df.persist()
-        try:
-            axes = (F.expr(time_micros_sql("time")), "latitude", "longitude")
-            times, lats, lons = df.agg(*(F.array_sort(F.collect_set(c)) for c in axes)).first()
-            meta = ChunkedDatasetMeta(
-                uri=args.output, times=[t.isoformat() for t in pd.to_datetime(times, unit="us")],
-                lats=lats[::-1], lons=lons,  # latitude north → south
-                chunk_time=chunks[0], chunk_lat=chunks[1], chunk_lon=chunks[2],
-                variables=variables,
-            )
-            n_chunks = write_zarr_v2(df, args.output, meta)
-        finally:
-            df.unpersist(blocking=True)
+        times, lats, lons = axes
+        variables = tuple(c for c in df.columns if c not in ("time", "latitude", "longitude"))
+        meta = ChunkedDatasetMeta(
+            uri=args.output, times=[t.isoformat() for t in times],
+            lats=lats[::-1].tolist(), lons=lons.tolist(),  # latitude north → south
+            chunk_time=chunks[0], chunk_lat=chunks[1], chunk_lon=chunks[2],
+            variables=variables,
+        )
+        n_chunks = write_zarr_v2(df, args.output, meta)
         print(f"wrote {n_chunks} chunk(s), vars={list(variables)} -> {args.output}")
         return 0
     # parquet sink: swaps to .format("bigquery") where the connector is

@@ -236,7 +236,7 @@ class FakeEEClient(EEClient):
 def chunk_manifest(
     info: dict,
     chunk: int = 256,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     bands: list[str] | None = None,
 ) -> pd.DataFrame:
     """Asset metadata → chunk manifest: one row per (time, band, tile).
@@ -246,14 +246,20 @@ def chunk_manifest(
     ``time_range`` / ``bands`` prune MANIFEST rows — no pixel RPC is
     ever issued for an out-of-range image (the EE analog of the zarr
     chunk-range pruning; a residual cell filter is unnecessary because
-    EE images are whole time steps)."""
-    lo = hi = None
-    if time_range is not None:
-        lo = pd.Timestamp(time_range[0]).timestamp()
-        hi = pd.Timestamp(time_range[1]).timestamp()
+    EE images are whole time steps). Time is kept in ``[start, end)``
+    with a ``None`` end open, read as ``zarr_scan.prune_chunks`` reads
+    it: a bound that is not a plain timestamp prunes nothing (it is
+    left to ``open_dataset``'s residual filter)."""
+    from .zarr_scan import _time_bounds
+
+    lo, hi = (
+        None if t is None else t.timestamp()  # naive bounds are UTC, as image times are
+        for t in _time_bounds(time_range) or (None, None)
+    )
     rows = []
     for ti in range(len(info["times"])):
-        if lo is not None and not (lo <= info["times"][ti] < hi):
+        t = info["times"][ti]
+        if (lo is not None and t < lo) or (hi is not None and t >= hi):
             continue
         for band in bands if bands is not None else info["bands"]:
             for y0 in range(0, info["grid"]["height"], chunk):
@@ -278,7 +284,7 @@ def open_ee(
     uri: str,
     client_factory: Callable[[], EEClient] | None = None,
     chunk: int = 256,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     bands: list[str] | None = None,
 ) -> DataFrame:
     """Open an ``ee://`` asset as a long-format DataFrame

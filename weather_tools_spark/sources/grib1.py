@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import struct
 
 import numpy as np
@@ -53,6 +54,7 @@ _MAGIC = b"GRIB"
 PARAMS1 = {"d2m": 17, "u10": 33, "v10": 34}  # DPT / UGRD / VGRD
 _REV_PARAMS1 = {v: k for k, v in PARAMS1.items()}
 _LEVELS1 = {"d2m": (105, 2), "u10": (105, 10), "v10": (105, 10)}  # height AGL, m
+_NO_GDS = "GRIB1 messages without GDS (catalogued grids)"
 
 
 def _sm24(v: int) -> bytes:
@@ -273,19 +275,67 @@ def is_grib1(path: str) -> bool:
 def list_params1(path: str) -> list[str]:
     """Parameter names from PDS headers alone — seeks between messages
     by total length, never reads a data section (driver-side probe)."""
+    from .grib2 import walk_messages
+
     names: list[str] = []
-    with open(path, "rb") as f:
-        while True:
-            head = f.read(8)
-            if not head:
-                break
-            if head[:4] != _MAGIC or head[7] != 1:
-                raise ValueError(f"{path}: not GRIB1")
-            total = int.from_bytes(head[4:7], "big")
-            pds = f.read(28)
-            names.append(_REV_PARAMS1.get(pds[8], f"p{pds[8]}"))
-            f.seek(total - 8 - 28, 1)
+    for m in walk_messages(path):
+        if m.edition != 1:
+            raise ValueError(f"{path}: not GRIB1")
+        names.append(_param_name1(m.sections[1][8]))
     return names
+
+
+def _param_name1(indicator: int) -> str:
+    return _REV_PARAMS1.get(indicator, f"p{indicator}")
+
+
+def _pds_ref_time(pds: bytes) -> pd.Timestamp:
+    """The PDS reference time (year of century + century)."""
+    yoc, century = pds[12], pds[24]
+    return pd.Timestamp(
+        year=(century - 1) * 100 + yoc, month=pds[13], day=pds[14], hour=pds[15],
+        minute=pds[16],
+    )
+
+
+def _gds_grid(gds: bytes):
+    """GDS (lat/lon, representation type 0) → ``(lats, lons, None,
+    None, ni, nj)``, the shape of ``grib2._grid``."""
+    if gds[5] != 0:
+        raise NotImplementedError(f"GRIB1 grid representation type {gds[5]}")
+    ni, nj = struct.unpack_from(">HH", gds, 6)
+    lat1 = _sm24d(gds[10:13]) / 1e3
+    lon1 = _sm24d(gds[13:16]) / 1e3
+    lat2 = _sm24d(gds[17:20]) / 1e3
+    lon2 = _sm24d(gds[20:23]) / 1e3
+    scan = gds[27]
+    if scan != 0:
+        raise NotImplementedError(f"scanning mode {scan} unsupported")
+    lats = np.linspace(lat1, lat2, nj) if nj > 1 else np.array([lat1])
+    lons = np.linspace(lon1, lon2, ni) if ni > 1 else np.array([lon1])
+    return lats, lons, None, None, ni, nj
+
+
+def grib1_axes(path: str, opts=None) -> list[tuple]:
+    """The coordinates of the rows :func:`grib1_decode` yields with the
+    same ``opts``, from the PDS and GDS alone (no BDS is read): one
+    ``grib2.grid_blocks`` block per distinct grid of the messages the
+    projection keeps."""
+    from .grib2 import grid_blocks, walk_messages
+
+    want = _message_filter1(opts)
+    grids: dict[bytes, tuple] = {}
+    for m in walk_messages(path, (1, 2)):
+        pds = m.sections[1]
+        if want is not None and pds[8] not in want:
+            continue
+        gds = m.sections.get(2)
+        if gds is None:
+            raise NotImplementedError(_NO_GDS)
+        if gds not in grids:
+            grids[gds] = (_gds_grid(gds), set())
+        grids[gds][1].add(_pds_ref_time(pds))
+    return grid_blocks(grids)
 
 
 def read_grib1(path: str, want: set[int] | None = None) -> list[dict]:
@@ -324,11 +374,8 @@ def read_grib1_bytes(
             continue
         flags = pds[7]
         if not flags & 0x80:
-            raise NotImplementedError("GRIB1 messages without GDS (catalogued grids)")
-        yoc, month, day, hour, minute = pds[12], pds[13], pds[14], pds[15], pds[16]
-        century = pds[24]
-        year = (century - 1) * 100 + yoc
-        ref_time = pd.Timestamp(year=year, month=month, day=day, hour=hour, minute=minute)
+            raise NotImplementedError(_NO_GDS)
+        ref_time = _pds_ref_time(pds)
         time_unit, p1, tri = pds[17], pds[18], pds[20]
         if tri != 0:
             raise NotImplementedError(f"GRIB1 time range indicator {tri} (instantaneous only)")
@@ -340,18 +387,7 @@ def read_grib1_bytes(
 
         gds = msg[8 + pds_len :]
         gds_len = int.from_bytes(gds[0:3], "big")
-        if gds[5] != 0:
-            raise NotImplementedError(f"GRIB1 grid representation type {gds[5]}")
-        ni, nj = struct.unpack_from(">HH", gds, 6)
-        lat1 = _sm24d(gds[10:13]) / 1e3
-        lon1 = _sm24d(gds[13:16]) / 1e3
-        lat2 = _sm24d(gds[17:20]) / 1e3
-        lon2 = _sm24d(gds[20:23]) / 1e3
-        scan = gds[27]
-        if scan != 0:
-            raise NotImplementedError(f"scanning mode {scan} unsupported")
-        lats = np.linspace(lat1, lat2, nj) if nj > 1 else np.array([lat1])
-        lons = np.linspace(lon1, lon2, ni) if ni > 1 else np.array([lon1])
+        lats, lons, _, _, ni, nj = _gds_grid(gds)
 
         rest = gds[gds_len:]
         mask = None
@@ -386,7 +422,7 @@ def read_grib1_bytes(
             vals = full
         msgs.append(
             {
-                "param": _REV_PARAMS1.get(indicator, f"p{indicator}"),
+                "param": _param_name1(indicator),
                 "ref_time": ref_time,
                 "step_hours": step_hours,
                 "valid_time": ref_time + pd.Timedelta(hours=step_hours),
@@ -405,24 +441,27 @@ def grib1_decode(path: str, opts=None) -> pd.DataFrame:
     same ``opts.variables`` message-filter pushdown."""
     from .grib2 import merge_messages
 
-    want = None
-    variables = getattr(opts, "variables", None) if opts is not None else None
-    if variables:
-        import re as _re
+    return merge_messages(read_grib1(path, _message_filter1(opts)))
 
-        want = set()
-        for v in variables:
-            if v in PARAMS1:
-                want.add(PARAMS1[v])
-            elif _re.fullmatch(r"p\d+", v):
-                # invertible decoder-assigned name — exact message filter
-                want.add(int(v[1:]))
-            else:
-                # unmappable request → decode all (caller projects);
-                # pruning must never silently blank a requested variable
-                want = None
-                break
-    return merge_messages(read_grib1(path, want))
+
+def _message_filter1(opts) -> set[int] | None:
+    """``opts.variables`` as the ``want`` set of :func:`read_grib1`;
+    ``None`` keeps every message."""
+    variables = getattr(opts, "variables", None) if opts is not None else None
+    if not variables:
+        return None
+    want = set()
+    for v in variables:
+        if v in PARAMS1:
+            want.add(PARAMS1[v])
+        elif re.fullmatch(r"p\d+", v):
+            # invertible decoder-assigned name — exact message filter
+            want.add(int(v[1:]))
+        else:
+            # unmappable request → decode all (caller projects);
+            # pruning must never silently blank a requested variable
+            return None
+    return want
 
 
 def write_grib1_partitioned(

@@ -35,6 +35,10 @@ implements that profile directly:
   implements the reference's GRIB *message filter* as true pushdown:
   non-matching messages are skipped by section length without
   unpacking section 7;
+- :func:`walk_messages` — the seek-based header walk (either edition)
+  behind :func:`list_params`, :func:`grib2_axes` (the coordinates of
+  the decoded rows from sections 1/3/4, sharing :func:`_grid` with the
+  decoder) and ``grib_manifest.index_grib_file``;
 - :func:`grib2_decode` — file → long-format rows for the hypercube
   ingest (``FORMATS["grib2"]`` in sources/opener.py), with the
   standard WMO parameter table for the engine's variables: 2-metre
@@ -54,8 +58,9 @@ such grids to pin byte-exactness.
 from __future__ import annotations
 
 import os
+import re
 import struct
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -654,33 +659,163 @@ def is_grib2(path: str) -> bool:
         return False
 
 
+class GribMessage(NamedTuple):
+    """One message of a GRIB file as :func:`walk_messages` finds it."""
+
+    offset: int
+    length: int
+    edition: int
+    discipline: int | None  # GRIB2 section 0; GRIB1 has none
+    sections: dict[int, bytes]  # section number → its bytes, as asked
+
+
+def walk_messages(path: str, sections: tuple[int, ...] = ()) -> Iterator[GribMessage]:
+    """Walk the messages of a GRIB file of either edition by seeking:
+    only the few octets that give each section's length are read, plus
+    the bodies of the ``sections`` asked for; every other section, the
+    data section included, is seeked past, and the walk leaves a
+    message once it holds every section asked for. GRIB2 sections keep
+    their numbers (1-7); GRIB1 numbers its PDS 1, GDS 2, BMS 3 and BDS
+    4 (an absent GDS or BMS is no key)."""
+    want = set(sections)
+    with open(path, "rb") as f:
+        offset = 0
+        while True:
+            f.seek(offset)
+            head = f.read(16)
+            if not head:
+                return
+            if head[:4] != _MAGIC or len(head) < 8:
+                raise ValueError(f"{path}: not GRIB at offset {offset}")
+            edition, found = head[7], {}
+            if edition == 2:
+                (total,) = struct.unpack_from(">Q", head, 8)
+                q = 16
+                while q < total - 4 and not want <= found.keys():
+                    f.seek(offset + q)
+                    sh = f.read(5)
+                    (slen,) = struct.unpack_from(">I", sh, 0)
+                    if sh[4] in want:
+                        found[sh[4]] = sh + f.read(slen - 5)
+                    q += slen
+                yield GribMessage(offset, total, 2, head[6], found)
+            elif edition == 1:
+                total = int.from_bytes(head[4:7], "big")
+                f.seek(offset + 8)
+                pds = f.read(3)
+                pds += f.read(int.from_bytes(pds, "big") - 3)
+                found[1] = pds  # its flags say which sections follow
+                q = 8 + len(pds)
+                for snum in [2] * (pds[7] >> 7) + [3] * (pds[7] >> 6 & 1) + [4]:
+                    if want <= found.keys():
+                        break
+                    f.seek(offset + q)
+                    sh = f.read(3)
+                    slen = int.from_bytes(sh, "big")
+                    if snum in want:
+                        found[snum] = sh + f.read(slen - 3)
+                    q += slen
+                yield GribMessage(offset, total, 1, None, found)
+            else:
+                raise ValueError(f"{path}: GRIB edition {edition}")
+            offset += total
+
+
 def list_params(path: str) -> list[str]:
     """Parameter names present in the file from section headers alone —
     seeks between messages, never reads a data section."""
     names: list[str] = []
-    with open(path, "rb") as f:
-        while True:
-            head = f.read(16)
-            if not head:
-                break
-            if head[:4] != _MAGIC or head[7] != 2:
-                raise ValueError(f"{path}: not GRIB2")
-            disc = head[6]
-            (total,) = struct.unpack_from(">Q", head, 8)
-            consumed = 16
-            while consumed < total - 4:
-                sh = f.read(5)
-                (slen,) = struct.unpack_from(">I", sh, 0)
-                snum = sh[4]
-                if snum == 4:
-                    body = f.read(slen - 5)
-                    cat, num = body[4], body[5]  # section offsets 9, 10
-                    names.append(_REV_PARAMS.get((disc, cat, num), f"p{disc}_{cat}_{num}"))
-                else:
-                    f.seek(slen - 5, 1)
-                consumed += slen
-            f.seek(total - consumed, 1)  # skip the '7777' terminator
+    for m in walk_messages(path, (4,)):
+        if m.edition != 2:
+            raise ValueError(f"{path}: not GRIB2")
+        s4 = m.sections[4]
+        names.append(_param_name(m.discipline, s4[9], s4[10]))
     return names
+
+
+def _param_name(disc: int, cat: int, num: int) -> str:
+    return _REV_PARAMS.get((disc, cat, num), f"p{disc}_{cat}_{num}")
+
+
+def _ref_time(s1: bytes) -> pd.Timestamp:
+    """Section 1's reference time."""
+    (year,) = struct.unpack_from(">H", s1, 12)
+    return pd.Timestamp(
+        year=year, month=s1[14], day=s1[15], hour=s1[16], minute=s1[17], second=s1[18]
+    )
+
+
+def _grid(s3: bytes):
+    """Section 3 → ``(lats, lons, lat_grid, lon_grid, ni, nj)``: 1-D
+    axes of a regular grid, or per-point ``lat_grid``/``lon_grid`` (and
+    ``lats = lons = None``) of a curvilinear or reduced one, whose
+    ``ni`` is ``None``."""
+    gtmpl, = struct.unpack_from(">H", s3, 12)
+    lat_grid = lon_grid = None
+    if gtmpl == 0:
+        ni, nj = struct.unpack_from(">II", s3, 30)
+        lat1 = _sm32d(struct.unpack_from(">I", s3, 46)[0]) / 1e6
+        lon1 = _sm32d(struct.unpack_from(">I", s3, 50)[0]) / 1e6
+        di = struct.unpack_from(">I", s3, 63)[0] / 1e6
+        dj = struct.unpack_from(">I", s3, 67)[0] / 1e6
+        scan = s3[71]
+        if scan != 0:
+            raise NotImplementedError(f"scanning mode {scan} unsupported")
+        lats = lat1 - np.arange(nj) * dj  # N→S rows
+        lons = lon1 + np.arange(ni) * di
+    elif gtmpl == 30:
+        lat_grid, lon_grid, ni, nj = _decode_lambert_grid(s3)
+        lats = lons = None
+    elif gtmpl == 20:
+        lat_grid, lon_grid, ni, nj = _decode_polar_grid(s3)
+        lats = lons = None
+    elif gtmpl == 40:
+        lats, lons, ni, nj = _decode_gaussian_grid(s3)
+        if ni is None:  # reduced grid: per-point coordinate arrays
+            lat_grid, lon_grid = lats, lons
+            lats = lons = None
+    elif gtmpl == 10:
+        lats, lons, ni, nj = _decode_mercator_grid(s3)
+    else:
+        raise NotImplementedError(
+            f"grid definition template {gtmpl} "
+            "(lat/lon 3.0, Mercator 3.10, polar-stereo 3.20, Lambert 3.30, "
+            "Gaussian 3.40)"
+        )
+    return lats, lons, lat_grid, lon_grid, ni, nj
+
+
+def grid_blocks(grids: dict[bytes, tuple]) -> list[tuple]:
+    """``{grid bytes: (parsed grid, reference times)}`` → one
+    ``(times, lats, lons, paired)`` block per grid: 1-D axes whose
+    cross product with the times is the grid's cells, or, ``paired``,
+    per-point coordinates (``lats[i], lons[i]`` is point ``i``)."""
+    blocks = []
+    for (lats, lons, lat_grid, lon_grid, *_), times in grids.values():
+        times = pd.DatetimeIndex(sorted(times))
+        if lat_grid is not None:
+            blocks.append((times, np.ravel(lat_grid), np.ravel(lon_grid), True))
+        else:
+            blocks.append((times, lats, lons, False))
+    return blocks
+
+
+def grib2_axes(path: str, opts=None) -> list[tuple]:
+    """The coordinates of the rows :func:`grib2_decode` yields with the
+    same ``opts``, from sections 1, 3 and 4 alone (no data section is
+    read): one :func:`grid_blocks` block per distinct grid of the
+    messages the projection keeps."""
+    want = _message_filter(opts)
+    grids: dict[bytes, tuple] = {}
+    for m in walk_messages(path, (1, 3, 4)):
+        s4 = m.sections[4]
+        if want is not None and (m.discipline, s4[9], s4[10]) not in want:
+            continue
+        s3 = m.sections[3]
+        if s3 not in grids:
+            grids[s3] = (_grid(s3), set())
+        grids[s3][1].add(_ref_time(m.sections[1]))
+    return grid_blocks(grids)
 
 
 def read_grib2(path: str, want: set[tuple[int, int, int]] | None = None) -> list[dict]:
@@ -750,44 +885,8 @@ def read_grib2_bytes(
         lvl_raw, = struct.unpack_from(">I", s4, 24)
         level_value = lvl_raw * 10.0 ** (-lvl_scale)
 
-        s1 = sections[1]
-        year, = struct.unpack_from(">H", s1, 12)
-        ref_time = pd.Timestamp(
-            year=year, month=s1[14], day=s1[15], hour=s1[16], minute=s1[17], second=s1[18]
-        )
-        s3 = sections[3]
-        gtmpl, = struct.unpack_from(">H", s3, 12)
-        lat_grid = lon_grid = None
-        if gtmpl == 0:
-            ni, nj = struct.unpack_from(">II", s3, 30)
-            lat1 = _sm32d(struct.unpack_from(">I", s3, 46)[0]) / 1e6
-            lon1 = _sm32d(struct.unpack_from(">I", s3, 50)[0]) / 1e6
-            di = struct.unpack_from(">I", s3, 63)[0] / 1e6
-            dj = struct.unpack_from(">I", s3, 67)[0] / 1e6
-            scan = s3[71]
-            if scan != 0:
-                raise NotImplementedError(f"scanning mode {scan} unsupported")
-            lats = lat1 - np.arange(nj) * dj  # N→S rows
-            lons = lon1 + np.arange(ni) * di
-        elif gtmpl == 30:
-            lat_grid, lon_grid, ni, nj = _decode_lambert_grid(s3)
-            lats = lons = None
-        elif gtmpl == 20:
-            lat_grid, lon_grid, ni, nj = _decode_polar_grid(s3)
-            lats = lons = None
-        elif gtmpl == 40:
-            lats, lons, ni, nj = _decode_gaussian_grid(s3)
-            if ni is None:  # reduced grid: per-point coordinate arrays
-                lat_grid, lon_grid = lats, lons
-                lats = lons = None
-        elif gtmpl == 10:
-            lats, lons, ni, nj = _decode_mercator_grid(s3)
-        else:
-            raise NotImplementedError(
-                f"grid definition template {gtmpl} "
-                "(lat/lon 3.0, Mercator 3.10, polar-stereo 3.20, Lambert 3.30, "
-                "Gaussian 3.40)"
-            )
+        ref_time = _ref_time(sections[1])
+        lats, lons, lat_grid, lon_grid, ni, nj = _grid(sections[3])
 
         s5 = sections[5]
         npts, = struct.unpack_from(">I", s5, 5)  # present points (≤ ni·nj)
@@ -834,7 +933,7 @@ def read_grib2_bytes(
             full[mask] = vals
             vals = full
         m = {
-            "param": _REV_PARAMS.get((disc, cat, num), f"p{disc}_{cat}_{num}"),
+            "param": _param_name(disc, cat, num),
             "ref_time": ref_time,
             "step_hours": step_hours,
             "valid_time": ref_time + pd.Timedelta(hours=step_hours),
@@ -1068,26 +1167,29 @@ def grib2_decode(path: str, opts=None) -> pd.DataFrame:
     ``opts.variables`` as the message filter pushdown; every cell of a
     kept message decodes (ranges apply to the decoded frame,
     ``zarr_scan.mask_cells``)."""
-    want = None
-    variables = getattr(opts, "variables", None) if opts is not None else None
-    if variables:
-        import re as _re
+    return merge_messages(read_grib2(path, _message_filter(opts)))
 
-        want = set()
-        for v in variables:
-            if v in PARAMS:
-                want.add(PARAMS[v])
-            elif _re.fullmatch(r"p\d+_\d+_\d+", v):
-                # the decoder's own name for an unmapped parameter —
-                # invertible, so the message filter stays exact
-                want.add(tuple(int(x) for x in v[1:].split("_")))
-            else:
-                # a name the param table can't map: decode everything
-                # (the caller's projection drops extras) — pruning must
-                # never silently blank a requested variable
-                want = None
-                break
-    return merge_messages(read_grib2(path, want))
+
+def _message_filter(opts) -> set[tuple[int, int, int]] | None:
+    """``opts.variables`` as the ``want`` set of :func:`read_grib2`;
+    ``None`` keeps every message."""
+    variables = getattr(opts, "variables", None) if opts is not None else None
+    if not variables:
+        return None
+    want = set()
+    for v in variables:
+        if v in PARAMS:
+            want.add(PARAMS[v])
+        elif re.fullmatch(r"p\d+_\d+_\d+", v):
+            # the decoder's own name for an unmapped parameter —
+            # invertible, so the message filter stays exact
+            want.add(tuple(int(x) for x in v[1:].split("_")))
+        else:
+            # a name the param table can't map: decode everything
+            # (the caller's projection drops extras) — pruning must
+            # never silently blank a requested variable
+            return None
+    return want
 
 
 def merge_messages(messages: list[dict]) -> pd.DataFrame:

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .zarr_scan import in_time_range
+
 MANIFEST_SCHEMA = (
     "path string, offset long, length long, edition int, param string, "
     "ref_time timestamp, step_hours double, member int, level double"
@@ -50,64 +52,32 @@ def index_grib_file(path: str) -> pd.DataFrame:
     """Header-only message index of one GRIB file (both editions):
     seeks between messages by total length, reads identification +
     product-definition octets, never a data section."""
-    from .grib1 import _REV_PARAMS1
-    from .grib2 import _REV_PARAMS
+    from .grib1 import _param_name1, _pds_ref_time
+    from .grib2 import _param_name, _ref_time, walk_messages
 
     rows = []
-    with open(path, "rb") as f:
-        buf = f.read()
-    p = 0
-    while p < len(buf):
-        if buf[p : p + 4] != b"GRIB":
-            raise ValueError(f"{path}: not GRIB at offset {p}")
-        edition = buf[p + 7]
-        if edition == 2:
-            (total,) = struct.unpack_from(">Q", buf, p + 8)
-            disc = buf[p + 6]
-            q = p + 16
-            ref_time = param = None
-            step_hours, member, level = 0.0, None, None
-            while q < p + total - 4:
-                (slen,) = struct.unpack_from(">I", buf, q)
-                snum = buf[q + 4]
-                if snum == 1:
-                    year, = struct.unpack_from(">H", buf, q + 12)
-                    ref_time = pd.Timestamp(
-                        year=year, month=buf[q + 14], day=buf[q + 15],
-                        hour=buf[q + 16], minute=buf[q + 17], second=buf[q + 18],
-                    )
-                elif snum == 4:
-                    cat, num = buf[q + 9], buf[q + 10]
-                    param = _REV_PARAMS.get((disc, cat, num), f"p{disc}_{cat}_{num}")
-                    ptmpl, = struct.unpack_from(">H", buf, q + 7)
-                    unit = buf[q + 17]
-                    ftime, = struct.unpack_from(">I", buf, q + 18)
-                    step_hours = ftime * _UNIT_HOURS.get(unit, float("nan"))
-                    member = buf[q + 35] if ptmpl == 1 else None
-                    scale = buf[q + 23]
-                    scale = -(scale & 0x7F) if scale & 0x80 else scale
-                    raw, = struct.unpack_from(">I", buf, q + 24)
-                    level = raw * 10.0 ** (-scale)
-                    break  # sections 5-7 are data; stop walking
-                q += slen
-        elif edition == 1:
-            total = int.from_bytes(buf[p + 4 : p + 7], "big")
-            pds = buf[p + 8 :]
-            param = _REV_PARAMS1.get(pds[8], f"p{pds[8]}")
-            yoc, century = pds[12], pds[24]
-            ref_time = pd.Timestamp(
-                year=(century - 1) * 100 + yoc, month=pds[13], day=pds[14],
-                hour=pds[15], minute=pds[16],
-            )
+    for m in walk_messages(path, (1, 4)):
+        if m.edition == 2:
+            s4 = m.sections[4]
+            ref_time = _ref_time(m.sections[1])
+            param = _param_name(m.discipline, s4[9], s4[10])
+            ptmpl, = struct.unpack_from(">H", s4, 7)
+            ftime, = struct.unpack_from(">I", s4, 18)
+            step_hours = ftime * _UNIT_HOURS.get(s4[17], float("nan"))
+            member = s4[35] if ptmpl == 1 else None
+            scale = s4[23]
+            scale = -(scale & 0x7F) if scale & 0x80 else scale
+            raw, = struct.unpack_from(">I", s4, 24)
+            level = raw * 10.0 ** (-scale)
+        else:
+            pds = m.sections[1]
+            param, ref_time = _param_name1(pds[8]), _pds_ref_time(pds)
             step_hours = pds[18] * _UNIT_HOURS.get(pds[17], float("nan"))
             member, level = None, float(int.from_bytes(pds[10:12], "big"))
-        else:
-            raise ValueError(f"{path}: GRIB edition {edition}")
         rows.append(
-            (path, p, total, int(edition), param, ref_time, float(step_hours),
+            (path, m.offset, m.length, m.edition, param, ref_time, float(step_hours),
              member, level)
         )
-        p += total
     return pd.DataFrame(
         rows,
         columns=["path", "offset", "length", "edition", "param", "ref_time",
@@ -134,7 +104,7 @@ def scan_grib_manifest(
     spark: SparkSession,
     manifest: DataFrame,
     params: list[str] | None = None,
-    time_range: tuple[str, str] | None = None,
+    time_range: tuple[str | None, str | None] | None = None,
     max_step_hours: float | None = None,
 ) -> DataFrame:
     """Decode ONLY the messages whose manifest row survives the
@@ -143,15 +113,13 @@ def scan_grib_manifest(
     stored); the decode stage seeks each surviving byte range and
     parses the slice with the bytes-level codec kernels. Output is
     long-format (melted) rows: one (time, step, lat, lon, param,
-    value) per grid point of each selected message."""
+    value) per grid point of each selected message. ``ref_time`` is kept
+    in ``[start, end)``; a ``None`` end is open."""
     sel = manifest
     if params is not None:
         sel = sel.filter(F.col("param").isin(list(params)))
     if time_range is not None:
-        sel = sel.filter(
-            (F.col("ref_time") >= F.lit(time_range[0]).cast("timestamp"))
-            & (F.col("ref_time") < F.lit(time_range[1]).cast("timestamp"))
-        )
+        sel = sel.filter(in_time_range("ref_time", time_range))
     if max_step_hours is not None:
         sel = sel.filter(F.col("step_hours") <= max_step_hours)
 

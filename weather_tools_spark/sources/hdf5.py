@@ -35,6 +35,7 @@ behind ``FORMATS["netcdf4"]`` in sources/opener.py;
 
 from __future__ import annotations
 
+import mmap
 import os
 import struct
 import zlib
@@ -959,6 +960,12 @@ def read_hdf5(
     touched. ``None`` reads everything."""
     with open(path, "rb") as f:
         buf = f.read()
+    return _read_datasets(buf, want, path)
+
+
+def _read_datasets(buf, want: set[str] | None, path: str):
+    """:func:`read_hdf5` over a file's bytes, or a map of it: only the
+    ``want`` datasets' objects and chunks are touched."""
     if buf[:8] != MAGIC:
         raise ValueError(f"{path}: not an HDF5 file")
     datasets: dict[str, np.ndarray] = {}
@@ -1002,15 +1009,7 @@ def nc4_decode(path: str, opts=None) -> pd.DataFrame:
     if variables:
         want = {"time", "latitude", "longitude"} | set(variables)
     datasets, attrs = read_hdf5(path, want)
-    for c in ("time", "latitude", "longitude"):
-        if c not in datasets:
-            raise ValueError(f"{path}: missing coordinate variable {c!r}")
-    units = attrs.get("time", {}).get("units", _TIME_UNITS)
-    if units != _TIME_UNITS:
-        raise NotImplementedError(f"unsupported time units {units!r}")
-    times = pd.to_datetime(np.asarray(datasets["time"], dtype="int64"), unit="s")
-    lats = np.asarray(datasets["latitude"], dtype="f8")
-    lons = np.asarray(datasets["longitude"], dtype="f8")
+    times, lats, lons = _axes(path, datasets, attrs)
     shape = (len(times), len(lats), len(lons))
     tt, la, lo = np.meshgrid(times, lats, lons, indexing="ij")
     out = {"time": tt.ravel(), "latitude": la.ravel(), "longitude": lo.ravel()}
@@ -1021,6 +1020,31 @@ def nc4_decode(path: str, opts=None) -> pd.DataFrame:
             raise ValueError(f"{path}: variable {v} shape {arr.shape} != {shape}")
         out[v] = np.asarray(arr, dtype="f8").ravel()
     return pd.DataFrame(out)
+
+
+def _axes(path: str, datasets: dict, attrs: dict) -> tuple:
+    """The decoded (times, lats, lons) coordinate axes."""
+    for c in ("time", "latitude", "longitude"):
+        if c not in datasets:
+            raise ValueError(f"{path}: missing coordinate variable {c!r}")
+    units = attrs.get("time", {}).get("units", _TIME_UNITS)
+    if units != _TIME_UNITS:
+        raise NotImplementedError(f"unsupported time units {units!r}")
+    return (
+        pd.to_datetime(np.asarray(datasets["time"], dtype="int64"), unit="s"),
+        np.asarray(datasets["latitude"], dtype="f8"),
+        np.asarray(datasets["longitude"], dtype="f8"),
+    )
+
+
+def nc4_axes(path: str, opts=None) -> list[tuple]:
+    """The coordinates of the rows :func:`nc4_decode` yields (every
+    cell of ``time × latitude × longitude``, whatever ``opts``
+    projects), read from the three coordinate datasets alone: one
+    ``(times, lats, lons, paired=False)`` block."""
+    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as buf:
+        datasets, attrs = _read_datasets(buf, {"time", "latitude", "longitude"}, path)
+    return [(*_axes(path, datasets, attrs), False)]
 
 
 def write_netcdf4(

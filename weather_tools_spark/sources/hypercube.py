@@ -267,10 +267,18 @@ def ingest(
         lat_range, lon_range = (s, n), (w, e)
     ranges = (time_range, lat_range, lon_range)
     data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
+    timestamps = [
+        f.name for f in schema.fields
+        if f.name in data_cols and isinstance(f.dataType, T.TimestampType)
+    ]
 
     def run(uri: str) -> pd.DataFrame:
         rows = mask_cells(decode_auto(uri, opts), *ranges)
-        out = rows.reindex(columns=data_cols)
+        # an axis the file lacks (a GeoTIFF's time) is a typed null:
+        # Arrow casts no all-NaN float column to a timestamp
+        out = rows.reindex(columns=data_cols).astype(
+            {c: "datetime64[ns]" for c in timestamps if c not in rows.columns}
+        )
         out["data_uri"] = uri
         has_time = "time" in rows.columns  # a GeoTIFF has no time axis
         out["data_first_step"] = rows["time"].min() if has_time and len(rows) else pd.NaT

@@ -39,6 +39,7 @@ one file per variable the same way, weather_sp splitter_pipeline).
 
 from __future__ import annotations
 
+import mmap
 import os
 import struct
 from typing import Iterator
@@ -267,7 +268,10 @@ def read_netcdf3(path: str) -> tuple[dict[str, np.ndarray], dict[str, np.ndarray
     return _parse(buf)
 
 
-def _parse(buf: bytes, header_only: bool = False):
+def _parse(buf: bytes, header_only: bool = False, want: set[str] | None = None):
+    """(coords, data, attrs) of a classic file's bytes: every variable,
+    only its header (``header_only``), or only the ``want`` variables,
+    whose bytes alone are touched (so ``buf`` may be a file map)."""
     version = _MAGICS.get(buf[:4])
     if version is None:
         raise ValueError("not a classic NetCDF file")
@@ -308,6 +312,8 @@ def _parse(buf: bytes, header_only: bool = False):
     data: dict[str, np.ndarray] = {}
     attrs: dict[str, dict] = {}
     for nm, dimids, atts, t, vsize, begin in var_metas:
+        if want is not None and nm not in want:
+            continue
         is_rec = rec_id is not None and dimids[:1] == [rec_id]
         shape = tuple(
             numrecs if (is_rec and i == rec_id) else dim_lens[i] for i in dimids
@@ -421,19 +427,34 @@ def nc3_decode(path: str, opts) -> pd.DataFrame:
     if variables:
         want = set(variables)
     coords, data, attrs = read_netcdf3(path)
-    tatts = attrs.get("time", {})
-    units = tatts.get("units", _TIME_UNITS)
-    calendar = tatts.get("calendar")
-    times = cf_decode_time(coords["time"], units, calendar)
-    lats = np.asarray(coords["latitude"], dtype="f8")
-    lons = np.asarray(coords["longitude"], dtype="f8")
-    tt, la, lo = np.meshgrid(times, lats, lons, indexing="ij")
+    tt, la, lo = np.meshgrid(*_axes(coords, attrs), indexing="ij")
     out = {"time": tt.ravel(), "latitude": la.ravel(), "longitude": lo.ravel()}
     for v, arr in data.items():
         if want is not None and v not in want:
             continue  # projected out — skip the unpack copy entirely
         out[v] = _cf_unpack(arr, attrs.get(v, {})).ravel()
     return pd.DataFrame(out)
+
+
+def _axes(coords: dict, attrs: dict) -> tuple:
+    """The decoded (times, lats, lons) coordinate axes."""
+    tatts = attrs.get("time", {})
+    times = cf_decode_time(coords["time"], tatts.get("units", _TIME_UNITS), tatts.get("calendar"))
+    return (
+        times,
+        np.asarray(coords["latitude"], dtype="f8"),
+        np.asarray(coords["longitude"], dtype="f8"),
+    )
+
+
+def nc3_axes(path: str, opts=None) -> list[tuple]:
+    """The coordinates of the rows :func:`nc3_decode` yields (every
+    cell of ``time × latitude × longitude``, whatever ``opts``
+    projects), read from the header and the three coordinate variables
+    alone: one ``(times, lats, lons, paired=False)`` block."""
+    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as buf:
+        coords, _, attrs = _parse(buf, want={"time", "latitude", "longitude"})
+    return [(*_axes(coords, attrs), False)]
 
 
 def write_netcdf3_partitioned(rows, out_dir: str, variables: list[str]) -> int:

@@ -23,7 +23,8 @@ all against the stdlib codecs (no xarray/cfgrib/rasterio):
 :func:`_decoder_for`.
 
 Single-file formats probe only the file HEADER on the driver (variable
-names → output schema; the reference's metadata open) and decode on
+names → output schema; the reference's metadata open; and, for the Zarr
+sink's template, :func:`dataset_axes` — coordinates) and decode on
 executors through :func:`map_files` — whole files spread over the
 tasks with no exchange before the decode, the plan the Zarr chunk
 scan, ``hypercube.ingest`` and the file splitter share. A decoder only
@@ -52,11 +53,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .geotiff import gtiff_decode, is_tiff
-from .grib1 import grib1_decode, is_grib1, list_params1
-from .grib2 import grib2_decode, is_grib2, list_params
-from .hdf5 import is_hdf5, list_variables_h5, nc4_decode
-from .netcdf3 import is_netcdf3, list_variables, nc3_decode
-from .zarr_scan import filter_cells, mask_cells
+from .grib1 import grib1_axes, grib1_decode, is_grib1, list_params1
+from .grib2 import grib2_axes, grib2_decode, is_grib2, list_params
+from .hdf5 import is_hdf5, list_variables_h5, nc4_axes, nc4_decode
+from .netcdf3 import is_netcdf3, list_variables, nc3_axes, nc3_decode
+from .zarr_scan import filter_cells, mask_axes, mask_cells
 from .zarr_v2 import ZMETADATA
 
 
@@ -66,17 +67,22 @@ class Format(NamedTuple):
     probe: Callable[[str], bool]  # magic bytes of a local path
     decode: Callable  # (path, opts) → long-format pandas rows
     variables: Callable[[str], list[str]]  # data variables, header only
+    # (path, opts) → [(times, lats, lons, paired)] coordinate blocks of
+    # the rows decode yields, from headers (zarr_scan.mask_axes)
+    axes: Callable | None
     coords: tuple[str, ...] = ("time", "latitude", "longitude")
 
 
 # dict order is the probe order of detect()
 FORMATS: dict[str, Format] = {
-    "netcdf3": Format(is_netcdf3, nc3_decode, list_variables),
-    "netcdf4": Format(is_hdf5, nc4_decode, list_variables_h5),
-    "grib2": Format(is_grib2, grib2_decode, list_params),
-    "grib1": Format(is_grib1, grib1_decode, list_params1),
+    "netcdf3": Format(is_netcdf3, nc3_decode, list_variables, nc3_axes),
+    "netcdf4": Format(is_hdf5, nc4_decode, list_variables_h5, nc4_axes),
+    "grib2": Format(is_grib2, grib2_decode, list_params, grib2_axes),
+    "grib1": Format(is_grib1, grib1_decode, list_params1, grib1_axes),
     # single value band and no time axis: nothing variable-level to prune
-    "geotiff": Format(is_tiff, gtiff_decode, lambda path: ["value"], ("latitude", "longitude")),
+    "geotiff": Format(
+        is_tiff, gtiff_decode, lambda path: ["value"], None, ("latitude", "longitude")
+    ),
 }
 
 
@@ -94,6 +100,13 @@ def _decoder_for(
     schema probe — a typo should fail the query); decode tasks pass
     ``strict=False`` so a glob member missing a variable still decodes
     (the reindex backfills NaN, same as an unprojected read)."""
+    fmt, opts, cols = _projection(kind, first, variables, strict)
+    return (lambda p: fmt.decode(p, opts)), cols
+
+
+def _projection(kind: str, first: str, variables: list[str] | None, strict: bool = True):
+    """``(format, opts, columns)`` of :func:`_decoder_for`: the options
+    every file of the input decodes (and reads its axes) with."""
     from types import SimpleNamespace
 
     fmt = FORMATS.get(kind)
@@ -108,7 +121,7 @@ def _decoder_for(
         opts = SimpleNamespace(variables=list(available))
     else:
         opts = None
-    return (lambda p: fmt.decode(p, opts)), list(fmt.coords) + available
+    return fmt, opts, list(fmt.coords) + available
 
 
 def expand(uri: str) -> list[str]:
@@ -216,6 +229,74 @@ def write_buckets(rows: DataFrame, out_dir: str, bucket: str, write_one) -> int:
     )
 
 
+def _resolve(uri: str) -> tuple[list[str], str]:
+    """A non-``ee://`` URI → its files and their one format."""
+    uris = expand(uri)
+    kinds = {detect(u) for u in uris}
+    if len(kinds) > 1:
+        raise ValueError(f"mixed formats under {uri!r}: {sorted(kinds)}")
+    (kind,) = kinds
+    if kind == "zarr" and len(uris) > 1:
+        raise ValueError("glob of multiple zarr stores unsupported — open each store")
+    return uris, kind
+
+
+def _zarr_meta(store: str, variables: list[str] | None):
+    """A Zarr store's template restricted to ``variables``: each
+    variable is its own chunked array, so the pruned variables' chunk
+    files are never opened, let alone decompressed."""
+    import dataclasses
+
+    from .zarr_v2 import open_zarr_v2
+
+    meta = open_zarr_v2(store)
+    if variables is None:
+        return meta
+    unknown = sorted(set(variables) - set(meta.variables))
+    if unknown:
+        raise ValueError(f"unknown variables {unknown} (store has {list(meta.variables)})")
+    return dataclasses.replace(
+        meta, variables=tuple(v for v in meta.variables if v in set(variables))
+    )
+
+
+def dataset_axes(
+    uri: str,
+    time_range: tuple[str | None, str | None] | None = None,
+    lat_range: tuple[float, float] | None = None,
+    lon_range: tuple[float, float] | None = None,
+    variables: list[str] | None = None,
+) -> tuple[pd.DatetimeIndex, np.ndarray, np.ndarray]:
+    """The distinct ``time``, ``latitude`` and ``longitude`` values of
+    the rows :func:`open_dataset` yields with the same arguments, each
+    ascending, read on the driver from file headers (a Zarr store's
+    metadata and coordinate arrays) — no data section is read and no
+    job runs. It is the template of the Zarr sink, the reference's
+    metadata open. Each file's grids are masked by
+    ``zarr_scan.mask_axes`` (the range rule of every read path), and
+    unknown variables raise as they do in :func:`open_dataset`.
+    Inputs without a time axis (GeoTIFF), ``ee://`` assets, whose axes
+    are no header's, and a time bound that is not a plain timestamp
+    raise ``ValueError``."""
+    if uri.startswith("ee://"):
+        raise ValueError(f"{uri!r}: ee:// assets have no file headers to read axes from")
+    uris, kind = _resolve(uri)
+    if kind == "zarr":
+        meta = _zarr_meta(uri, variables)
+        blocks = [(pd.to_datetime(meta.times), meta.lats, meta.lons, False)]
+    else:
+        fmt, opts, _ = _projection(kind, uris[0], variables)
+        if fmt.axes is None:
+            raise ValueError(f"{uri!r}: {kind} input has no time axis")
+        blocks = [b for u in uris for b in fmt.axes(u, opts)]
+    masked = [mask_axes(*b, time_range, lat_range, lon_range) for b in blocks]
+    times, lats, lons = (
+        np.unique(np.concatenate([np.array([], dtype), *(m[i] for m in masked)]))
+        for i, dtype in enumerate(("datetime64[ns]", "f8", "f8"))
+    )
+    return pd.DatetimeIndex(times), lats, lons
+
+
 def open_dataset(
     spark: SparkSession,
     uri: str,
@@ -268,30 +349,11 @@ def open_dataset(
             df.createOrReplaceTempView(view)
         return df
 
-    uris = expand(uri)
-    kinds = {detect(u) for u in uris}
-    if len(kinds) > 1:
-        raise ValueError(f"mixed formats under {uri!r}: {sorted(kinds)}")
-    (kind,) = kinds
-    if kind == "zarr" and len(uris) > 1:
-        raise ValueError("glob of multiple zarr stores unsupported — open each store")
+    uris, kind = _resolve(uri)
     if kind == "zarr":
-        import dataclasses
-
         from . import zarr_scan as ZS
-        from .zarr_v2 import open_zarr_v2
 
-        meta = open_zarr_v2(uri)
-        if variables is not None:
-            unknown = sorted(set(variables) - set(meta.variables))
-            if unknown:
-                raise ValueError(f"unknown variables {unknown} (store has {list(meta.variables)})")
-            # each variable is its own chunked array: restricting the
-            # template means the pruned variables' chunk files are
-            # never opened, let alone decompressed
-            meta = dataclasses.replace(
-                meta, variables=tuple(v for v in meta.variables if v in set(variables))
-            )
+        meta = _zarr_meta(uri, variables)
         df = ZS.scan(spark, meta, time_range, lat_range, lon_range, include_uri=False)
     else:
         # the decoder pairing — projection pushdown included — is the

@@ -22,15 +22,18 @@ spec files); chunks decode from real Zarr v2/v3 stores
 :func:`mask_cells` (in the decode task) and :func:`filter_cells` (the
 exact residual) are the one place ranges meet decoded cells, for every
 read path: this scan, ``opener.open_dataset`` and ``hypercube.ingest``.
-The file decoders only decode and project.
+The file decoders only decode and project. :func:`mask_axes` applies
+the same rule to coordinates read from file headers
+(``opener.dataset_axes``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -141,6 +144,19 @@ def prune_chunks(
     return manifest[keep]
 
 
+def in_time_range(col: str, time_range: tuple[str | None, str | None]) -> Column:
+    """``col`` in ``[start, end)`` as a Catalyst predicate, each bound
+    cast to a timestamp in the session time zone; a ``None`` end is
+    open."""
+    start, end = time_range
+    cond = F.lit(True)
+    if start is not None:
+        cond &= F.col(col) >= F.lit(start).cast("timestamp")
+    if end is not None:
+        cond &= F.col(col) < F.lit(end).cast("timestamp")
+    return cond
+
+
 def filter_cells(
     rows: DataFrame,
     time_range: tuple[str | None, str | None] | None = None,
@@ -152,11 +168,7 @@ def filter_cells(
     longitude within their closed ranges. Frames without a time axis
     (GeoTIFF) ignore ``time_range``."""
     if time_range is not None and "time" in rows.columns:
-        start, end = time_range
-        if start is not None:
-            rows = rows.filter(F.col("time") >= F.lit(start).cast("timestamp"))
-        if end is not None:
-            rows = rows.filter(F.col("time") < F.lit(end).cast("timestamp"))
+        rows = rows.filter(in_time_range("time", time_range))
     if lat_range is not None:
         rows = rows.filter(F.col("latitude").between(*lat_range))
     if lon_range is not None:
@@ -186,6 +198,48 @@ def mask_cells(
     if lon_range is not None:
         keep &= pdf["longitude"].between(*lon_range)
     return pdf if keep.all() else pdf[keep]
+
+
+def mask_axes(
+    times,
+    lats: np.ndarray,
+    lons: np.ndarray,
+    paired: bool,
+    time_range: tuple[str | None, str | None] | None = None,
+    lat_range: tuple[float, float] | None = None,
+    lon_range: tuple[float, float] | None = None,
+) -> tuple[pd.DatetimeIndex, np.ndarray, np.ndarray]:
+    """The range rule of :func:`mask_cells` and :func:`filter_cells`
+    on a grid's coordinates instead of its cells: the time, latitude
+    and longitude values of the cells ``times × grid`` that both keep.
+    The grid is the cross product of ``lats`` and ``lons``, or, when
+    ``paired``, the points ``(lats[i], lons[i])``; a range that leaves
+    no cell leaves all three empty. Times are whole microseconds, as
+    Spark holds them. A time bound must be a plain timestamp: the
+    session time zone that would place any other is not known here."""
+    times = pd.DatetimeIndex(times).floor("us")
+    bounds = _time_bounds(time_range)
+    if time_range is not None and bounds is None:
+        raise ValueError(f"time bounds must be plain timestamps, got {time_range!r}")
+    lo, hi = bounds or (None, None)
+    keep_t = np.ones(len(times), bool)
+    if lo is not None:
+        keep_t &= times >= lo
+    if hi is not None:
+        keep_t &= times < hi
+
+    def within(values: np.ndarray, closed) -> np.ndarray:
+        return np.ones(len(values), bool) if closed is None else (
+            (values >= closed[0]) & (values <= closed[1])
+        )
+
+    lats, lons = np.asarray(lats, "f8"), np.asarray(lons, "f8")
+    keep_la, keep_lo = within(lats, lat_range), within(lons, lon_range)
+    if paired:
+        keep_la = keep_lo = keep_la & keep_lo
+    if not (keep_t.any() and keep_la.any() and keep_lo.any()):
+        return times[:0], lats[:0], lons[:0]
+    return times[keep_t], lats[keep_la], lons[keep_lo]
 
 
 def row_schema(meta: ChunkedDatasetMeta, include_uri: bool = True):
