@@ -268,6 +268,21 @@ def test_mv_unknown_variable_exits_2(spark, tmp_path, grib_file, capsys):
     assert err.startswith("unknown variables ['nope']") and len(err.splitlines()) == 1
 
 
+def test_mv_zarr_empty_area_exits_2(tmp_path, grib_days, capsys, monkeypatch):
+    """An --area that holds no grid point leaves an empty axis, and a
+    Zarr v2 array may not have a zero-length chunk: mv --zarr fails
+    with one line before a session starts and writes nothing."""
+    import weather_tools_spark.cli as cli
+
+    monkeypatch.setattr(cli, "_spark", lambda *a: pytest.fail("a session started"))
+    out = tmp_path / "empty.zarr"
+    rc = main(["mv", "--uris", grib_days, "--output", str(out), "--zarr", "--area", "1", "1", "0", "0"])
+    assert rc == 2
+    err = capsys.readouterr().err.strip()
+    assert "no grid point" in err and len(err.splitlines()) == 1
+    assert not out.exists()
+
+
 @pytest.fixture()
 def grib_days(tmp_path):
     """Two GRIB2 files, three time steps each, written out of time order

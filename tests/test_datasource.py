@@ -6,11 +6,14 @@ matched file."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
+from weather_tools_spark.sources.cells import Ranges
 from weather_tools_spark.sources.datasource import (
     WeatherReader,
     register,
@@ -72,7 +75,7 @@ def test_push_filters_partitioning_unit():
     )
     # exactly the two non-range/-column filters come back to Catalyst
     assert len(unsupported) == 2
-    assert r._ranges == [("latitude", ">=", 10.0)]
+    assert r._ranges == Ranges(lat=(10.0, math.inf))
     assert len(r.partitions()) == 3  # one partition per file
 
 
@@ -202,6 +205,7 @@ def test_grib2_projection_skips_messages_at_decode(two_var_grib, monkeypatch):
     contains ONLY d2m's (discipline, category, number) — u10's message
     is skipped at the section-1 header, never unpacked."""
     from weather_tools_spark.sources import grib2 as G2
+    from weather_tools_spark.sources.cells import frame
     from weather_tools_spark.sources.datasource import _decoder_for
 
     seen_wants = []
@@ -213,7 +217,7 @@ def test_grib2_projection_skips_messages_at_decode(two_var_grib, monkeypatch):
 
     monkeypatch.setattr(G2, "read_grib2", spy)
     decode_one, cols = _decoder_for("grib2", two_var_grib, ["d2m"])
-    pdf = decode_one(two_var_grib)
+    pdf = frame(decode_one(two_var_grib))
     assert cols == ["time", "latitude", "longitude", "d2m"]
     assert list(pdf.columns) == ["time", "latitude", "longitude", "d2m"]
     assert seen_wants == [{G2.PARAMS["d2m"]}]

@@ -308,13 +308,15 @@ def test_auto_decoder_uses_fake_for_mem_uris_even_with_xarray(spark, monkeypatch
     import sys
     import types
 
+    from weather_tools_spark.sources.cells import frame
+
     stub = types.ModuleType("xarray")
     stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
     monkeypatch.setitem(sys.modules, "xarray", stub)
     assert importlib.util.find_spec("xarray") is not None
 
     got = H.ingest(spark, ["mem://a.nc"]).select("time", "latitude", "longitude", "d2m")
-    want = H._fake_grid_decode("mem://a.nc", H.IngestOptions())
+    want = frame(H._fake_grid_decode("mem://a.nc", H.IngestOptions()))
     got = got.toPandas().sort_values(["time", "latitude", "longitude"], ignore_index=True)
     want = want[got.columns].sort_values(["time", "latitude", "longitude"], ignore_index=True)
     assert len(got) > 0 and got.equals(want)

@@ -953,15 +953,17 @@ def _zarr_store(spark, path: str):
 
 
 def _assert_spread_decode(spark, name, df, units: int) -> None:
-    """``df`` decodes ``units`` whole units through one MapInPandas fed
-    by a Range of min(units, defaultParallelism) partitions — no
-    exchange before the decode — and every partition gets work."""
+    """``df`` decodes ``units`` whole units through one MapInArrow (and
+    no MapInPandas) fed by a Range of min(units, defaultParallelism)
+    partitions — no exchange before the decode — and every partition
+    gets work."""
     from pyspark.sql import functions as F
 
     tasks = min(units, spark.sparkContext.defaultParallelism)
     plan = _executed(df)
     assert "Exchange" not in plan, (name, plan)
-    assert plan.count("MapInPandas") == 1, (name, plan)
+    assert plan.count("MapInArrow") == 1, (name, plan)
+    assert "MapInPandas" not in plan, (name, plan)
     assert f"Range (0, {units}, step=1, splits={tasks})" in plan, (name, plan)
     assert df.select(F.spark_partition_id()).distinct().count() == tasks, name
 
@@ -970,7 +972,7 @@ def test_per_unit_plans_no_exchange_before_mapinpandas(spark, tmp_path, monkeypa
     """A GRIB glob and a Zarr store read through open_dataset, ingest()
     and the GRIB split all run the shared read plan (opener.map_files):
     the unit list is indexed by a Range split into min(units,
-    defaultParallelism) partitions, none empty, feeding one MapInPandas
+    defaultParallelism) partitions, none empty, feeding one MapInArrow
     with no Exchange in between."""
     from weather_tools_spark.pipeline import splitter
     from weather_tools_spark.sources import hypercube as H

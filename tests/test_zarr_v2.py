@@ -1,6 +1,6 @@
 """Golden tests for the real Zarr v2 codec (sources/zarr_v2.py): a
 self-written zlib-chunked store decoded back through the *pruned*
-mapInPandas scan must reproduce the source values byte-identically.
+mapInArrow scan must reproduce the source values byte-identically.
 Reference semantics: xr.open_zarr planning (xql/src/xql/open.py:69-98)
 and template chunk writes (weather_mv/loader_pipeline/regrid.py:384-390).
 """
@@ -15,6 +15,7 @@ import zlib
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from weather_tools_spark.sources import zarr_scan as ZS
 from weather_tools_spark.sources import zarr_v2 as Z2
@@ -103,8 +104,8 @@ def test_pruned_scan_equals_filtered_full_scan(spark, tmp_path):
     lar, lor = (49.6, 50.1), (10.2, 10.6)
     pruned = ZS.scan(spark, got_meta, time_range=tr, lat_range=lar, lon_range=lor)
     full = ZS.scan(spark, got_meta).filter(
-        (ZS.F.col("time") >= tr[0]) & (ZS.F.col("time") < tr[1])
-        & ZS.F.col("latitude").between(*lar) & ZS.F.col("longitude").between(*lor)
+        (F.col("time") >= tr[0]) & (F.col("time") < tr[1])
+        & F.col("latitude").between(*lar) & F.col("longitude").between(*lor)
     )
     a = sorted(tuple(r) for r in pruned.collect())
     b = sorted(tuple(r) for r in full.collect())
@@ -121,7 +122,7 @@ def test_missing_cells_keep_fill_value(spark, tmp_path):
     store = str(tmp_path / "sparse.zarr")
     meta = _meta(store, variables=("d2m",))
     src, rows, cols = _source_frame(spark, meta)
-    src = src.filter(ZS.F.col("longitude") != 10.25)  # drop one lon plane
+    src = src.filter(F.col("longitude") != 10.25)  # drop one lon plane
     Z2.write_zarr_v2(src, store, meta)
     out = ZS.scan(spark, Z2.open_zarr_v2(store)).toPandas()
     miss = out[out.longitude == 10.25]
@@ -517,8 +518,8 @@ def test_zarr_v3_roundtrip_through_pruned_scan(spark, tmp_path):
     lar, lor = (49.6, 50.1), (10.2, 10.6)
     pruned = ZS.scan(spark, got_meta, time_range=tr, lat_range=lar, lon_range=lor)
     full = ZS.scan(spark, got_meta).filter(
-        (ZS.F.col("time") >= tr[0]) & (ZS.F.col("time") < tr[1])
-        & ZS.F.col("latitude").between(*lar) & ZS.F.col("longitude").between(*lor)
+        (F.col("time") >= tr[0]) & (F.col("time") < tr[1])
+        & F.col("latitude").between(*lar) & F.col("longitude").between(*lor)
     )
     a = sorted(map(tuple, pruned.collect()))
     assert a == sorted(map(tuple, full.collect()))

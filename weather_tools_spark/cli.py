@@ -169,13 +169,17 @@ def cmd_mv(args: argparse.Namespace) -> int:
             dataset_axes(args.uris, None, lat_range, lon_range, keep or None)
             if args.zarr else None
         )
+        if axes is not None and not all(len(a) for a in axes):
+            # a Zarr v2 array may not have a zero-length chunk
+            raise ValueError(f"no grid point of {args.uris!r} is in --area {args.area}: "
+                             "nothing to write")
         spark = _spark("weather-mv")
         # the projection reaches the decoder: pruned GRIB messages are
         # skipped at the header, pruned NetCDF payloads never unpack
         df = open_dataset(
             spark, args.uris, lat_range=lat_range, lon_range=lon_range, variables=keep or None
         )
-    except ValueError as exc:  # unknown variables, no matching or mixed files
+    except ValueError as exc:  # unknown variables, no matching or mixed files, empty area
         print(exc, file=sys.stderr)
         return 2
     if keep:

@@ -150,12 +150,14 @@ def split_files_partitioned(spark, paths: list[str], out_dir: str) -> int:
     of parallelism (the reference's one-file-per-worker shape); each
     executor task splits its file with the :data:`SPLITTERS` entry of
     its format. Returns the number of output files written."""
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     from weather_tools_spark.sources.opener import detect, map_files
 
-    def run(p: str) -> pd.DataFrame:
+    def run(p: str, schema: pa.Schema, tz: str) -> list[pa.RecordBatch]:
         outs = SPLITTERS[detect(p)](p, out_dir)
-        return pd.DataFrame({"src": [p] * len(outs), "out": list(outs.values())})
+        return [pa.RecordBatch.from_pydict({"src": [p] * len(outs), "out": list(outs.values())}, schema)]
 
-    return map_files(spark, paths, run, "src string, out string").count()
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in ("src", "out")])
+    return map_files(spark, paths, run, schema).count()

@@ -13,12 +13,14 @@ expects a format string::
 Spark-native integration points implemented (not just ``read``):
 
 - **partition planning**: one input partition per matched file — whole
-  files are the unit of parallelism, exactly like the mapInPandas plan
+  files are the unit of parallelism, exactly like the mapInArrow plan
   the opener builds, but visible to Spark's scheduler as a real scan;
-- **filter pushdown** (``pushFilters``): comparison predicates on
-  ``latitude`` / ``longitude`` / ``time`` are absorbed by the source and
-  applied inside the decode task before rows reach Spark (and the
-  remaining filters are returned so Catalyst re-applies only those);
+- **filter pushdown** (``pushFilters``): the comparisons the range rule
+  of ``cells`` applies exactly — ``>=``, ``<=`` and ``=`` on
+  ``latitude`` / ``longitude``, ``>=`` and ``<`` on ``time`` — are
+  absorbed into the read's ``cells.Ranges`` and applied to the decoded
+  axes inside the task; every other filter is returned, so Catalyst
+  re-applies only those;
 - **column pruning** (``.option("columns", "d2m,u10")``): the source
   schema narrows to coordinates + the requested data variables, and the
   pruned variables are never decoded — GRIB messages for them are
@@ -30,8 +32,12 @@ Spark-native integration points implemented (not just ``read``):
   so projection is pushed explicitly via the option, mirroring the
   reference's ``_only_target_vars``
   (weather_mv/loader_pipeline/util.py:159-191, applied bq.py:317,331);
-- **Arrow hand-off**: ``read`` yields ``pyarrow.RecordBatch`` — the
-  columnar boundary, no per-row Python objects.
+- **Arrow hand-off**: ``read`` yields the ``pyarrow.RecordBatch``es of
+  ``cells.batches``, the builder of every read path, with times
+  localized in the session time zone of the query (a task-local
+  property of the job) — the columnar boundary, no per-row Python
+  objects. The streaming reader plans one partition per new file and
+  reads it the same way.
 
 The reference's analog is the xarray engine dispatch in
 ``xql/src/xql/open.py:68-98`` + the Beam file ingest
@@ -41,16 +47,16 @@ Spark-4 surface over the same byte-level codecs.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceWriter,
-    SimpleDataSourceStreamReader,
     EqualTo,
     Filter,
-    GreaterThan,
     GreaterThanOrEqual,
     InputPartition,
     LessThan,
@@ -59,10 +65,56 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .cells import Ranges, batches
 from .opener import _decoder_for, detect, expand, long_schema
 
-_PUSHABLE_COLS = ("latitude", "longitude", "time")
 _COORD_COLS = ("time", "latitude", "longitude")
+
+
+def _absorb(ranges: Ranges, f: Filter, columns: list[str]) -> Ranges | None:
+    """``ranges`` narrowed by ``f`` when the range rule applies ``f``
+    exactly — a closed bound or equality on latitude or longitude, a
+    ``>=`` or ``<`` bound on time — else ``None``."""
+    import pandas as pd
+
+    attribute = getattr(f, "attribute", ())
+    col = attribute[0] if len(attribute) == 1 and attribute[0] in columns else None
+    value = getattr(f, "value", None)
+    closed = (GreaterThanOrEqual, LessThanOrEqual, EqualTo)
+    if col in ("latitude", "longitude") and isinstance(f, closed):
+        if not isinstance(value, (int, float)) or value != value:  # NaN orders last in Spark
+            return None
+        lo, hi = getattr(ranges, col[:3]) or (-math.inf, math.inf)
+        if not isinstance(f, LessThanOrEqual):
+            lo = max(lo, value)
+        if not isinstance(f, GreaterThanOrEqual):
+            hi = min(hi, value)
+        return ranges._replace(**{col[:3]: (lo, hi)})
+    if col == "time" and isinstance(f, (GreaterThanOrEqual, LessThan)) and value is not None:
+        t = pd.Timestamp(value)  # a pushed timestamp is an instant
+        t = t.tz_localize("UTC") if t.tzinfo is None else t.tz_convert("UTC")
+        lo, hi = ranges.time or (None, None)
+        if isinstance(f, GreaterThanOrEqual):
+            lo = t if lo is None else max(lo, t)
+        else:
+            hi = t if hi is None else min(hi, t)
+        return ranges._replace(time=(lo, hi))
+    return None
+
+
+def _file_batches(path: str, kind: str, columns: list[str], ranges: Ranges = Ranges()):
+    """One file's rows in ``columns`` that ``ranges`` keeps, decoding
+    only the data variables among ``columns`` (projection pushdown),
+    with times in the session time zone of the running query."""
+    from pyspark import TaskContext
+    from pyspark.sql.pandas.types import _get_local_timezone, to_arrow_schema
+
+    variables = [c for c in columns if c not in _COORD_COLS]
+    decode_one, _ = _decoder_for(kind, path, variables, strict=False)
+    # Spark hands an explicitly set session zone to the job's tasks as a
+    # local property; otherwise the JVM's default, the host's zone
+    tz = TaskContext.get().getLocalProperty("spark.sql.session.timeZone") or _get_local_timezone()
+    return batches(decode_one(path), to_arrow_schema(long_schema(columns)), tz, ranges)
 
 
 class _FilePartition(InputPartition):
@@ -75,27 +127,16 @@ class WeatherReader(DataSourceReader):
         self._paths = paths
         self._kind = kind
         self._columns = columns
-        self._ranges: list[tuple[str, str, float]] = []  # (col, op, value)
+        self._ranges = Ranges()
 
     # -- filter pushdown ---------------------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
-            col = f.attribute[0] if hasattr(f, "attribute") else None
-            if (
-                isinstance(f, (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, EqualTo))
-                and col in _PUSHABLE_COLS
-                and col in self._columns
-            ):
-                op = {
-                    GreaterThan: ">",
-                    GreaterThanOrEqual: ">=",
-                    LessThan: "<",
-                    LessThanOrEqual: "<=",
-                    EqualTo: "==",
-                }[type(f)]
-                self._ranges.append((col, op, f.value))
+            narrowed = _absorb(self._ranges, f, self._columns)
+            if narrowed is None:
+                yield f  # not applied exactly here — Catalyst keeps it
             else:
-                yield f  # not ours — Catalyst keeps it
+                self._ranges = narrowed
 
     # -- planning ----------------------------------------------------------
     def partitions(self) -> list[InputPartition]:
@@ -103,39 +144,7 @@ class WeatherReader(DataSourceReader):
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: _FilePartition):
-        import pandas as pd
-        import pyarrow as pa
-
-        # projection pushdown: decode exactly the data variables in this
-        # reader's schema — a schema narrowed by .option("columns", ...)
-        # means the pruned variables never decode in-task
-        variables = [c for c in self._columns if c not in _COORD_COLS]
-        decode_one, _ = _decoder_for(self._kind, partition.path, variables, strict=False)
-        pdf = decode_one(partition.path).reindex(columns=self._columns)
-        for col, op, val in self._ranges:
-            if col == "time":
-                val = pd.Timestamp(val)
-            series = pdf[col]
-            mask = {
-                ">": series > val,
-                ">=": series >= val,
-                "<": series < val,
-                "<=": series <= val,
-                "==": series == val,
-            }[op]
-            pdf = pdf[mask]
-        # Arrow hand-off with the exact declared schema (µs timestamps,
-        # float64 data columns)
-        fields = []
-        for c in self._columns:
-            if c == "time":
-                fields.append(pa.field(c, pa.timestamp("us")))
-                pdf[c] = pd.to_datetime(pdf[c]).astype("datetime64[us]")
-            else:
-                fields.append(pa.field(c, pa.float64()))
-                pdf[c] = pdf[c].astype("float64")
-        table = pa.Table.from_pandas(pdf, schema=pa.schema(fields), preserve_index=False)
-        yield from table.to_batches()
+        return _file_batches(partition.path, self._kind, self._columns, self._ranges)
 
 
 class WeatherDataSource(DataSource):
@@ -172,7 +181,7 @@ class WeatherDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool) -> "WeatherWriter":
         return WeatherWriter(self.options, schema, overwrite)
 
-    def simpleStreamReader(self, schema: StructType) -> "WeatherStreamReader":
+    def streamReader(self, schema: StructType) -> "WeatherStreamReader":
         return WeatherStreamReader(self.options, schema)
 
 
@@ -268,11 +277,12 @@ class WeatherWriter(DataSourceWriter):
 # ---------------------------------------------------------------------------
 
 
-class WeatherStreamReader(SimpleDataSourceStreamReader):
+class WeatherStreamReader(DataSourceStreamReader):
     """File-monitor streaming source over the same codecs: each
-    micro-batch decodes the files that appeared since the last offset.
-    The offset is the sorted list of consumed file names — replayable,
-    so ``readBetweenOffsets`` re-decodes exactly the delta on recovery
+    micro-batch reads the files that appeared since the last offset,
+    one partition per file, as :class:`WeatherReader` reads a file. The
+    offset is the sorted list of file names seen — replayable, so a
+    restarted query re-plans exactly the delta of an uncommitted batch
     (files are immutable once written, the property every file-based
     exactly-once source relies on)."""
 
@@ -282,38 +292,20 @@ class WeatherStreamReader(SimpleDataSourceStreamReader):
             raise ValueError('streaming format("weather") needs .load(path)')
         self._columns = [f.name for f in schema.fields]
 
-    def _current(self) -> list[str]:
-        try:
-            return expand(self._path)
-        except ValueError:  # nothing yet — an empty directory is a valid stream start
-            return []
-
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _decode_files(self, files: list[str]) -> list[tuple]:
-        # a concrete list, not a generator: Spark's prefetching offset
-        # cache copies (and may pickle) the returned iterator
-        variables = [c for c in self._columns if c not in _COORD_COLS]
-        rows: list[tuple] = []
-        for p in files:
-            decode_one, _ = _decoder_for(detect(p), p, variables, strict=False)
-            pdf = decode_one(p).reindex(columns=self._columns)
-            if "time" in pdf.columns:
-                # Spark's tuple converter localizes timestamps — hand it
-                # tz-aware UTC datetimes (session tz is UTC)
-                import pandas as pd
+    def latestOffset(self) -> dict:
+        try:
+            return {"files": expand(self._path)}
+        except ValueError:  # nothing yet — an empty directory is a valid stream start
+            return {"files": []}
 
-                pdf["time"] = pd.to_datetime(pdf["time"]).dt.tz_localize("UTC")
-            rows.extend(tuple(r) for r in pdf.itertuples(index=False))
-        return rows
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        return [_FilePartition(p) for p in sorted(set(end["files"]) - set(start["files"]))]
 
-    def read(self, start: dict):
-        seen = set(start.get("files", []))
-        new = sorted(set(self._current()) - seen)
-        end = {"files": sorted(seen | set(new))}
-        return self._decode_files(new), end
+    def read(self, partition: _FilePartition):
+        return _file_batches(partition.path, detect(partition.path), self._columns)
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        delta = sorted(set(end.get("files", [])) - set(start.get("files", [])))
-        return self._decode_files(delta)
+    def commit(self, end: dict) -> None:
+        pass

@@ -23,7 +23,8 @@ end-to-end tests drive.
 
 Scale shape: the asset's (time × chunk-grid) manifest is a small
 DataFrame; each row becomes one executor-side ``get_pixels`` fetch
-inside ``mapInPandas`` (client built per executor from a picklable
+inside ``mapInArrow``, its block one ``cells.Cube`` whose rows
+``cells.batches`` builds (client built per executor from a picklable
 factory — no driver-side pixel traffic, same topology as the zarr
 chunk scan). At 100 TB this is the standard hypercube ingest plan:
 manifest rows ≈ chunks, partition count follows the manifest, decode
@@ -40,6 +41,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .cells import Cube, batches
 
 _GATE_MSG = (
     "ee:// datasets require the earthengine-api client (reference "
@@ -250,7 +255,7 @@ def chunk_manifest(
     with a ``None`` end open, read as ``zarr_scan.prune_chunks`` reads
     it: a bound that is not a plain timestamp prunes nothing (it is
     left to ``open_dataset``'s residual filter)."""
-    from .zarr_scan import _time_bounds
+    from .cells import _time_bounds
 
     lo, hi = (
         None if t is None else t.timestamp()  # naive bounds are UTC, as image times are
@@ -301,41 +306,35 @@ def open_ee(
     asset_id = uri[len("ee://") :] if uri.startswith("ee://") else uri
     info = factory().get_asset_info(asset_id)
     manifest = chunk_manifest(info, chunk=chunk, time_range=time_range, bands=bands)
+    schema = T.StructType(
+        [T.StructField("time", T.TimestampType())]
+        + [T.StructField(c, T.DoubleType()) for c in ("latitude", "longitude")]
+        + [T.StructField("band", T.StringType()), T.StructField("value", T.DoubleType())]
+    )
     if manifest.empty:
-        return spark.createDataFrame(
-            [],
-            "time timestamp, latitude double, longitude double, "
-            "band string, value double",
-        )
+        return spark.createDataFrame([], schema)
     ox, oy = info["grid"]["origin"]
     px, py = info["grid"]["pixel"]
     mdf = spark.createDataFrame(manifest).repartition(
         max(1, min(len(manifest), spark.sparkContext.defaultParallelism))
     )
+    arrow_schema = to_arrow_schema(schema)
+    tz = spark.conf.get("spark.sql.session.timeZone")
 
-    def gen(batches):
+    def gen(manifest_batches):
         client = factory()
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                block = client.get_pixels(
-                    r.asset_id, r.band, int(r.t_index), int(r.x0), int(r.y0),
-                    int(r.w), int(r.h),
+        for b in manifest_batches:
+            for r in b.to_pylist():
+                x0, y0, w, h = (int(r[k]) for k in ("x0", "y0", "w", "h"))
+                block = client.get_pixels(r["asset_id"], r["band"], int(r["t_index"]), x0, y0, w, h)
+                cube = Cube(
+                    pd.DatetimeIndex([pd.Timestamp(int(r["t_epoch"]), unit="s")]),
+                    oy + py * np.arange(y0, y0 + h), ox + px * np.arange(x0, x0 + w),
+                    {"value": np.asarray(block, np.float64)[None]}, scalars={"band": r["band"]},
                 )
-                yy, xx = np.mgrid[r.y0 : r.y0 + r.h, r.x0 : r.x0 + r.w]
-                yield pd.DataFrame(
-                    {
-                        "time": pd.Timestamp(int(r.t_epoch), unit="s"),
-                        "latitude": oy + py * yy.ravel(),
-                        "longitude": ox + px * xx.ravel(),
-                        "band": r.band,
-                        "value": block.ravel().astype(np.float64),
-                    }
-                )
+                yield from batches([cube], arrow_schema, tz)
 
-    return mdf.mapInPandas(
-        gen,
-        "time timestamp, latitude double, longitude double, band string, value double",
-    )
+    return mdf.mapInArrow(gen, schema)
 
 
 @dataclass

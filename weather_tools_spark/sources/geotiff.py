@@ -39,6 +39,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from .cells import Cube, frame
+
 # TIFF tag ids
 _T_SUBFILE, _T_WIDTH, _T_HEIGHT, _T_BPS, _T_COMPRESSION = 254, 256, 257, 258, 259
 _T_PHOTOMETRIC, _T_STRIP_OFFSETS, _T_SPP, _T_ROWS_PER_STRIP = 262, 273, 277, 278
@@ -332,25 +334,22 @@ def read_overviews(path: str) -> list[np.ndarray]:
     return out
 
 
-def gtiff_decode(path: str, opts=None, value_col: str = "value") -> pd.DataFrame:
-    """Raster → long-format rows (latitude, longitude, value, band
-    metadata) — the rioxarray-open analog for the ingest surface.
-    GeoTIFF is north-up: row 0 is the NORTHERN edge, so latitude
-    descends down the rows (the ERA5 grid convention). A single band
-    has nothing to project, so ``opts`` is unused; ranges apply to the
-    decoded frame (``zarr_scan.mask_cells``)."""
+def gtiff_cubes(path: str, opts=None, value_col: str = "value") -> list[Cube]:
+    """Raster → one :class:`cells.Cube` without a time axis — the
+    rioxarray-open analog for the ingest surface. GeoTIFF is north-up:
+    row 0 is the NORTHERN edge, so latitude descends down the rows (the
+    ERA5 grid convention). A single band has nothing to project, so
+    ``opts`` is unused; ranges apply in ``cells.batches``."""
     arr, (x0, y0), (sx, sy) = read_geotiff(path)
     h, w = arr.shape
-    lons = x0 + np.arange(w) * sx
-    lats = y0 - np.arange(h) * sy
-    la, lo = np.meshgrid(lats, lons, indexing="ij")
-    return pd.DataFrame(
-        {
-            "latitude": la.ravel(),
-            "longitude": lo.ravel(),
-            value_col: np.asarray(arr, dtype="f8").ravel(),
-        }
-    )
+    lats, lons = y0 - np.arange(h) * sy, x0 + np.arange(w) * sx
+    return [Cube(None, lats, lons, {value_col: np.asarray(arr, dtype="f8")})]
+
+
+def gtiff_decode(path: str, opts=None, value_col: str = "value") -> pd.DataFrame:
+    """:func:`gtiff_cubes` as long-format rows (latitude, longitude,
+    value)."""
+    return frame(gtiff_cubes(path, opts, value_col))
 
 
 def write_geotiff_partitioned(

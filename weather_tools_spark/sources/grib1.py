@@ -435,13 +435,21 @@ def read_grib1_bytes(
     return msgs
 
 
-def grib1_decode(path: str, opts=None) -> pd.DataFrame:
-    """Hypercube-ingest decoder over GRIB1 bytes — the long-format
-    merge of :func:`grib2.grib2_decode` (``grib2.merge_messages``),
-    same ``opts.variables`` message-filter pushdown."""
+def grib1_cubes(path: str, opts=None) -> list:
+    """GRIB1 bytes → the cubes of ``grib2.merge_messages``, with the
+    ``opts.variables`` message-filter pushdown of
+    :func:`grib2.grib2_cubes`."""
     from .grib2 import merge_messages
 
     return merge_messages(read_grib1(path, _message_filter1(opts)))
+
+
+def grib1_decode(path: str, opts=None) -> pd.DataFrame:
+    """:func:`grib1_cubes` as one long-format frame, the contract of
+    ``grib2.grib2_decode``."""
+    from .cells import frame
+
+    return frame(grib1_cubes(path, opts))
 
 
 def _message_filter1(opts) -> set[int] | None:

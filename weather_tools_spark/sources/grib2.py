@@ -65,6 +65,8 @@ from typing import Iterator, NamedTuple
 import numpy as np
 import pandas as pd
 
+from .cells import Cube, frame
+
 _MAGIC = b"GRIB"
 # engine parameter table (WMO discipline, category, number)
 PARAMS = {"d2m": (0, 0, 6), "u10": (0, 2, 2), "v10": (0, 2, 3)}
@@ -785,18 +787,18 @@ def _grid(s3: bytes):
     return lats, lons, lat_grid, lon_grid, ni, nj
 
 
-def grid_blocks(grids: dict[bytes, tuple]) -> list[tuple]:
-    """``{grid bytes: (parsed grid, reference times)}`` → one
-    ``(times, lats, lons, paired)`` block per grid: 1-D axes whose
-    cross product with the times is the grid's cells, or, ``paired``,
-    per-point coordinates (``lats[i], lons[i]`` is point ``i``)."""
+def grid_blocks(grids: dict[bytes, tuple]) -> list[Cube]:
+    """``{grid bytes: (parsed grid, reference times)}`` → one cube
+    without values per grid: 1-D axes whose cross product with the
+    times is the grid's cells, or, ``paired``, per-point coordinates
+    (``lats[i], lons[i]`` is point ``i``)."""
     blocks = []
     for (lats, lons, lat_grid, lon_grid, *_), times in grids.values():
         times = pd.DatetimeIndex(sorted(times))
         if lat_grid is not None:
-            blocks.append((times, np.ravel(lat_grid), np.ravel(lon_grid), True))
+            blocks.append(Cube(times, np.ravel(lat_grid), np.ravel(lon_grid), {}, True))
         else:
-            blocks.append((times, lats, lons, False))
+            blocks.append(Cube(times, lats, lons, {}))
     return blocks
 
 
@@ -1161,13 +1163,17 @@ def _decode_complex(s5: bytes, s7: bytes, npts: int) -> np.ndarray:
     return y.astype("i8")
 
 
-def grib2_decode(path: str, opts=None) -> pd.DataFrame:
-    """Hypercube-ingest decoder over GRIB2 bytes: one long-format frame
-    with a column per parameter (:func:`merge_messages`). Honors
+def grib2_cubes(path: str, opts=None) -> list[Cube]:
+    """GRIB2 bytes → the cubes of :func:`merge_messages`. Honors
     ``opts.variables`` as the message filter pushdown; every cell of a
-    kept message decodes (ranges apply to the decoded frame,
-    ``zarr_scan.mask_cells``)."""
+    kept message decodes (ranges apply in ``cells.batches``)."""
     return merge_messages(read_grib2(path, _message_filter(opts)))
+
+
+def grib2_decode(path: str, opts=None) -> pd.DataFrame:
+    """:func:`grib2_cubes` as one long-format frame with a column per
+    parameter."""
+    return frame(grib2_cubes(path, opts))
 
 
 def _message_filter(opts) -> set[tuple[int, int, int]] | None:
@@ -1192,12 +1198,12 @@ def _message_filter(opts) -> set[tuple[int, int, int]] | None:
     return want
 
 
-def merge_messages(messages: list[dict]) -> pd.DataFrame:
-    """Decoded GRIB messages (edition 1 or 2) → one long-format frame
-    with a column per parameter: messages sharing reference time,
-    step, member, level and grid merge into one row set (the
-    hypercube-merge semantics of the xarray branch)."""
-    # forecast-step / ensemble columns appear only when the file uses
+def merge_messages(messages: list[dict]) -> list[Cube]:
+    """Decoded GRIB messages (edition 1 or 2) → one cube per reference
+    time, step, member, level and grid, with a variable per parameter:
+    messages sharing those merge into one row set (the hypercube-merge
+    semantics of the xarray branch)."""
+    # forecast-step / ensemble scalars appear only when the file uses
     # them (step ≠ 0 or PDS template 4.1; GRIB1 messages carry no
     # member or level) — static-grid decode output keeps its
     # 3-coordinate schema
@@ -1210,38 +1216,42 @@ def merge_messages(messages: list[dict]) -> pd.DataFrame:
     for m in messages:
         lv.setdefault(m["param"], set()).add((m.get("level_type"), m.get("level")))
     has_level = any(len(s) > 1 for s in lv.values())
-    frames: dict[tuple, pd.DataFrame] = {}
+    cubes: dict[tuple, Cube] = {}
     for m in messages:
-        curvilinear = "lat_grid" in m  # Lambert/polar/reduced: per-point coords
-        la, lo = (m["lat_grid"], m["lon_grid"]) if curvilinear else (m["lats"], m["lons"])
+        cube = message_cube(m, m["param"])
         key = (
             m["ref_time"], m["step_hours"], m.get("member"),
             m["level_type"] if has_level else None,
             m["level"] if has_level else None,
-            curvilinear, la.tobytes(), lo.tobytes(),
+            cube.paired, cube.lats.tobytes(), cube.lons.tobytes(),
         )
-        pdf = frames.get(key)
-        if pdf is None:
-            if not curvilinear:
-                la, lo = np.meshgrid(la, lo, indexing="ij")
-            cols = {"time": m["ref_time"]}
+        if key in cubes:
+            cubes[key].values.update(cube.values)
+        else:
+            scalars = cube.scalars
             if has_step:
                 # reference semantics: step stored as SECONDS-as-FLOAT64,
                 # valid_time = time + step (bq.py:440-441, util.py:121-125)
-                cols["step"] = m["step_hours"] * 3600.0
-                cols["valid_time"] = m["valid_time"]
+                scalars["step"] = m["step_hours"] * 3600.0
+                scalars["valid_time"] = m["valid_time"]
             if has_member:
-                cols["number"] = -1 if m["member"] is None else int(m["member"])
+                scalars["number"] = -1 if m["member"] is None else int(m["member"])
             if has_level:  # vertical axis (e.g. isobaric surfaces, Pa)
-                cols["level"] = m["level"]
-            cols["latitude"] = la.ravel()
-            cols["longitude"] = lo.ravel()
-            pdf = pd.DataFrame(cols)
-            frames[key] = pdf
-        pdf[m["param"]] = m["values"].ravel()
-    if not frames:
-        return pd.DataFrame({"time": [], "latitude": [], "longitude": []})
-    return pd.concat(frames.values(), ignore_index=True)
+                scalars["level"] = m["level"]
+            cubes[key] = cube
+    return list(cubes.values())
+
+
+def message_cube(m: dict, name: str, scalars: dict | None = None) -> Cube:
+    """One decoded GRIB message (edition 1 or 2) → a cube at its
+    reference time whose one variable ``name`` holds its values: 1-D
+    axes of a regular grid, or the per-point coordinates of a Lambert,
+    polar or reduced grid (``paired``)."""
+    paired = "lat_grid" in m
+    la, lo = (np.ravel(m["lat_grid"]), np.ravel(m["lon_grid"])) if paired else (m["lats"], m["lons"])
+    values = np.reshape(m["values"], (1, -1) if paired else (1, *np.shape(m["values"])))
+    times = pd.DatetimeIndex([m["ref_time"]]).as_unit(m["ref_time"].unit)
+    return Cube(times, la, lo, {name: values}, paired, dict(scalars or {}))
 
 
 def grib_messages(pdf: pd.DataFrame, variables: list[str]) -> list[dict]:

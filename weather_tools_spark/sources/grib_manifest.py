@@ -21,7 +21,8 @@ Spark-first shape:
   (param/time/step/level are ordinary columns), then decodes only the
   surviving messages: one task per file group, each seeking to its
   message offsets and parsing the byte slices with the stdlib codec
-  kernels (read_grib2_bytes / read_grib1_bytes). A query touching one
+  kernels (read_grib2_bytes / read_grib1_bytes) into one cube per
+  message, whose rows ``cells.batches`` builds. A query touching one
   parameter at one forecast step reads that fraction of the corpus
   bytes, not the files.
 
@@ -35,10 +36,13 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .zarr_scan import in_time_range
+from .cells import batches, in_time_range
 
 MANIFEST_SCHEMA = (
     "path string, offset long, length long, edition int, param string, "
@@ -123,48 +127,28 @@ def scan_grib_manifest(
     if max_step_hours is not None:
         sel = sel.filter(F.col("step_hours") <= max_step_hours)
 
-    def decode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from .grib1 import read_grib1_bytes
-        from .grib2 import read_grib2_bytes
-
-        (path,) = key
-        out = []
-        with open(path, "rb") as f:
-            for _, row in pdf.sort_values("offset").iterrows():
-                f.seek(int(row["offset"]))
-                chunk = f.read(int(row["length"]))
-                msgs = (
-                    read_grib2_bytes(chunk, origin=path)
-                    if row["edition"] == 2
-                    else read_grib1_bytes(chunk, origin=path)
-                )
-                for m in msgs:
-                    if "lat_grid" in m:
-                        la, lo = m["lat_grid"], m["lon_grid"]
-                    else:
-                        la, lo = np.meshgrid(m["lats"], m["lons"], indexing="ij")
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "time": m["ref_time"],
-                                "step": m["step_hours"] * 3600.0,
-                                "latitude": np.asarray(la).ravel(),
-                                "longitude": np.asarray(lo).ravel(),
-                                "param": m["param"],
-                                "value": np.asarray(m["values"], dtype="f8").ravel(),
-                            }
-                        )
-                    )
-        if not out:
-            return pd.DataFrame(
-                columns=["time", "step", "latitude", "longitude", "param", "value"]
-            )
-        return pd.concat(out, ignore_index=True)
-
-    return sel.groupBy("path").applyInPandas(
-        decode,
-        "time timestamp, step double, latitude double, longitude double, "
-        "param string, value double",
+    schema = T.StructType(
+        [T.StructField("time", T.TimestampType())]
+        + [T.StructField(c, T.DoubleType()) for c in ("step", "latitude", "longitude")]
+        + [T.StructField("param", T.StringType()), T.StructField("value", T.DoubleType())]
     )
+    arrow_schema = to_arrow_schema(schema)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+
+    def decode(table: pa.Table) -> pa.Table:
+        from .grib1 import read_grib1_bytes
+        from .grib2 import message_cube, read_grib2_bytes
+
+        rows = table.sort_by("offset").to_pylist()
+        out = []
+        with open(rows[0]["path"], "rb") as f:
+            for row in rows:
+                f.seek(row["offset"])
+                chunk = f.read(row["length"])
+                read = read_grib2_bytes if row["edition"] == 2 else read_grib1_bytes
+                for m in read(chunk, origin=row["path"]):
+                    scalars = {"step": m["step_hours"] * 3600.0, "param": m["param"]}
+                    out += batches([message_cube(m, "value", scalars)], arrow_schema, tz)
+        return pa.Table.from_batches(out, arrow_schema)
+
+    return sel.groupBy("path").applyInArrow(decode, schema)

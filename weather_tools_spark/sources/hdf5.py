@@ -43,6 +43,8 @@ import zlib
 import numpy as np
 import pandas as pd
 
+from .cells import Cube, frame
+
 MAGIC = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
 _TIME_UNITS = "seconds since 1970-01-01T00:00:00"
@@ -997,13 +999,12 @@ def list_variables_h5(path: str) -> list[str]:
 # ---------------------------------------------------------------- NetCDF-4
 
 
-def nc4_decode(path: str, opts=None) -> pd.DataFrame:
-    """Hypercube-ingest decoder over NetCDF-4/HDF5 bytes — same output
-    contract and CF conventions as nc3_decode (sources/netcdf3.py).
-    ``opts.variables`` is the projection pushdown: pruned variables'
-    chunks are never inflated (see :func:`read_hdf5`); coordinates
-    always decode, and so does every cell (ranges apply to the decoded
-    frame, ``zarr_scan.mask_cells``)."""
+def nc4_cubes(path: str, opts=None) -> list[Cube]:
+    """NetCDF-4/HDF5 bytes → one :class:`cells.Cube`, with the CF
+    conventions of ``netcdf3.nc3_cubes``. ``opts.variables`` is the
+    projection pushdown: pruned variables' chunks are never inflated
+    (see :func:`read_hdf5`); coordinates always decode, and so does
+    every cell (ranges apply in ``cells.batches``)."""
     variables = getattr(opts, "variables", None) if opts is not None else None
     want = None
     if variables:
@@ -1011,15 +1012,20 @@ def nc4_decode(path: str, opts=None) -> pd.DataFrame:
     datasets, attrs = read_hdf5(path, want)
     times, lats, lons = _axes(path, datasets, attrs)
     shape = (len(times), len(lats), len(lons))
-    tt, la, lo = np.meshgrid(times, lats, lons, indexing="ij")
-    out = {"time": tt.ravel(), "latitude": la.ravel(), "longitude": lo.ravel()}
+    values = {}
     for v, arr in datasets.items():
         if v in ("time", "latitude", "longitude"):
             continue
         if arr.shape != shape:
             raise ValueError(f"{path}: variable {v} shape {arr.shape} != {shape}")
-        out[v] = np.asarray(arr, dtype="f8").ravel()
-    return pd.DataFrame(out)
+        values[v] = np.asarray(arr, dtype="f8")
+    return [Cube(times, lats, lons, values)]
+
+
+def nc4_decode(path: str, opts=None) -> pd.DataFrame:
+    """:func:`nc4_cubes` as long-format rows, the contract of
+    ``netcdf3.nc3_decode``."""
+    return frame(nc4_cubes(path, opts))
 
 
 def _axes(path: str, datasets: dict, attrs: dict) -> tuple:
@@ -1037,14 +1043,13 @@ def _axes(path: str, datasets: dict, attrs: dict) -> tuple:
     )
 
 
-def nc4_axes(path: str, opts=None) -> list[tuple]:
-    """The coordinates of the rows :func:`nc4_decode` yields (every
-    cell of ``time × latitude × longitude``, whatever ``opts``
-    projects), read from the three coordinate datasets alone: one
-    ``(times, lats, lons, paired=False)`` block."""
+def nc4_axes(path: str, opts=None) -> list[Cube]:
+    """The axes of :func:`nc4_cubes` (whatever ``opts`` projects), read
+    from the three coordinate datasets alone: one cube without
+    values."""
     with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as buf:
         datasets, attrs = _read_datasets(buf, {"time", "latitude", "longitude"}, path)
-    return [(*_axes(path, datasets, attrs), False)]
+    return [Cube(*_axes(path, datasets, attrs), {})]
 
 
 def write_netcdf4(

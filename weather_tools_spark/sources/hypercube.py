@@ -10,18 +10,19 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
   wide columns (sinks.py:251-342, height rule :303-308)
   → ``normalized_var_name`` (pure) applied during decode;
 - coordinate-space explosion to rows (util.py:207-237, bq.py:338-386)
-  → decode emits long-format pandas batches via ``mapInPandas``;
+  → decoders return grid cubes and ``cells.batches`` builds their
+  long-format Arrow rows in ``mapInArrow``;
 - area/time filter (bq.py:332-335) → ``IngestOptions`` become the
-  ``(time_range, lat_range, lon_range)`` every read path uses:
-  ``zarr_scan.mask_cells`` drops out-of-range cells inside the decode
-  task and ``zarr_scan.filter_cells`` is the exact residual (decoders
-  only decode and project);
+  ``(time_range, lat_range, lon_range)`` every read path uses: the
+  builder masks the cubes' axes inside the decode task and
+  ``cells.filter_cells`` is the exact residual (decoders only decode
+  and project);
 - geo columns via broadcast join against the grid lookup
   (bq.py:197-238, 344-375) → ``attach_geo``;
 - system columns data_import_time / data_uri / data_first_step
   (bq.py:49-54, 377-379) → ``with_system_columns``.
 
-Spark plan shape: range over the path list → mapInPandas(decode)
+Spark plan shape: range over the path list → mapInArrow(decode)
 (``opener.map_files``) → [filters] → join(broadcast(geo)) → sink.
 Whole files (or whole zarr chunks) per task; no shuffle until an
 explicit sink/agg asks for one.
@@ -40,8 +41,8 @@ from pyspark.sql import types as T
 
 from weather_tools_spark.functions.geo import build_geo_lookup
 
+from .cells import Cube, Ranges, batches, filter_cells, frame_batch, mask
 from .opener import FORMATS, detect, map_files
-from .zarr_scan import filter_cells, mask_cells
 
 # Canonical coordinate column set (mirrors the reference's
 # frozenset(('latitude','time','step','valid_time','longitude','number')),
@@ -127,28 +128,24 @@ class IngestOptions:
     end_time: str | None = None
 
 
-def _fake_grid_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """Deterministic fake decoder (container has no xarray/cfgrib): emits
-    a small regular grid derived from the path hash. Stands in for the
-    real decode so the mapInPandas plumbing is exercised end-to-end.
+def _fake_grid_decode(path: str, opts: IngestOptions) -> list[Cube]:
+    """Deterministic fake decoder (container has no xarray/cfgrib): one
+    small regular grid cube derived from the path hash. Stands in for
+    the real decode so the ingest plumbing is exercised end-to-end.
     """
     seed = int(hashlib.md5(path.encode()).hexdigest()[:8], 16)
     rng = np.random.RandomState(seed)
     lats = np.arange(49.0, 44.0, -1.0)  # descending, like ERA5 grids
     lons = np.arange(-108.0, -103.0, 1.0)
     times = pd.date_range("2018-01-02T06:00:00", periods=3, freq="6h")
-    tt, la, lo = np.meshgrid(times, lats, lons, indexing="ij")
-    n = tt.size
-    return pd.DataFrame(
-        {
-            "time": tt.ravel(),
-            "latitude": la.ravel().astype(float),
-            "longitude": lo.ravel().astype(float),
-            "d2m": (rng.rand(n) * 150 + 180).round(4),
-            "u10": (rng.rand(n) * 60 - 30).round(4),
-            "v10": (rng.rand(n) * 60 - 30).round(4),
-        }
-    )
+    shape = (len(times), len(lats), len(lons))
+    n = int(np.prod(shape))
+    values = {
+        "d2m": (rng.rand(n) * 150 + 180).round(4).reshape(shape),
+        "u10": (rng.rand(n) * 60 - 30).round(4).reshape(shape),
+        "v10": (rng.rand(n) * 60 - 30).round(4).reshape(shape),
+    }
+    return [Cube(times, lats, lons, values)]
 
 
 def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
@@ -206,14 +203,14 @@ def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
     return pdf[order + sorted(rest)]
 
 
-def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
+def decode_auto(uri: str, opts: IngestOptions) -> list[Cube] | pd.DataFrame:
     """Per-URI dispatch (the reference's engine-dispatch open,
     sinks.py:437-519): synthetic mem:// URIs always decode with the
     deterministic fake (they have no on-disk bytes for a real library
     to open); anything ``opener.detect`` recognises decodes with its
-    stdlib codec; the rest (a zarr store, a file no probe recognises)
-    goes to the xarray branch when xarray is importable, else raises
-    ``detect``'s ValueError."""
+    stdlib codec into cubes; the rest (a zarr store, a file no probe
+    recognises) goes to the xarray branch, which returns a long frame,
+    when xarray is importable, else raises ``detect``'s ValueError."""
     import importlib.util
 
     if uri.startswith("mem://"):
@@ -225,6 +222,22 @@ def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
             raise
         fmt = None
     return (fmt.decode if fmt is not None else _xarray_decode)(uri, opts)
+
+
+def decode_batches(uri: str, opts: IngestOptions, schema, tz: str, ranges: Ranges = Ranges()):
+    """:func:`decode_auto` → the ``RecordBatch``es of its rows in
+    ``schema`` that ``ranges`` keeps (``cells.batches``; the xarray
+    branch's frame, already sliced by ``opts``, through
+    ``cells.frame_batch``). ``data_uri`` is ``uri`` and
+    ``data_first_step`` the earliest time kept."""
+    out = decode_auto(uri, opts)
+    if isinstance(out, pd.DataFrame):
+        first = out["time"].min() if "time" in out.columns and len(out) else None
+        return [frame_batch(out, schema, tz, {"data_uri": uri, "data_first_step": first})]
+    cubes = [mask(c, ranges, tz) for c in out]
+    times = [c.times for c in cubes if c.times is not None and len(c.times) * len(c.lats) * len(c.lons)]
+    first = min(t.min() for t in times) if times else None
+    return batches(cubes, schema, tz, constants={"data_uri": uri, "data_first_step": first})
 
 
 ROW_SCHEMA = T.StructType(
@@ -251,12 +264,13 @@ def ingest(
 
     The paths spread over the tasks so each task decodes whole files
     (the unit of I/O parallelism, exactly one shuffle-free stage) with
-    :func:`decode_auto`; decode emits Arrow batches via mapInPandas.
-    The area and time options apply as they do in
+    :func:`decode_batches`, whose Arrow batches ``mapInArrow`` hands to
+    Spark. The area and time options apply as they do in
     ``opener.open_dataset``: masked in the task, before
     ``data_first_step`` is taken, with ``filter_cells`` as the
-    residual. At cluster scale the same plan applies with thousands of
-    files per job.
+    residual; a column of ``schema`` the file lacks (a GeoTIFF's
+    ``time``) is null. At cluster scale the same plan applies with
+    thousands of files per job.
     """
     opts = opts or IngestOptions()
     time_range = lat_range = lon_range = None
@@ -265,27 +279,12 @@ def ingest(
     if opts.area is not None:
         n, w, s, e = opts.area
         lat_range, lon_range = (s, n), (w, e)
-    ranges = (time_range, lat_range, lon_range)
-    data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
-    timestamps = [
-        f.name for f in schema.fields
-        if f.name in data_cols and isinstance(f.dataType, T.TimestampType)
-    ]
-
-    def run(uri: str) -> pd.DataFrame:
-        rows = mask_cells(decode_auto(uri, opts), *ranges)
-        # an axis the file lacks (a GeoTIFF's time) is a typed null:
-        # Arrow casts no all-NaN float column to a timestamp
-        out = rows.reindex(columns=data_cols).astype(
-            {c: "datetime64[ns]" for c in timestamps if c not in rows.columns}
-        )
-        out["data_uri"] = uri
-        has_time = "time" in rows.columns  # a GeoTIFF has no time axis
-        out["data_first_step"] = rows["time"].min() if has_time and len(rows) else pd.NaT
-        return out
-
-    rows = filter_cells(map_files(spark, uris, run, schema), *ranges)
-    return select_variables(rows, opts.variables)
+    ranges = Ranges.of(time_range, lat_range, lon_range)
+    rows = map_files(
+        spark, uris,
+        lambda uri, arrow_schema, tz: decode_batches(uri, opts, arrow_schema, tz, ranges), schema,
+    )
+    return select_variables(filter_cells(rows, time_range, lat_range, lon_range), opts.variables)
 
 
 def with_system_columns(df: DataFrame, import_time: str | None = None) -> DataFrame:

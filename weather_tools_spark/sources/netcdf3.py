@@ -47,6 +47,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from .cells import Cube, frame
+
 _MAGIC1 = b"CDF\x01"
 _MAGIC2 = b"CDF\x02"
 _MAGIC5 = b"CDF\x05"
@@ -408,32 +410,33 @@ def _cf_unpack(arr: np.ndarray, atts: dict) -> np.ndarray:
     return out
 
 
-def nc3_decode(path: str, opts) -> pd.DataFrame:
-    """Hypercube-ingest decoder over classic NetCDF bytes — the
-    ``FORMATS["netcdf3"]`` decoder (same output contract as the xarray
-    branch: long-format time/latitude/longitude + variable columns).
-    Time decoded from the CF ``units`` epoch attribute (any
-    "<unit> since <epoch>" spelling); packed variables unpacked via
-    scale_factor/add_offset with fill sentinels → NaN.
+def nc3_cubes(path: str, opts) -> list[Cube]:
+    """Classic NetCDF bytes → one :class:`cells.Cube` over the file's
+    time, latitude and longitude axes. Time decodes from the CF
+    ``units`` epoch attribute (any "<unit> since <epoch>" spelling);
+    packed variables unpack through scale_factor/add_offset with fill
+    sentinels → NaN.
 
     ``opts.variables`` is the projection pushdown (the reference's
     ``_only_target_vars``, weather_mv/loader_pipeline/util.py:159-191):
-    data variables outside the set are never CF-unpacked or
-    materialized as columns — coordinates always decode. Every cell
-    decodes: ranges apply to the decoded frame
-    (``zarr_scan.mask_cells``)."""
-    want = None
+    data variables outside the set are never CF-unpacked; coordinates
+    always decode, and so does every cell (ranges apply in
+    ``cells.batches``)."""
     variables = getattr(opts, "variables", None) if opts is not None else None
-    if variables:
-        want = set(variables)
+    want = set(variables) if variables else None
     coords, data, attrs = read_netcdf3(path)
-    tt, la, lo = np.meshgrid(*_axes(coords, attrs), indexing="ij")
-    out = {"time": tt.ravel(), "latitude": la.ravel(), "longitude": lo.ravel()}
-    for v, arr in data.items():
-        if want is not None and v not in want:
-            continue  # projected out — skip the unpack copy entirely
-        out[v] = _cf_unpack(arr, attrs.get(v, {})).ravel()
-    return pd.DataFrame(out)
+    values = {
+        v: _cf_unpack(arr, attrs.get(v, {}))
+        for v, arr in data.items()
+        if want is None or v in want  # projected out: skip the unpack copy entirely
+    }
+    return [Cube(*_axes(coords, attrs), values)]
+
+
+def nc3_decode(path: str, opts) -> pd.DataFrame:
+    """:func:`nc3_cubes` as long-format rows (time, latitude,
+    longitude + variable columns), the contract of the xarray branch."""
+    return frame(nc3_cubes(path, opts))
 
 
 def _axes(coords: dict, attrs: dict) -> tuple:
@@ -447,14 +450,13 @@ def _axes(coords: dict, attrs: dict) -> tuple:
     )
 
 
-def nc3_axes(path: str, opts=None) -> list[tuple]:
-    """The coordinates of the rows :func:`nc3_decode` yields (every
-    cell of ``time × latitude × longitude``, whatever ``opts``
-    projects), read from the header and the three coordinate variables
-    alone: one ``(times, lats, lons, paired=False)`` block."""
+def nc3_axes(path: str, opts=None) -> list[Cube]:
+    """The axes of :func:`nc3_cubes` (whatever ``opts`` projects), read
+    from the header and the three coordinate variables alone: one cube
+    without values."""
     with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as buf:
         coords, _, attrs = _parse(buf, want={"time", "latitude", "longitude"})
-    return [(*_axes(coords, attrs), False)]
+    return [Cube(*_axes(coords, attrs), {})]
 
 
 def write_netcdf3_partitioned(rows, out_dir: str, variables: list[str]) -> int:

@@ -26,12 +26,13 @@ Single-file formats probe only the file HEADER on the driver (variable
 names → output schema; the reference's metadata open; and, for the Zarr
 sink's template, :func:`dataset_axes` — coordinates) and decode on
 executors through :func:`map_files` — whole files spread over the
-tasks with no exchange before the decode, the plan the Zarr chunk
-scan, ``hypercube.ingest`` and the file splitter share. A decoder only
-decodes and projects (``opts.variables``); range arguments meet the
-decoded cells in ``zarr_scan.mask_cells``, inside the task before the
-Arrow hand-off, and ``zarr_scan.filter_cells`` stays the exact
-residual, on every read path. The file sinks share the write side:
+tasks with no exchange before one ``mapInArrow``, the plan the Zarr
+chunk scan, ``hypercube.ingest``, both streaming ingests and the file
+splitter share. A decoder only decodes and projects
+(``opts.variables``) into grid cubes; ``cells.batches`` masks their
+axes to the range arguments inside the task and builds the Arrow rows,
+and ``cells.filter_cells`` stays the exact residual, on every read
+path. The file sinks share the write side:
 :func:`grid_cubes` grids rows into NaN-filled cubes and
 :func:`write_buckets` serializes one whole file per time bucket on
 executors. The returned frame is plain long-format rows, so the xql
@@ -51,13 +52,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .geotiff import gtiff_decode, is_tiff
-from .grib1 import grib1_axes, grib1_decode, is_grib1, list_params1
-from .grib2 import grib2_axes, grib2_decode, is_grib2, list_params
-from .hdf5 import is_hdf5, list_variables_h5, nc4_axes, nc4_decode
-from .netcdf3 import is_netcdf3, list_variables, nc3_axes, nc3_decode
-from .zarr_scan import filter_cells, mask_axes, mask_cells
+from .cells import Cube, Ranges, batches, filter_cells, mask_axes
+from .geotiff import gtiff_cubes, is_tiff
+from .grib1 import grib1_axes, grib1_cubes, is_grib1, list_params1
+from .grib2 import grib2_axes, grib2_cubes, is_grib2, list_params
+from .hdf5 import is_hdf5, list_variables_h5, nc4_axes, nc4_cubes
+from .netcdf3 import is_netcdf3, list_variables, nc3_axes, nc3_cubes
 from .zarr_v2 import ZMETADATA
 
 
@@ -65,23 +68,23 @@ class Format(NamedTuple):
     """How one single-file weather format is recognised and read."""
 
     probe: Callable[[str], bool]  # magic bytes of a local path
-    decode: Callable  # (path, opts) → long-format pandas rows
+    decode: Callable  # (path, opts) → [cells.Cube]
     variables: Callable[[str], list[str]]  # data variables, header only
-    # (path, opts) → [(times, lats, lons, paired)] coordinate blocks of
-    # the rows decode yields, from headers (zarr_scan.mask_axes)
+    # (path, opts) → the cubes decode yields without their values, from
+    # headers (cells.mask_axes)
     axes: Callable | None
     coords: tuple[str, ...] = ("time", "latitude", "longitude")
 
 
 # dict order is the probe order of detect()
 FORMATS: dict[str, Format] = {
-    "netcdf3": Format(is_netcdf3, nc3_decode, list_variables, nc3_axes),
-    "netcdf4": Format(is_hdf5, nc4_decode, list_variables_h5, nc4_axes),
-    "grib2": Format(is_grib2, grib2_decode, list_params, grib2_axes),
-    "grib1": Format(is_grib1, grib1_decode, list_params1, grib1_axes),
+    "netcdf3": Format(is_netcdf3, nc3_cubes, list_variables, nc3_axes),
+    "netcdf4": Format(is_hdf5, nc4_cubes, list_variables_h5, nc4_axes),
+    "grib2": Format(is_grib2, grib2_cubes, list_params, grib2_axes),
+    "grib1": Format(is_grib1, grib1_cubes, list_params1, grib1_axes),
     # single value band and no time axis: nothing variable-level to prune
     "geotiff": Format(
-        is_tiff, gtiff_decode, lambda path: ["value"], None, ("latitude", "longitude")
+        is_tiff, gtiff_cubes, lambda path: ["value"], None, ("latitude", "longitude")
     ),
 }
 
@@ -90,7 +93,8 @@ def _decoder_for(
     kind: str, first: str, variables: list[str] | None = None, strict: bool = True
 ):
     """(decode_one, columns) for a single-file format — the pairing
-    :func:`open_dataset` and ``format("weather")`` share.
+    :func:`open_dataset` and ``format("weather")`` share;
+    ``decode_one(path)`` returns the file's cubes.
 
     ``variables`` is the projection pushdown: when given, only those
     data variables decode (``opts.variables`` on every decoder —
@@ -99,7 +103,7 @@ def _decoder_for(
     that subset. Unknown names raise when ``strict`` (the driver-side
     schema probe — a typo should fail the query); decode tasks pass
     ``strict=False`` so a glob member missing a variable still decodes
-    (the reindex backfills NaN, same as an unprojected read)."""
+    (its column is null, as in an unprojected read)."""
     fmt, opts, cols = _projection(kind, first, variables, strict)
     return (lambda p: fmt.decode(p, opts)), cols
 
@@ -167,27 +171,33 @@ def detect(uri: str) -> str:
     )
 
 
-def long_schema(columns: list[str]) -> str:
-    """DDL of the long-format rows: ``time`` is a timestamp, every other
-    column a double."""
-    return ", ".join(f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns)
+def long_schema(columns: list[str]) -> T.StructType:
+    """Schema of the long-format rows: ``time`` is a timestamp, every
+    other column a double."""
+    return T.StructType(
+        [T.StructField(c, T.TimestampType() if c == "time" else T.DoubleType()) for c in columns]
+    )
 
 
-def map_files(spark: SparkSession, units: list, run_one, schema) -> DataFrame:
-    """The one read plan: ``run_one(unit)`` → pandas frame runs in
-    mapInPandas on executors, one whole unit (a file, or a Zarr chunk
-    key) at a time. The list rides in the task closure and a range
-    spreads its indices evenly over ``min(len(units),
+def map_files(spark: SparkSession, units: list, run_one, schema: T.StructType) -> DataFrame:
+    """The one read plan: ``run_one(unit, arrow_schema, tz)`` →
+    ``pyarrow.RecordBatch``es in ``schema`` runs in ``mapInArrow`` on
+    executors, one whole unit (a file, or a Zarr chunk key) at a time;
+    ``tz`` is this session's time zone, which ``cells.batches``
+    localizes naive times with. The list rides in the task closure and
+    a range spreads its indices evenly over ``min(len(units),
     defaultParallelism)`` partitions, none empty, so no exchange runs
     before the decode (the driver touches at most a header)."""
     k = max(1, min(len(units), spark.sparkContext.defaultParallelism))
+    arrow_schema = to_arrow_schema(schema)
+    tz = spark.conf.get("spark.sql.session.timeZone")
 
-    def gen(batches):
-        for ids in batches:
-            for i in ids["id"]:
-                yield run_one(units[i])
+    def gen(ids):
+        for b in ids:
+            for i in b.column("id").to_pylist():
+                yield from run_one(units[i], arrow_schema, tz)
 
-    return spark.range(len(units), numPartitions=k).mapInPandas(gen, schema)
+    return spark.range(len(units), numPartitions=k).mapInArrow(gen, schema)
 
 
 def grid_cubes(pdf: pd.DataFrame, variables: list[str]):
@@ -273,7 +283,7 @@ def dataset_axes(
     metadata and coordinate arrays) — no data section is read and no
     job runs. It is the template of the Zarr sink, the reference's
     metadata open. Each file's grids are masked by
-    ``zarr_scan.mask_axes`` (the range rule of every read path), and
+    ``cells.mask_axes`` (the range rule of every read path), and
     unknown variables raise as they do in :func:`open_dataset`.
     Inputs without a time axis (GeoTIFF), ``ee://`` assets, whose axes
     are no header's, and a time bound that is not a plain timestamp
@@ -283,13 +293,16 @@ def dataset_axes(
     uris, kind = _resolve(uri)
     if kind == "zarr":
         meta = _zarr_meta(uri, variables)
-        blocks = [(pd.to_datetime(meta.times), meta.lats, meta.lons, False)]
+        blocks = [Cube(pd.to_datetime(meta.times), meta.lats, meta.lons, {})]
     else:
         fmt, opts, _ = _projection(kind, uris[0], variables)
         if fmt.axes is None:
             raise ValueError(f"{uri!r}: {kind} input has no time axis")
         blocks = [b for u in uris for b in fmt.axes(u, opts)]
-    masked = [mask_axes(*b, time_range, lat_range, lon_range) for b in blocks]
+    masked = [
+        mask_axes(b.times, b.lats, b.lons, b.paired, time_range, lat_range, lon_range)
+        for b in blocks
+    ]
     times, lats, lons = (
         np.unique(np.concatenate([np.array([], dtype), *(m[i] for m in masked)]))
         for i, dtype in enumerate(("datetime64[ns]", "f8", "f8"))
@@ -310,9 +323,10 @@ def open_dataset(
     """Open any supported store/file as a long-format DataFrame;
     optionally register it as a temp view for the SQL surface. Range
     arguments prune CHUNKS for zarr stores (parquet row-group-style
-    min/max pruning, on the driver), mask the decoded cells inside the
-    decode task, and apply again as ordinary filters (the exact
-    residual). Time is kept in ``[start, end)``; a ``None`` end is open.
+    min/max pruning, on the driver), mask the decoded axes inside the
+    decode task (``cells.batches``), and apply again as ordinary
+    filters (the exact residual). Time is kept in ``[start, end)``; a
+    ``None`` end is open.
 
     ``variables`` is the projection pushdown (the reference's
     ``_only_target_vars``, weather_mv/loader_pipeline/util.py:159-191):
@@ -359,13 +373,14 @@ def open_dataset(
         # the decoder pairing — projection pushdown included — is the
         # one format("weather") uses
         decode_one, cols = _decoder_for(kind, uris[0], variables)
-
-        def run_one(path: str) -> pd.DataFrame:
-            rows = decode_one(path).reindex(columns=cols)
-            return mask_cells(rows, time_range, lat_range, lon_range)
-
+        ranges = Ranges.of(time_range, lat_range, lon_range)
         df = filter_cells(
-            map_files(spark, uris, run_one, long_schema(cols)), time_range, lat_range, lon_range
+            map_files(
+                spark, uris,
+                lambda path, schema, tz: batches(decode_one(path), schema, tz, ranges),
+                long_schema(cols),
+            ),
+            time_range, lat_range, lon_range,
         )
     if view is not None:
         df.createOrReplaceTempView(view)
@@ -434,7 +449,7 @@ def stream_ingest_files(
     ``maxFilesPerTrigger`` bounds files per micro-batch. Each
     micro-batch collects its file paths and decodes the WHOLE files on
     executors through :func:`map_files` and the magic-byte dispatch
-    (hypercube.decode_auto — every :data:`FORMATS` entry, no
+    (``hypercube.decode_batches`` — every :data:`FORMATS` entry, no
     libraries), then hands the long-format rows to
     ``sink_fn(df, batch_id)`` via foreachBatch. Only the ``path``
     column is selected from the binaryFile source, so file CONTENT is
@@ -445,7 +460,7 @@ def stream_ingest_files(
 
     Returns the started StreamingQuery (caller awaits/stops it).
     """
-    from .hypercube import IngestOptions, decode_auto
+    from .hypercube import IngestOptions, decode_batches
 
     if source == "files":
         files = (
@@ -476,14 +491,13 @@ def stream_ingest_files(
         files = notification_uris(values)
     else:
         raise ValueError(f"unknown stream source {source!r} (files|notifications)")
-    schema = long_schema(columns)
     opts = IngestOptions()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         paths = [p[5:] if p.startswith("file:") else p for (p,) in batch_df.collect()]
         rows = map_files(
             batch_df.sparkSession, paths,
-            lambda p: decode_auto(p, opts).reindex(columns=columns), schema,
+            lambda p, schema, tz: decode_batches(p, opts, schema, tz), long_schema(columns),
         )
         sink_fn(rows, batch_id)
 

@@ -10,32 +10,30 @@ engine plans scans the same way a columnar reader plans row-groups:
 2. prune it by comparing the query's coordinate ranges against chunk
    ranges — the zarr analog of parquet row-group min/max pruning,
    SURVEY.md §4 'chunk-range pruning';
-3. spread the surviving chunk keys over ``mapInPandas`` tasks, with no
+3. spread the surviving chunk keys over ``mapInArrow`` tasks, with no
    exchange in front, that each decode whole chunks (never a partial
-   chunk) and mask them to the query's ranges.
+   chunk) into cubes and build their in-range rows
+   (``cells.batches``).
 
 The manifest is a small pandas frame built and pruned on the driver
 (``chunk_manifest`` gives it as a Spark DataFrame for the streaming
 spec files); chunks decode from real Zarr v2/v3 stores
 (``zarr_v2.zarr2_chunk_decoder``).
 
-:func:`mask_cells` (in the decode task) and :func:`filter_cells` (the
-exact residual) are the one place ranges meet decoded cells, for every
-read path: this scan, ``opener.open_dataset`` and ``hypercube.ingest``.
-The file decoders only decode and project. :func:`mask_axes` applies
-the same rule to coordinates read from file headers
-(``opener.dataset_axes``).
+The range rule lives in ``cells`` (the task-side axis mask, the
+``filter_cells`` residual); :func:`prune_chunks` applies it here to the
+chunk manifest's min/max ranges.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .cells import Ranges, _time_bounds, batches, filter_cells
 
 
 @dataclass
@@ -103,23 +101,6 @@ def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
     return spark.createDataFrame(chunk_table(meta), CHUNK_MANIFEST_SCHEMA)
 
 
-def _time_bounds(time_range: tuple[str | None, str | None] | None):
-    """``time_range`` as tz-naive pandas timestamps widened to whole
-    microseconds, for masks and pruning on pandas frames, with ``None``
-    for an open end; ``None`` when there is no range, or a bound
-    carries a zone or does not parse (time is then left to
-    :func:`filter_cells`)."""
-    if time_range is None:
-        return None
-    try:
-        lo, hi = (None if t is None else pd.Timestamp(t) for t in time_range)
-    except (TypeError, ValueError):
-        return None
-    if any(t is not None and t.tzinfo is not None for t in (lo, hi)):
-        return None
-    return (None if lo is None else lo.floor("us")), (None if hi is None else hi.ceil("us"))
-
-
 def prune_chunks(
     manifest: pd.DataFrame,
     time_range: tuple[str | None, str | None] | None = None,
@@ -142,104 +123,6 @@ def prune_chunks(
     if lon_range is not None:
         keep &= (manifest["lon_max"] >= lon_range[0]) & (manifest["lon_min"] <= lon_range[1])
     return manifest[keep]
-
-
-def in_time_range(col: str, time_range: tuple[str | None, str | None]) -> Column:
-    """``col`` in ``[start, end)`` as a Catalyst predicate, each bound
-    cast to a timestamp in the session time zone; a ``None`` end is
-    open."""
-    start, end = time_range
-    cond = F.lit(True)
-    if start is not None:
-        cond &= F.col(col) >= F.lit(start).cast("timestamp")
-    if end is not None:
-        cond &= F.col(col) < F.lit(end).cast("timestamp")
-    return cond
-
-
-def filter_cells(
-    rows: DataFrame,
-    time_range: tuple[str | None, str | None] | None = None,
-    lat_range: tuple[float, float] | None = None,
-    lon_range: tuple[float, float] | None = None,
-) -> DataFrame:
-    """The residual cell-level range filter applied after decode: time
-    in ``[start, end)`` (``None`` leaves that end open), latitude and
-    longitude within their closed ranges. Frames without a time axis
-    (GeoTIFF) ignore ``time_range``."""
-    if time_range is not None and "time" in rows.columns:
-        rows = rows.filter(in_time_range("time", time_range))
-    if lat_range is not None:
-        rows = rows.filter(F.col("latitude").between(*lat_range))
-    if lon_range is not None:
-        rows = rows.filter(F.col("longitude").between(*lon_range))
-    return rows
-
-
-def mask_cells(
-    pdf: pd.DataFrame,
-    time_range: tuple[str | None, str | None] | None = None,
-    lat_range: tuple[float, float] | None = None,
-    lon_range: tuple[float, float] | None = None,
-) -> pd.DataFrame:
-    """:func:`filter_cells` on a decoded pandas frame, run inside the
-    decode task so out-of-range cells never cross the Arrow hand-off.
-    It keeps every row ``filter_cells`` keeps (and, for a time bound
-    that is not a plain timestamp, masks no time), so ``filter_cells``
-    stays the exact residual."""
-    keep = pd.Series(True, index=pdf.index)
-    lo, hi = (_time_bounds(time_range) if "time" in pdf.columns else None) or (None, None)
-    if lo is not None:
-        keep &= pdf["time"] >= lo
-    if hi is not None:
-        keep &= pdf["time"] < hi
-    if lat_range is not None:
-        keep &= pdf["latitude"].between(*lat_range)
-    if lon_range is not None:
-        keep &= pdf["longitude"].between(*lon_range)
-    return pdf if keep.all() else pdf[keep]
-
-
-def mask_axes(
-    times,
-    lats: np.ndarray,
-    lons: np.ndarray,
-    paired: bool,
-    time_range: tuple[str | None, str | None] | None = None,
-    lat_range: tuple[float, float] | None = None,
-    lon_range: tuple[float, float] | None = None,
-) -> tuple[pd.DatetimeIndex, np.ndarray, np.ndarray]:
-    """The range rule of :func:`mask_cells` and :func:`filter_cells`
-    on a grid's coordinates instead of its cells: the time, latitude
-    and longitude values of the cells ``times × grid`` that both keep.
-    The grid is the cross product of ``lats`` and ``lons``, or, when
-    ``paired``, the points ``(lats[i], lons[i])``; a range that leaves
-    no cell leaves all three empty. Times are whole microseconds, as
-    Spark holds them. A time bound must be a plain timestamp: the
-    session time zone that would place any other is not known here."""
-    times = pd.DatetimeIndex(times).floor("us")
-    bounds = _time_bounds(time_range)
-    if time_range is not None and bounds is None:
-        raise ValueError(f"time bounds must be plain timestamps, got {time_range!r}")
-    lo, hi = bounds or (None, None)
-    keep_t = np.ones(len(times), bool)
-    if lo is not None:
-        keep_t &= times >= lo
-    if hi is not None:
-        keep_t &= times < hi
-
-    def within(values: np.ndarray, closed) -> np.ndarray:
-        return np.ones(len(values), bool) if closed is None else (
-            (values >= closed[0]) & (values <= closed[1])
-        )
-
-    lats, lons = np.asarray(lats, "f8"), np.asarray(lons, "f8")
-    keep_la, keep_lo = within(lats, lat_range), within(lons, lon_range)
-    if paired:
-        keep_la = keep_lo = keep_la & keep_lo
-    if not (keep_t.any() and keep_la.any() and keep_lo.any()):
-        return times[:0], lats[:0], lons[:0]
-    return times[keep_t], lats[keep_la], lons[keep_lo]
 
 
 def row_schema(meta: ChunkedDatasetMeta, include_uri: bool = True):
@@ -325,7 +208,11 @@ def stream_ingest(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         keys = [tuple(r) for r in batch_df.collect()]
-        sink_fn(map_files(batch_df.sparkSession, keys, decode, row_schema(meta)), batch_id)
+        rows = map_files(
+            batch_df.sparkSession, keys,
+            lambda key, schema, tz: batches(decode(key), schema, tz), row_schema(meta),
+        )
+        sink_fn(rows, batch_id)
 
     writer = specs.writeStream.foreachBatch(process).trigger(availableNow=True)
     if checkpoint_dir is not None:
@@ -360,24 +247,24 @@ def scan(
 ) -> DataFrame:
     """Pruned chunk scan → long-format rows. The chunk list is built
     and pruned on the driver, and its kept keys spread over the decode
-    tasks with no exchange (``opener.map_files``). Each task masks its
-    decoded chunks to the ranges; the residual cell-level filters are
-    applied after decode (chunks overlap range boundaries).
+    tasks with no exchange (``opener.map_files``). Each task builds its
+    chunks' in-range rows (``cells.batches``); the residual cell-level
+    filters are applied after decode.
 
-    ``include_uri=False`` drops the per-row ``data_uri`` string at the
-    DECODE, not after: the column is constant per store, and carrying
-    it through the Arrow boundary costs ~40 B/row — at a month of ERA5
-    (747M rows) that is ~30 GB of serialized strings the consumer
-    (open_dataset) previously dropped one operator later."""
+    ``include_uri=False`` leaves the per-row ``data_uri`` string out of
+    the decode's schema, not after it: the column is constant per
+    store, and carrying it through the Arrow boundary costs ~40 B/row —
+    at a month of ERA5 (747M rows) that is ~30 GB of serialized strings
+    the consumer (open_dataset) would drop one operator later."""
     from .opener import map_files
     from .zarr_v2 import zarr2_chunk_decoder
 
     kept = prune_chunks(chunk_table(meta), time_range, lat_range, lon_range)
     keys = list(kept[["uri", "t_idx", "lat_idx", "lon_idx"]].itertuples(index=False, name=None))
-    decode = zarr2_chunk_decoder(meta, include_uri=include_uri)
-
-    def run_one(key: tuple) -> pd.DataFrame:
-        return mask_cells(decode(key), time_range, lat_range, lon_range)
-
-    rows = map_files(spark, keys, run_one, row_schema(meta, include_uri=include_uri))
+    decode = zarr2_chunk_decoder(meta)
+    ranges = Ranges.of(time_range, lat_range, lon_range)
+    rows = map_files(
+        spark, keys, lambda key, schema, tz: batches(decode(key), schema, tz, ranges),
+        row_schema(meta, include_uri=include_uri),
+    )
     return filter_cells(rows, time_range, lat_range, lon_range)

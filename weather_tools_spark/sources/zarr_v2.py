@@ -20,7 +20,7 @@ value). This module implements that format directly:
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
   read (the point of ``.zmetadata`` on object stores).
 - :func:`decode_chunk` — bytes → numpy for every codec below, used by
-  :func:`zarr2_chunk_decoder` inside the pruned ``mapInPandas`` scan
+  :func:`zarr2_chunk_decoder` inside the pruned ``mapInArrow`` scan
   (``zarr_scan.scan``).
 
 Compressor support: None (raw), zlib, gzip (v3), and the blosc1
@@ -58,6 +58,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from .cells import Cube
 from .zarr_scan import ChunkedDatasetMeta, axis_positions_sql
 
 ZMETADATA = ".zmetadata"
@@ -1038,12 +1039,14 @@ def _decode_shard(buf: bytes, za: dict) -> np.ndarray:
     return out
 
 
-def zarr2_chunk_decoder(meta: ChunkedDatasetMeta, include_uri: bool = True):
-    """Chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → long rows over a
-    real Zarr v2 or v3 store at ``meta.uri`` — the chunk decoder of
-    ``zarr_scan.scan`` and ``zarr_scan.stream_ingest``. Per task: one metadata read, then
-    whole-chunk decodes; coordinates come from the (small) template
-    axes carried in the closure, values byte-exact from the store."""
+def zarr2_chunk_decoder(meta: ChunkedDatasetMeta):
+    """Chunk key ``(uri, t_idx, lat_idx, lon_idx)`` → one
+    :class:`cells.Cube` over a real Zarr v2 or v3 store at ``meta.uri``
+    (its ``data_uri`` a scalar) — the chunk decoder of
+    ``zarr_scan.scan`` and ``zarr_scan.stream_ingest``. Per task: one
+    metadata read, then whole-chunk decodes; the axes are slices of the
+    (small) template axes carried in the closure, values byte-exact
+    from the store."""
     times = pd.to_datetime(meta.times)
     lats = np.asarray(meta.lats, dtype="f8")
     lons = np.asarray(meta.lons, dtype="f8")
@@ -1051,28 +1054,15 @@ def zarr2_chunk_decoder(meta: ChunkedDatasetMeta, include_uri: bool = True):
     variables = list(meta.variables)
     md: dict[str, dict] = {}  # store → metadata, filled once per task
 
-    def decode(key: tuple) -> pd.DataFrame:
+    def decode(key: tuple) -> list[Cube]:
         uri, t_idx, lat_idx, lon_idx = key
         if uri not in md:
             md[uri] = read_store_metadata(uri)
-        t0, la0, lo0 = t_idx * ct, lat_idx * cla, lon_idx * clo
-        vt = min(ct, len(times) - t0)
-        vla = min(cla, len(lats) - la0)
-        vlo = min(clo, len(lons) - lo0)
-        tt, la, lo = np.meshgrid(
-            times[t0 : t0 + vt], lats[la0 : la0 + vla], lons[lo0 : lo0 + vlo],
-            indexing="ij",
-        )
-        out = {
-            "time": tt.ravel(),
-            "latitude": la.ravel(),
-            "longitude": lo.ravel(),
-        }
+        t, la, lo = (slice(i * c, (i + 1) * c) for i, c in ((t_idx, ct), (lat_idx, cla), (lon_idx, clo)))
+        cube = Cube(times[t], lats[la], lons[lo], {}, scalars={"data_uri": uri})
         for v in variables:
             arr = decode_chunk(uri, v, md[uri][f"{v}/.zarray"], (t_idx, lat_idx, lon_idx))
-            out[v] = arr[:vt, :vla, :vlo].ravel()
-        if include_uri:
-            out["data_uri"] = uri
-        return pd.DataFrame(out)
+            cube.values[v] = arr[: len(cube.times), : len(cube.lats), : len(cube.lons)]
+        return [cube]
 
     return decode
